@@ -123,13 +123,13 @@ final class GraftCatalog(val warehouse: String) {
 
   def get(name: String): TableSchema = manifest(name).toSchema
 
-  /** Reserve `n` ingest sequence numbers; returns the first. The sequence
-    * orders overwrite-mode duplicates (newest wins), standing in for the
-    * reference's WAL sequence. */
   /** The next unreserved ingest sequence (no reservation) — a write
     * high-water mark for incremental consumers. */
   def peekSeq(name: String): Long = synchronized { manifest(name).nextSeq }
 
+  /** Reserve `n` ingest sequence numbers; returns the first. The sequence
+    * orders overwrite-mode duplicates (newest wins), standing in for the
+    * reference's WAL sequence. */
   def reserveSeq(name: String, n: Long): Long = synchronized {
     val m = manifest(name)
     writeManifest(name, m.copy(nextSeq = m.nextSeq + n))
@@ -148,11 +148,12 @@ final class GraftCatalog(val warehouse: String) {
       .copy(dataGen = m.dataGen, compactedSeq = m.compactedSeq))
   }
 
-  /** Idempotent auto-add for the ingest fast paths (gRPC Write, line
-    * protocol, OpenTSDB put): columns already present — added by a racing
-    * writer between the caller's schema read and this call — are skipped
-    * under the catalog lock instead of failing the whole write. Returns
-    * the columns actually added. */
+  /** Idempotent auto-add for the engine's shared schema-inferring append
+    * (`TsdbEngine.appendInferring`, which every ingest protocol calls):
+    * columns already present — added by a racing writer between the
+    * caller's schema read and this call — are skipped under the catalog
+    * lock instead of failing the whole write. Returns the columns actually
+    * added. */
   def alterAddColumnsIfAbsent(
       name: String, cols: Seq[ColumnSpec]): Seq[ColumnSpec] = synchronized {
     val known = manifest(name).toSchema.columns.map(_.name).toSet

@@ -405,13 +405,7 @@ final class TsdbEngine(
     val dedupSafeToSkip =
       !catalog.needsDedup(name) && catalog.readFingerprint(name) == pre
     val deduped = s.options.updateMode match {
-      case UpdateMode.Overwrite if !dedupSafeToSkip =>
-        val pk = s.primaryKey.map(col)
-        ttled
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(pk: _*).orderBy(
-              col(TableSchema.SeqColumn).desc, col(TableSchema.SubSeqColumn).desc)))
-          .filter(col("__rn") === 1)
+      case UpdateMode.Overwrite if !dedupSafeToSkip => newestPerKey(ttled, s)
       case _ => ttled
     }
     // canonical presentation order: PK columns first, generated tsid
@@ -441,17 +435,21 @@ final class TsdbEngine(
     val storage = readStorage(s)
       .filter(col(TableSchema.SeqColumn) <= asOfSeq)
     val deduped = s.options.updateMode match {
-      case UpdateMode.Overwrite =>
-        val pk = s.primaryKey.map(col)
-        storage
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(pk: _*).orderBy(
-              col(TableSchema.SeqColumn).desc, col(TableSchema.SubSeqColumn).desc)))
-          .filter(col("__rn") === 1)
+      case UpdateMode.Overwrite => newestPerKey(storage, s)
       case _ => storage
     }
     deduped.select(s.canonicalColumns.map(c => col(c.name)): _*)
   }
+
+  /** The overwrite-mode dedup rule, shared by [[read]], [[readAsOf]] and
+    * [[compact]]: per primary key, the row of the newest ingest sequence
+    * wins, and within one batch the later row (`__subseq`) wins. */
+  private def newestPerKey(df: DataFrame, s: TableSchema): DataFrame =
+    df.withColumn("__rn", row_number().over(
+        Window.partitionBy(s.primaryKey.map(col): _*).orderBy(
+          col(TableSchema.SeqColumn).desc, col(TableSchema.SubSeqColumn).desc)))
+      .filter(col("__rn") === 1)
+      .drop("__rn")
 
   private def readStorage(s: TableSchema): DataFrame = {
     val dir = catalog.dataDir(s.name)
@@ -528,6 +526,42 @@ final class TsdbEngine(
     }
   }
 
+  /** The schema-inferring write every ingest protocol shares (line
+    * protocol, OpenTSDB put, gRPC Write, InfluxQL INTO) — the reference's
+    * one auto-create/auto-add-columns path (proxy/src/write.rs:176-260).
+    * `wanted` lists the columns the writer saw (tags plus typed fields);
+    * `batch` names its columns after them, with the timestamp under
+    * `timestampKey`.
+    *
+    * A missing table is created with `timestampKey` as its timestamp key
+    * and `updateMode`. The create is synchronized and idempotent, so the
+    * loser of a create race adds its extra columns ifAbsent under the same
+    * catalog lock instead of dropping their values. An existing table
+    * keeps its own timestamp key: the batch's timestamp column is written
+    * there. The batch is then aligned to the re-read schema: every column
+    * it lacks is written as NULL, including a tag that first-flush
+    * sampling moved into the primary key. */
+  def appendInferring(
+      name: String, timestampKey: String, updateMode: UpdateMode.Value,
+      wanted: Seq[ColumnSpec], batch: DataFrame): Unit = {
+    val created = catalog.create(
+      TableSchema(name,
+        ColumnSpec(timestampKey, DatumKind.Timestamp, isNullable = false) +: wanted,
+        timestampKey, None,
+        TableOptions(raw = Map("update_mode" -> updateMode.toString.toLowerCase))),
+      ifNotExists = true)
+    if (!created) catalog.alterAddColumnsIfAbsent(name, wanted)
+    val s = catalog.get(name)
+    val have = batch.columns.toSet
+    append(name, batch.select(s.columns.map { c =>
+      val src =
+        if (c.name == s.timestampKey) col(timestampKey)
+        else if (c.name != timestampKey && have(c.name)) col(c.name)
+        else lit(null)
+      src.cast(c.sparkType).as(c.name)
+    }: _*))
+  }
+
   /** Append a batch of user-schema rows: computes tsid + ingest sequence and
     * writes time-segmented parquet. Also the Structured Streaming
     * foreachBatch target (streaming ingest replaces the reference's WAL +
@@ -564,12 +598,9 @@ final class TsdbEngine(
     df = df.withColumn(TableSchema.SeqColumn, lit(seqBase))
       .withColumn(TableSchema.SubSeqColumn, monotonically_increasing_id())
 
-    var partCols = Seq.empty[String]
-    s.options.segmentMillis.foreach { seg =>
-      df = df.withColumn(TableSchema.SegmentColumn,
-        floor(unix_millis(col(s.timestampKey)) / seg).cast(LongType))
-      partCols :+= TableSchema.SegmentColumn
-    }
+    val (segmented, segCols) = withSegment(df, s)
+    df = segmented
+    var partCols = segCols
     // PARTITION BY KEY/HASH/RANDOM → __bucket directory partitions
     // (reference partition/rule/key.rs: hash64 % n)
     s.partitionBy.foreach { pb =>
@@ -589,6 +620,19 @@ final class TsdbEngine(
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
       .parquet(catalog.dataDir(name))
   }
+
+  /** The time layout rule, shared by [[append]] and [[compact]]: with a
+    * segment duration, a row lands in directory `__segment = floor(ts_ms /
+    * seg)`, so segment k holds [k·seg, (k+1)·seg). Returns the frame and
+    * its partition columns. */
+  private def withSegment(df: DataFrame, s: TableSchema): (DataFrame, Seq[String]) =
+    s.options.segmentMillis match {
+      case Some(seg) =>
+        (df.withColumn(TableSchema.SegmentColumn,
+          floor(unix_millis(col(s.timestampKey)) / seg).cast(LongType)),
+          Seq(TableSchema.SegmentColumn))
+      case None => (df, Nil)
+    }
 
   /** Parquet bloom filters on TAG columns — the Spark-native analogue of
     * the reference's per-SST Xor8 tag filters (sst/parquet/meta_data/
@@ -684,14 +728,7 @@ final class TsdbEngine(
     val storage = readStorage(s)
 
     var df = s.options.updateMode match {
-      case UpdateMode.Overwrite =>
-        val pk = s.primaryKey.map(col)
-        storage
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(pk: _*).orderBy(
-              col(TableSchema.SeqColumn).desc, col(TableSchema.SubSeqColumn).desc)))
-          .filter(col("__rn") === 1)
-          .drop("__rn")
+      case UpdateMode.Overwrite => newestPerKey(storage, s)
       case UpdateMode.Append => storage
     }
     // row-level TTL: segment purge above is per-directory; rows inside a
@@ -705,13 +742,10 @@ final class TsdbEngine(
     // rebuild the storage layout exactly like append: __segment recomputed
     // from the timestamp; __bucket (if partitioned) is already a column of
     // the storage scan and is reused as-is
-    var partCols = Seq.empty[String]
-    s.options.segmentMillis.foreach { seg =>
-      df = df.withColumn(TableSchema.SegmentColumn,
-        floor(unix_millis(col(s.timestampKey)) / seg).cast(LongType))
-      partCols :+= TableSchema.SegmentColumn
-    }
-    if (s.partitionBy.isDefined) partCols :+= TableSchema.BucketColumn
+    val (segmented, segCols) = withSegment(df, s)
+    df = segmented
+    val partCols =
+      if (s.partitionBy.isDefined) segCols :+ TableSchema.BucketColumn else segCols
 
     // PK-sorted rewrite: the reference's SSTs are PK-ordered, which is what
     // makes parquet row-group min/max stats prune on tag predicates; sorting
@@ -958,10 +992,6 @@ final class TsdbEngine(
     due
   }
 
-  /** Physically drop `__segment=k` directories whose whole time window is
-    * past the TTL horizon — segment k covers [k·seg, (k+1)·seg), expired
-    * when (k+1)·seg <= now - ttl (reference: table/data.rs:744 is_expired).
-    * Returns the dropped segment ids. */
   /** One maintenance tick for a steadily-ingesting table — the call a
     * `foreachBatch` sink (or a cron) makes after appends: fold pending
     * batches into the base when enough accumulated ([[maybeCompact]] —
@@ -996,6 +1026,10 @@ final class TsdbEngine(
   def importSnapshot(srcDir: String, newName: String): Unit =
     catalog.importSnapshot(srcDir, newName)
 
+  /** Physically drop `__segment=k` directories whose whole time window is
+    * past the TTL horizon — segment k covers [k·seg, (k+1)·seg), expired
+    * when (k+1)·seg <= now - ttl (reference: table/data.rs:744 is_expired).
+    * Returns the dropped segment ids. */
   def purgeExpiredSegments(name: String, nowMs: Long = System.currentTimeMillis()): Seq[Long] = withTableLock(name) {
     val s = catalog.get(name)
     (s.options.ttlMillis.filter(_ => s.options.enableTtl), s.options.segmentMillis) match {

@@ -104,8 +104,6 @@ object TDigestSketch {
       pending.clear()
     }
 
-    def totalWeight: Long = { compress(); weights.sum }
-
     /** Standard t-digest quantile interpolation: each centroid's mass is
       * centered at its mean; linear between adjacent centers, anchored at
       * the tracked min/max at the extremes. */

@@ -371,16 +371,18 @@ object InfluxQL {
     written
   }
 
-  /** INTO materialization: auto-create the target (time key; the select's
-    * GROUP BY tags become TAG columns; everything else a typed field) and
-    * append through the engine write path. Overwrite update-mode makes
-    * re-running the same INTO idempotent (newest sequence wins per
-    * (time, tags) — the continuous-query re-materialization semantic).
-    * Returns the InfluxDB-style summary row (epoch-0 time, rows written). */
+  /** INTO materialization through the engine's shared schema-inferring
+    * append ([[TsdbEngine.appendInferring]]): a missing target is created
+    * (time key; the select's GROUP BY tags become TAG columns; everything
+    * else a typed field), and columns an existing target lacks are added.
+    * Overwrite update-mode makes re-running the same INTO idempotent
+    * (newest sequence wins per (time, tags) — the continuous-query
+    * re-materialization semantic). Returns the InfluxDB-style summary row
+    * (epoch-0 time, rows written). */
   private def writeInto(engine: TsdbEngine, target: String,
       result: DataFrame, stmt: SelectStmt): DataFrame = {
     import org.apache.spark.sql.types._
-    import graft.model.{ColumnSpec, DatumKind, TableOptions, TableSchema}
+    import graft.model.{ColumnSpec, DatumKind, UpdateMode}
     val spark = result.sparkSession
     import spark.implicits._
     // tag-only grouped selects carry no time column — InfluxDB stamps 0
@@ -395,21 +397,17 @@ object InfluxQL {
       case StringType         => DatumKind.String
       case _                  => DatumKind.Double
     }
-    val cols = ColumnSpec("time", DatumKind.Timestamp, isNullable = false) +:
-      withTime.schema.fields.filter(_.name != "time").map { f =>
-        // GROUP BY * reaches here unexpanded — its group keys are exactly
-        // the string columns of the lowered frame
-        ColumnSpec(f.name, kindOf(f.dataType),
-          isTag = stmt.groupTags.contains(f.name) ||
-            (stmt.groupTags.contains("*") && f.dataType == StringType))
-      }.toSeq
-    engine.catalog.create(
-      TableSchema(target, cols, "time", None,
-        TableOptions(raw = Map("update_mode" -> "overwrite"))),
-      ifNotExists = true)
+    val wanted = withTime.schema.fields.filter(_.name != "time").map { f =>
+      // GROUP BY * reaches here unexpanded — its group keys are exactly
+      // the string columns of the lowered frame
+      ColumnSpec(f.name, kindOf(f.dataType),
+        isTag = stmt.groupTags.contains(f.name) ||
+          (stmt.groupTags.contains("*") && f.dataType == StringType))
+    }.toSeq
     val pinned = withTime.cache()
     val n = pinned.count()
-    engine.append(target, pinned.select(cols.map(c => col(c.name)): _*))
+    engine.appendInferring(target, "time", UpdateMode.Overwrite, wanted,
+      pinned.select(col("time") +: wanted.map(c => col(c.name)): _*))
     pinned.unpersist(false)
     Seq((new java.sql.Timestamp(0L), n)).toDF("time", "written")
   }

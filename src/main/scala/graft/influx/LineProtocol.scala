@@ -1,7 +1,7 @@
 package graft.influx
 
 import graft.engine.TsdbEngine
-import graft.model.{ColumnSpec, DatumKind, TableOptions, TableSchema}
+import graft.model.{ColumnSpec, DatumKind, UpdateMode}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -108,47 +108,28 @@ object LineProtocol {
         case _         => DatumKind.Double
       }
       // influx writers vary field sets per point: unseen tags/fields
-      // auto-ADD (the reference's write-path auto-add-columns,
-      // proxy/src/write.rs:176-260). Race-safe ensure-schema: synchronized
-      // idempotent create, then ifAbsent add — a writer that loses the
-      // create race still lands its extra columns (GrpcServer.doWrite
-      // shape).
+      // auto-ADD through the engine's shared schema-inferring append
       val wantedCols =
         tagKeys.map(k => ColumnSpec(k, DatumKind.String, isTag = true)) ++
         fieldNames.map(f => ColumnSpec(f, kindOf(fieldTypes(f))))
-      val created = engine.catalog.create(
-        TableSchema(m,
-          ColumnSpec("time", DatumKind.Timestamp, isNullable = false) +: wantedCols,
-          "time", None,
-          TableOptions(raw = Map("update_mode" -> "overwrite"))),
-        ifNotExists = true)
-      if (!created) engine.catalog.alterAddColumnsIfAbsent(m, wantedCols)
-
-      val forM = parsed.filter(_.measurement == m)
-      val rowsDf = forM.map { p =>
+      val rowsDf = parsed.filter(_.measurement == m).map { p =>
         val tagMap = p.tags.toMap
         val fMap = p.fields.map(f => f._1 -> f._3).toMap
         (p.tsNanos, tagKeys.map(tagMap.get), fieldNames.map(fMap.get))
       }.toDF("_ns", "_tags", "_fields")
-
-      val schema = engine.catalog.get(m)
-      val present: Map[String, org.apache.spark.sql.Column] =
-        Map(schema.timestampKey -> expr("timestamp_micros(_ns div 1000)")) ++
-        tagKeys.zipWithIndex.map { case (k, i) => k -> col("_tags")(i) } ++
+      val batch = rowsDf.select(
+        expr("timestamp_micros(_ns div 1000)").as("time") +:
+        (tagKeys.zipWithIndex.map { case (k, i) => col("_tags")(i).as(k) } ++
         fieldNames.zipWithIndex.map { case (f, i) =>
           val c = col("_fields")(i)
-          f -> (fieldTypes(f) match {
+          (fieldTypes(f) match {
             case "int64"   => c.cast(LongType)
             case "string"  => c
             case "boolean" => c === "t"
             case _         => c.cast(DoubleType)
-          })
-        }
-      // align to the full table schema: columns this batch lacks are null
-      val batch = rowsDf.select(schema.columns.map { c =>
-        present.getOrElse(c.name, lit(null)).cast(c.sparkType).as(c.name)
-      }: _*)
-      engine.append(m, batch)
+          }).as(f)
+        }): _*)
+      engine.appendInferring(m, "time", UpdateMode.Overwrite, wantedCols, batch)
       m -> counts(m)
     }
   }

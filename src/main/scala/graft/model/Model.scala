@@ -235,9 +235,6 @@ final case class TableSchema(
       columns.filterNot(c => declaredPrimaryKey.contains(c.name))
   }
 
-  /** User-visible schema (without internal columns). */
-  def toStruct: StructType = StructType(columns.map(_.toStructField))
-
   /** On-disk schema: user columns + tsid (when implicit PK) + ingest seq. */
   def storageStruct: StructType = {
     val base = columns.map(_.toStructField)

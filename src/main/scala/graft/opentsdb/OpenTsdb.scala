@@ -1,10 +1,9 @@
 package graft.opentsdb
 
 import graft.engine.TsdbEngine
-import graft.model.{ColumnSpec, DatumKind, TableOptions, TableSchema}
+import graft.model.{ColumnSpec, DatumKind, UpdateMode}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 import graft.promql.PromQL.SeriesTable
 
 /** OpenTSDB query frontend (reference: query_frontend/src/opentsdb/mod.rs).
@@ -329,7 +328,8 @@ object OpenTsdb {
     * union of tag keys → TAG string columns, the single `value` field
     * (query_frontend DEFAULT_FIELD) → double, timestamp key `timestamp`
     * (common_types/schema.rs:227). Unseen tag keys on an existing table
-    * auto-ADD like the gRPC write path (proxy/src/write.rs:176-260).
+    * auto-ADD through [[TsdbEngine.appendInferring]], the write path every
+    * ingest protocol shares (proxy/src/write.rs:176-260).
     *
     * Bodies parse distributed (map over the Dataset); only the per-metric
     * schema shape (a few strings) reaches the driver. Returns rows appended
@@ -350,30 +350,16 @@ object OpenTsdb {
       counts.keys.toSeq.sorted.map { m =>
         val tagKeys =
           tagKeysByMetric.getOrElse(m, Array.empty).map(_._2).distinct.sorted.toSeq
-        // race-safe ensure-schema (GrpcServer.doWrite shape): idempotent
-        // create, then ifAbsent add for tags unseen by the create winner
         val wantedCols =
           tagKeys.map(k => ColumnSpec(k, DatumKind.String, isTag = true)) :+
           ColumnSpec("value", DatumKind.Double)
-        val created = engine.catalog.create(
-          TableSchema(m,
-            ColumnSpec("timestamp", DatumKind.Timestamp, isNullable = false) +: wantedCols,
-            "timestamp", None,
-            TableOptions(raw = Map("update_mode" -> "overwrite"))),
-          ifNotExists = true)
-        if (!created) engine.catalog.alterAddColumnsIfAbsent(m, wantedCols)
-
-        val schema = engine.catalog.get(m)
-        val rowsDf = points.filter(_.metric == m)
+        val batch = points.filter(_.metric == m)
           .map(p => (p.timestampMs, tagKeys.map(k => p.tags.get(k)), p.value))
           .toDF("_ms", "_tags", "_value")
-        val present: Map[String, Column] =
-          Map(schema.timestampKey -> expr("timestamp_micros(_ms * 1000)"),
-              "value" -> col("_value").cast(DoubleType)) ++
-          tagKeys.zipWithIndex.map { case (k, i) => k -> col("_tags")(i) }
-        val batch = rowsDf.select(schema.columns.map(c =>
-          present.getOrElse(c.name, lit(null)).cast(c.sparkType).as(c.name)): _*)
-        engine.append(m, batch)
+          .select(expr("timestamp_micros(_ms * 1000)").as("timestamp") +:
+            col("_value").as("value") +:
+            tagKeys.zipWithIndex.map { case (k, i) => col("_tags")(i).as(k) }: _*)
+        engine.appendInferring(m, "timestamp", UpdateMode.Overwrite, wantedCols, batch)
         m -> counts(m)
       }.toMap
     } finally points.unpersist()

@@ -35,10 +35,6 @@ object Pii {
   def ipv4Count(text: Column): Column = regexp_count(text, lit(Ipv4Re))
   def phoneCount(text: Column): Column = regexp_count(text, lit(PhoneRe))
 
-  /** Total PII hits across all classes (counted pre-redaction). */
-  def piiCount(text: Column): Column =
-    emailCount(text) + ipv4Count(text) + phoneCount(text)
-
   /** k-anonymity / l-diversity release audit (Sweeney 2002; Machanavajjhala
     * et al. 2007): group the corpus by its quasi-identifier columns and
     * flag every group that re-identifies (size < k) or lacks sensitive

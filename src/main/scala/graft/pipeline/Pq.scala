@@ -138,23 +138,6 @@ object Pq {
     GraftBridge.col(AdcScore(GraftBridge.expr(codes), table, ksub))
   }
 
-  /** Single-shot PQ top-k: train, encode, ADC-score, take k. Rows-only
-    * demo entry — for repeated queries persist (id, codes) once and reuse
-    * [[adcColumn]] per query. */
-  def pqTopK(
-      embDf: DataFrame, idCol: String, embCol: String,
-      query: Array[Double], k: Int,
-      m: Int = 8, ksub: Int = 32, iters: Int = 2, seed: Long = 42L,
-      maxTrain: Int = 20000): DataFrame = {
-    val books = train(embDf, idCol, embCol, m, ksub, iters, seed, maxTrain)
-    embDf
-      .select(col(idCol), encodeColumn(col(embCol), books, m, ksub).as("__codes"))
-      .select(col(idCol),
-        round(adcColumn(col("__codes"), books, query, m, ksub), 4).as("adc_cosine"))
-      .orderBy(col("adc_cosine").desc, col(idCol))
-      .limit(k)
-  }
-
   /** Deployment path: ADC over-fetches `k * refine` candidate ids from the
     * codes (cheap, compressed scan), then ONLY those rows are exact-cosine
     * re-ranked against the float vectors. Output schema matches
@@ -184,14 +167,6 @@ object Pq {
     val v = transform(emb, x => x.cast("double"))
     val n = sqrt(aggregate(v, lit(0.0), (acc, x) => acc + x * x))
     transform(v, x => when(n === 0d, x).otherwise(x / n))
-  }
-
-  private[pipeline] def l2sq(a: Array[Double], b: ArrayData, off: Int): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) {
-      val d = a(i) - b.getDouble(off + i); s += d * d; i += 1
-    }
-    s
   }
 }
 

@@ -40,8 +40,6 @@ import org.apache.spark.sql.functions._
   */
 object SubstringDedup {
 
-  private val dupSpanCols = Seq("span_start", "span_end", "span_tokens")
-
   /** Engine-portable shingle hash: md5 of the space-joined k tokens,
     * first 15 hex digits as an integer — DuckDB replays it as
     * `('0x' || substr(md5(g), 1, 15))::BIGINT` (the [[Winnow]] scheme). */

@@ -30,11 +30,6 @@ object TextAnalysis {
     length(alpha).cast("double") / length(text)
   }
 
-  /** Mean token length in characters. */
-  def meanTokenLen(text: Column): Column =
-    aggregate(tokens(text), lit(0L), (acc, t) => acc + length(t))
-      .cast("double") / tokenCount(text)
-
   // Small per-language stopword profiles (public, standard lists).
   private val stopwords: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "a", "and", "of", "to", "in", "is", "it", "that", "for",
@@ -45,13 +40,6 @@ object TextAnalysis {
       "que", "qui", "dans", "pour", "est", "au", "avec", "sur", "ce", "pas"),
     "de" -> Seq("der", "die", "das", "und", "in", "den", "von", "zu", "mit",
       "ist", "des", "im", "ein", "eine", "auf", "für", "als", "auch", "es", "an"))
-
-  /** Fraction of tokens that are stopwords of `lang`. */
-  def stopwordRatio(text: Column, lang: String): Column = {
-    val stops = array(stopwords(lang).map(lit): _*)
-    val toks = tokens(lower(text))
-    size(filter(toks, t => array_contains(stops, t))).cast("double") / size(toks)
-  }
 
   /** Fraction of characters in the CJK unified ideograph range. */
   def cjkRatio(text: Column): Column = {

@@ -2,7 +2,7 @@ package graft.server
 
 import graft.engine.TsdbEngine
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException, IOException}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.Socket
 import scala.collection.mutable
 
 /** gRPC storage service for the engine — the Spark twin of the reference's
@@ -64,30 +64,13 @@ import scala.collection.mutable
 final class GraftGrpcServer(
     engine: TsdbEngine, port: Int = 0, streamBatchRows: Int = 4096) {
 
-  private val server = new ServerSocket(port, 16, InetAddress.getByName("127.0.0.1"))
-  @volatile private var running = true
-  private val pool = java.util.concurrent.Executors.newCachedThreadPool()
+  private val loop = new AcceptLoop(port, serve)
 
-  def boundPort: Int = server.getLocalPort
+  def boundPort: Int = loop.boundPort
 
-  def start(): GraftGrpcServer = {
-    pool.submit(new Runnable {
-      def run(): Unit = while (running) {
-        try {
-          val s = server.accept()
-          pool.submit(new Runnable { def run(): Unit = serve(s) })
-        } catch { case _: IOException => () }
-      }
-    })
-    this
-  }
+  def start(): GraftGrpcServer = { loop.start(); this }
 
-  def stop(): Unit = {
-    running = false
-    try server.close() catch { case _: IOException => () }
-    pool.shutdownNow()
-    ()
-  }
+  def stop(): Unit = loop.stop()
 
   // --------------------------------------------------------------- HTTP/2
 
@@ -443,8 +426,8 @@ final class GraftGrpcServer(
   /** returns the success count for one WriteRequest */
   private def doWrite(req: Pb.WriteRequest): Long = {
     engine.limiter.checkInsertRule() // AnyInsert brake (protocol entry)
-    import graft.model.{ColumnSpec, DatumKind, TableOptions, TableSchema}
-    import org.apache.spark.sql.functions.{col, expr, lit}
+    import graft.model.{ColumnSpec, DatumKind, UpdateMode}
+    import org.apache.spark.sql.functions.{col, expr}
     val spark = engine.spark
     var success = 0L
     req.tables.foreach { t =>
@@ -459,23 +442,9 @@ final class GraftGrpcServer(
             case _                                => DatumKind.Double
           })
       }.toMap
-      // Concurrency-safe ensure-schema: create is synchronized+idempotent
-      // (the loser of a create race returns false instead of clobbering),
-      // and the follow-up add is ifAbsent under the same catalog lock — so
-      // a writer that raced past `exists` with a DIFFERENT column set
-      // still lands its columns instead of silently dropping their values
-      // (the old check-then-act did exactly that).
       val wanted =
         t.tagNames.map(k => ColumnSpec(k, DatumKind.String, isTag = true)) ++
         t.fieldNames.map(f => ColumnSpec(f, fieldKind(f)))
-      val created = engine.catalog.create(
-        TableSchema(t.table,
-          ColumnSpec("timestamp", DatumKind.Timestamp, isNullable = false) +: wanted,
-          "timestamp", None,
-          TableOptions(raw = Map("update_mode" -> "append"))),
-        ifNotExists = true)
-      if (!created) engine.catalog.alterAddColumnsIfAbsent(t.table, wanted)
-      val schema = engine.catalog.get(t.table)
       // rows: (ts_ms, tag values by name, field values by name)
       val rows: Seq[(Long, Map[String, Any])] = t.entries.flatMap { e =>
         val tagVals: Map[String, Any] = e.tags.map(tag =>
@@ -488,18 +457,15 @@ final class GraftGrpcServer(
       }
       if (rows.nonEmpty) {
         import spark.implicits._
-        val dataCols = schema.columns.filter(_.name != schema.timestampKey)
-        val tuples = rows.map { case (ms, vals) =>
-          (ms, dataCols.map(c => Option(vals.getOrElse(c.name, null))
-            .map(_.toString).orNull))
-        }
-        val raw = tuples.toDF("_ms", "_vals")
-        val batch = raw.select(schema.columns.map { c =>
-          if (c.name == schema.timestampKey) expr("timestamp_micros(_ms * 1000)").as(c.name)
-          else col("_vals")(dataCols.indexWhere(_.name == c.name))
-            .cast(c.sparkType).as(c.name)
-        }: _*)
-        engine.append(t.table, batch)
+        // values travel as strings; the shared append casts each to its
+        // table column's type
+        val names = wanted.map(_.name).distinct
+        val batch = rows.map { case (ms, vals) =>
+          (ms, names.map(n => Option(vals.getOrElse(n, null)).map(_.toString).orNull))
+        }.toDF("_ms", "_vals").select(
+          expr("timestamp_micros(_ms * 1000)").as("timestamp") +:
+          names.indices.map(i => col("_vals")(i).as(names(i))): _*)
+        engine.appendInferring(t.table, "timestamp", UpdateMode.Append, wanted, batch)
         success += rows.length
       }
     }

@@ -2,7 +2,7 @@ package graft.server
 
 import graft.engine.TsdbEngine
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, IOException}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** MySQL wire-protocol front end for the engine — the Spark twin of the
@@ -35,30 +35,13 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 final class GraftMysqlServer(engine: TsdbEngine, port: Int = 0) {
 
-  private val server = new ServerSocket(port, 16, InetAddress.getByName("127.0.0.1"))
-  @volatile private var running = true
-  private val pool = java.util.concurrent.Executors.newCachedThreadPool()
+  private val loop = new AcceptLoop(port, serve)
 
-  def boundPort: Int = server.getLocalPort
+  def boundPort: Int = loop.boundPort
 
-  def start(): GraftMysqlServer = {
-    pool.submit(new Runnable {
-      def run(): Unit = while (running) {
-        try {
-          val s = server.accept()
-          pool.submit(new Runnable { def run(): Unit = serve(s) })
-        } catch { case _: IOException => () }
-      }
-    })
-    this
-  }
+  def start(): GraftMysqlServer = { loop.start(); this }
 
-  def stop(): Unit = {
-    running = false
-    try server.close() catch { case _: IOException => () }
-    pool.shutdownNow()
-    ()
-  }
+  def stop(): Unit = loop.stop()
 
   // --------------------------------------------------------------- framing
 

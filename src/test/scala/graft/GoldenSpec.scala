@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
 class GoldenSpec extends SparkSpec {
 
   private def engine(): TsdbEngine = new TsdbEngine(spark,
-    java.nio.file.Files.createTempDirectory("golden").toString)
+    tmpDir("golden"))
 
   private def longs(df: DataFrame): Seq[Long] =
     df.collect().map(_.getAs[Number](0).longValue()).toSeq
@@ -753,7 +753,7 @@ class GoldenSpec extends SparkSpec {
   //      while the declared column order stays put
   test("sampling-primary-key: flush re-suggests segment duration and PK") {
     val e = new TsdbEngine(spark,
-      java.nio.file.Files.createTempDirectory("golden").toString,
+      tmpDir("golden"),
       enablePkSampling = true)
     val t = "sampling_primary_key_table"
     e.execute(

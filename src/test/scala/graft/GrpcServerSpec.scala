@@ -13,11 +13,8 @@ class GrpcServerSpec extends SparkSpec {
 
   private type Client = GrpcWireClient
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("gRPC storage service: Write auto-creates, SqlQuery round-trips arrow") {
-    val engine = new TsdbEngine(spark, tmp("grpc-e2e"))
+    val engine = new TsdbEngine(spark, tmpDir("grpc-e2e"))
     val server = new GraftGrpcServer(engine).start()
     try {
       val c = new Client(server.boundPort)
@@ -107,7 +104,7 @@ class GrpcServerSpec extends SparkSpec {
   }
 
   test("gRPC streaming RPCs: StreamWrite sums batches, StreamSqlQuery chunks") {
-    val engine = new TsdbEngine(spark, tmp("grpc-stream"))
+    val engine = new TsdbEngine(spark, tmpDir("grpc-stream"))
     // streamBatchRows=4 forces multiple streamed responses on 10 rows
     val server = new GraftGrpcServer(engine, streamBatchRows = 4).start()
     try {
@@ -158,7 +155,7 @@ class GrpcServerSpec extends SparkSpec {
   }
 
   test("gRPC Route answers existing tables with the local endpoint") {
-    val engine = new TsdbEngine(spark, tmp("grpc-route"))
+    val engine = new TsdbEngine(spark, tmpDir("grpc-route"))
     val server = new GraftGrpcServer(engine).start()
     try {
       val c = new Client(server.boundPort)
@@ -177,7 +174,7 @@ class GrpcServerSpec extends SparkSpec {
   }
 
   test("gRPC PromRemoteQuery ships raw samples per series") {
-    val engine = new TsdbEngine(spark, tmp("grpc-prom"))
+    val engine = new TsdbEngine(spark, tmpDir("grpc-prom"))
     val server = new GraftGrpcServer(engine).start()
     try {
       val c = new Client(server.boundPort)
@@ -224,7 +221,7 @@ class GrpcServerSpec extends SparkSpec {
   }
 
   test("gRPC arrow payloads zstd-compress at the reference's 80 KiB bound") {
-    val engine = new TsdbEngine(spark, tmp("grpc-zstd"))
+    val engine = new TsdbEngine(spark, tmpDir("grpc-zstd"))
     val server = new GraftGrpcServer(engine).start()
     try {
       val c = new Client(server.boundPort)
@@ -261,7 +258,7 @@ class GrpcServerSpec extends SparkSpec {
     * (write AND query refused with the script's asserted error text,
     * `main.rs:139-155`) → DROP IF EXISTS round trips. */
   test("gRPC SDK golden flow: auto-create, add column, drop") {
-    val engine = new TsdbEngine(spark, tmp("grpc-sdk"))
+    val engine = new TsdbEngine(spark, tmpDir("grpc-sdk"))
     val server = new GraftGrpcServer(engine).start()
     try {
       val c = new Client(server.boundPort)
@@ -386,7 +383,7 @@ class GrpcServerSpec extends SparkSpec {
   }
 
   test("gRPC PromQuery evaluates structured selector/func/aggr exprs") {
-    val engine = new TsdbEngine(spark, tmp("grpc-promquery"))
+    val engine = new TsdbEngine(spark, tmpDir("grpc-promquery"))
     val server = new GraftGrpcServer(engine).start()
     try {
       val c = new Client(server.boundPort)
@@ -469,7 +466,7 @@ class GrpcServerSpec extends SparkSpec {
   }
 
   test("gRPC wire edges: PADDED frames parse, compressed flag refused") {
-    val engine = new TsdbEngine(spark, tmp("grpc-edges"))
+    val engine = new TsdbEngine(spark, tmpDir("grpc-edges"))
     val server = new GraftGrpcServer(engine).start()
     try {
       val c = new Client(server.boundPort)

@@ -836,9 +836,9 @@ class OperatorsSpec extends SparkSpec {
     }.toDF("id", "x", "y")
     val nFiles = 16
 
-    val zDir = java.nio.file.Files.createTempDirectory("spec-z").toString
+    val zDir = tmpDir("spec-z")
     ZOrder.write(rows, Seq("x", "y"), zDir, bits = 4, nFiles = nFiles)
-    val sDir = java.nio.file.Files.createTempDirectory("spec-s").toString
+    val sDir = tmpDir("spec-s")
     rows.repartitionByRange(nFiles, col("x")).sortWithinPartitions("x")
       .write.mode("overwrite").parquet(sDir)
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 class PartitionSpec extends SparkSpec {
 
   private def engine(): TsdbEngine = new TsdbEngine(spark,
-    java.nio.file.Files.createTempDirectory("part-test").toString)
+    tmpDir("part-test"))
 
   private def scanPartitionFilters(df: DataFrame): String = {
     df.collect() // force planning so AQE reaches its final plan

@@ -942,7 +942,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("persisted IVF index probes via partition pruning and matches brute force") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val path = tmpDir("graft-ivf")
     Ivf.buildIndex(embs, "vec_id", "embedding", path, nlist = 8)
     val q = embs.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>"))
@@ -964,7 +964,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("IVF append: frozen centroids, union visible to probes, balance report") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-add").toString
+    val path = tmpDir("graft-ivf-add")
     val half1 = embs.filter(col("vec_id") % 2 === 0)
     val half2 = embs.filter(col("vec_id") % 2 === 1)
     Ivf.buildIndex(half1, "vec_id", "embedding", path, nlist = 8)
@@ -1267,7 +1267,7 @@ class PipelineSpec extends SparkSpec {
   test("sharding: write emits one parquet file per shard, readable by shard dir") {
     import spark.implicits._
     val docs = (0L until 200L).map(i => (i, s"d $i")).toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val out = tmpDir("graft-shards")
     Sharding.write(docs, "doc_id", salt = "w", nShards = 4, outDir = out)
     (0 until 4).foreach { sh =>
       val files = new java.io.File(s"$out/shard=$sh")
@@ -1346,7 +1346,7 @@ class PipelineSpec extends SparkSpec {
   test("jsonl shard export: one file per shard, dense seq, parseable lines") {
     import spark.implicits._
     val docs = (0L until 200L).map(i => (i, s"text $i")).toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
+    val out = tmpDir("graft-jsonl")
     Export.writeJsonlShards(docs, "doc_id", salt = "j", nShards = 4, out)
     (0 until 4).foreach { sh =>
       val files = new java.io.File(s"$out/shard=$sh")
@@ -1371,8 +1371,8 @@ class PipelineSpec extends SparkSpec {
   test("webdataset tar shards: ustar round-trip, pair members, determinism") {
     import spark.implicits._
     val docs = (0L until 50L).map(i => (i, s"sample text $i")).toDF("doc_id", "text")
-    val out1 = java.nio.file.Files.createTempDirectory("graft-tar1").toString
-    val out2 = java.nio.file.Files.createTempDirectory("graft-tar2").toString
+    val out1 = tmpDir("graft-tar1")
+    val out2 = tmpDir("graft-tar2")
     Export.writeTarShards(docs, "doc_id", "text", salt = "t", nShards = 2, out1)
     Export.writeTarShards(docs, "doc_id", "text", salt = "t", nShards = 2, out2)
 
@@ -1601,7 +1601,7 @@ class PipelineSpec extends SparkSpec {
 
   test("tombstone rewrite: ids gone, clean shards byte-untouched, emptied shard dir dropped") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-tomb-spec").toString
+    val out = tmpDir("graft-tomb-spec")
     Sharding.write(docs, "doc_id", salt = "ts", nShards = 8, out)
     val before = spark.read.parquet(out)
     val beforeCount = before.count() // eager: `before` is stale post-rewrite

@@ -22,8 +22,9 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A temp dir deleted at JVM exit ([[TempDirs.create]]), so suite runs
+    * do not accumulate warehouses under the temp root. */
+  def tmpDir(prefix: String): String = TempDirs.create(prefix).toString
 
   /** Independent replay of `TextAnalysis.sampleBucket` (':split' salt,
     * first 8 md5 hex chars mod 100) via raw MessageDigest — specs compare

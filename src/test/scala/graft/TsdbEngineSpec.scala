@@ -197,7 +197,7 @@ class TsdbEngineSpec extends SparkSpec {
   test("newest-wins dedup survives many-partition earlier batches (seq encoding)") {
     import org.apache.spark.sql.functions._
     val e = new graft.engine.TsdbEngine(spark,
-      java.nio.file.Files.createTempDirectory("seq-enc").toString)
+      tmpDir("seq-enc"))
     e.execute(
       """CREATE TABLE se (host string TAG, v double, t timestamp NOT NULL,
         |  timestamp KEY(t)) ENGINE=Analytic WITH (update_mode='overwrite')""".stripMargin)
