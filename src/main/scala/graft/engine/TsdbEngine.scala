@@ -510,7 +510,11 @@ final class TsdbEngine(
           df.withColumn(c.name, lit(null).cast(c.sparkType))
       }
     }
-    append(ins.table, df.select(s.columns.map(c => col(c.name)): _*))
+    // a tag left to its DEFAULT holds at most one value per row
+    val tagDistinct =
+      s.columns.filter(_.isTag).map(_.name -> rows.length.toLong).toMap ++
+      TsdbEngine.distinctCounts(targets, rows.map(_.toSeq))
+    append(ins.table, df.select(s.columns.map(c => col(c.name)): _*), Some(tagDistinct))
     rows.length.toLong
   }
 
@@ -540,10 +544,12 @@ final class TsdbEngine(
     * keeps its own timestamp key: the batch's timestamp column is written
     * there. The batch is then aligned to the re-read schema: every column
     * it lacks is written as NULL, including a tag that first-flush
-    * sampling moved into the primary key. */
+    * sampling moved into the primary key. `tagDistinct` is passed on to
+    * [[append]]. */
   def appendInferring(
       name: String, timestampKey: String, updateMode: UpdateMode.Value,
-      wanted: Seq[ColumnSpec], batch: DataFrame): Unit = {
+      wanted: Seq[ColumnSpec], batch: DataFrame,
+      tagDistinct: Option[Map[String, Long]] = None): Unit = {
     val created = catalog.create(
       TableSchema(name,
         ColumnSpec(timestampKey, DatumKind.Timestamp, isNullable = false) +: wanted,
@@ -559,14 +565,21 @@ final class TsdbEngine(
         else if (c.name != timestampKey && have(c.name)) col(c.name)
         else lit(null)
       src.cast(c.sparkType).as(c.name)
-    }: _*))
+    }: _*), tagDistinct)
   }
 
   /** Append a batch of user-schema rows: computes tsid + ingest sequence and
     * writes time-segmented parquet. Also the Structured Streaming
     * foreachBatch target (streaming ingest replaces the reference's WAL +
-    * memtable path; checkpointing replaces WAL durability). */
-  def append(name: String, batch: DataFrame): Unit = withTableLock(name) {
+    * memtable path; checkpointing replaces WAL durability).
+    *
+    * `tagDistinct` is what a writer holding its rows on the driver knows:
+    * each tag column's number of distinct values in the batch (a tag it
+    * leaves out is NULL in every row; other columns are ignored). It
+    * sizes the tag bloom filters ([[bloomOnTags]]); without it Parquet
+    * sizes them itself. */
+  def append(name: String, batch: DataFrame,
+      tagDistinct: Option[Map[String, Long]] = None): Unit = withTableLock(name) {
     limiter.checkWrite(name) // blocked tables refuse every write path
     invalidateRollups(name) // fresh raw writes must not be served stale
     val s = catalog.get(name)
@@ -616,7 +629,7 @@ final class TsdbEngine(
       partCols :+= TableSchema.BucketColumn
     }
 
-    val w = bloomOnTags(df.write.mode("append"), s)
+    val w = bloomOnTags(df.write.mode("append"), s, tagDistinct)
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
       .parquet(catalog.dataDir(name))
   }
@@ -638,13 +651,34 @@ final class TsdbEngine(
     * the reference's per-SST Xor8 tag filters (sst/parquet/meta_data/
     * filter.rs:55-70, SURVEY §4.3): a tag-equality predicate can then skip
     * whole row groups whose filter rules the value out, on top of the
-    * min/max stats that PK-sorted layout already makes selective. */
+    * min/max stats that PK-sorted layout already makes selective.
+    *
+    * Like the reference's filter, each one is sized to the values it
+    * holds. With `tagDistinct` (the write's per-tag distinct counts, an
+    * upper bound for every file the write lands) a tag's filter expects
+    * that many values, at least 1: a one-row file carries a 32-byte
+    * filter instead of Parquet's 1 MiB default. Without it (DataFrame and
+    * streaming appends, compactions) Parquet's adaptive filter picks the
+    * smallest of its candidate sizes that fits the distinct values it saw;
+    * in parquet-hadoop 1.16 that switch covers the whole writer. Parquet
+    * writes no filter at all for a column chunk it dictionary-encodes:
+    * the dictionary already answers the equality test. */
   private def bloomOnTags(
       w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-      s: TableSchema): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
-    s.columns.filter(_.isTag).foldLeft(w) { (acc, c) =>
+      s: TableSchema, tagDistinct: Option[Map[String, Long]]
+  ): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
+    val tags = s.columns.filter(_.isTag)
+    val enabled = tags.foldLeft(w) { (acc, c) =>
       acc.option(s"parquet.bloom.filter.enabled#${c.name}", "true")
     }
+    tagDistinct match {
+      case Some(ndv) => tags.foldLeft(enabled) { (acc, c) =>
+        acc.option(s"parquet.bloom.filter.expected.ndv#${c.name}",
+          math.max(1L, ndv.getOrElse(c.name, 1L)))
+      }
+      case None => enabled.option("parquet.bloom.filter.adaptive.enabled", "true")
+    }
+  }
 
   /** First flush of a table created without `segment_duration`: sample the
     * accumulated (pre-flush) storage, pick a segment duration from observed
@@ -769,7 +803,7 @@ final class TsdbEngine(
       df = df.sortWithinPartitions((partCols ++ s.primaryKey).map(col): _*)
 
     val newDir = catalog.genDataDir(name, gen + 1)
-    val w = bloomOnTags(df.write.mode("overwrite"), s)
+    val w = bloomOnTags(df.write.mode("overwrite"), s, None)
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(newDir)
     catalog.markCompacted(name, gen + 1, seqFloor)
     // grace-period GC: keep the generation we just superseded (in-flight
@@ -893,7 +927,7 @@ final class TsdbEngine(
       val df = spark.read.parquet(leaf.toString)
         .repartition(parts)
         .sortWithinPartitions(s.primaryKey.map(col): _*)
-      bloomOnTags(df.write.mode("overwrite"), s).parquet(dst.toString)
+      bloomOnTags(df.write.mode("overwrite"), s, None).parquet(dst.toString)
     } else {
       // per-leaf output part counts (file sizing), matched by the leaf's
       // partition-column values; bounded by the fragmented-leaf count
@@ -940,7 +974,7 @@ final class TsdbEngine(
         .drop(planSchema.fieldNames.toSeq: _*)
         .sortWithinPartitions(
           (fragLeafCols ++ s.primaryKey).map(col): _*)
-      bloomOnTags(df.write.mode("append"), s)
+      bloomOnTags(df.write.mode("append"), s, None)
         .partitionBy(fragLeafCols: _*).parquet(nextRoot.toString)
     }
     // actual file count after the write (walk the new generation):
@@ -1340,6 +1374,14 @@ final class TsdbEngine(
       StructField("is_primary", BooleanType), StructField("is_nullable", BooleanType),
       StructField("is_tag", BooleanType), StructField("is_dictionary", BooleanType))))
   }
+}
+
+object TsdbEngine {
+  /** Each named column's number of distinct values over rows held on the
+    * driver, where `names(i)` is every row's column `i`: the `tagDistinct`
+    * that a writer which built its rows passes to [[TsdbEngine.append]]. */
+  def distinctCounts(names: Seq[String], rows: Seq[Seq[Any]]): Map[String, Long] =
+    names.indices.map(i => names(i) -> rows.map(_(i)).distinct.size.toLong).toMap
 }
 
 /** Rewrites `ts_col <cmp> <integer>` to `ts_col <cmp> timestamp_millis(n)`

@@ -2,9 +2,10 @@ package graft.influx
 
 import graft.engine.TsdbEngine
 import graft.model.{ColumnSpec, DatumKind, UpdateMode}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** InfluxDB line protocol ingest (reference: proxy/src/influxdb/types.rs:
   * 491-540 groups lines per measurement+tagset into WriteTableRequests; the
@@ -13,11 +14,11 @@ import org.apache.spark.sql.types._
   *
   * `measurement[,tag=v]* field=value[,field=value]* [timestamp-ns]`
   *
-  * Parsing runs distributed (a map over the line Dataset); only the schema
-  * union (measurement names + field types, a few rows) reaches the driver —
-  * ingest scales with executors, auto-create stays a metadata operation.
-  * Field types: float (default), integer (`i` suffix), string (quoted),
-  * boolean. Tags are strings (TAG columns). Timestamps are nanoseconds.
+  * A write body is already on the driver, so it parses there, like the
+  * reference's request-thread parse: shapes, type widening and line counts
+  * cost no Spark job, and each measurement's append is one. Field types:
+  * float (default), integer (`i` suffix), string (quoted), boolean. Tags
+  * are strings (TAG columns). Timestamps are nanoseconds.
   */
 object LineProtocol {
 
@@ -54,70 +55,64 @@ object LineProtocol {
     ParsedLine(measurement, tags, fields, parts(2).toLong)
   }
 
-  /** Ingest a Dataset of lines: group per measurement, auto-create tables
-    * (timestamp key `time`, tags TAG string, fields typed from first
-    * sight), append through the engine write path (tsid + seq + segments).
-    * Returns rows appended per measurement. */
-  def ingest(engine: TsdbEngine, lines: Dataset[String]): Map[String, Long] = {
-    engine.limiter.checkInsertRule() // AnyInsert brake (protocol entry)
-    val spark = lines.sparkSession
-    import spark.implicits._
-    val parsed: Dataset[ParsedLine] = lines
-      .filter((l: String) => l.trim.nonEmpty && !l.trim.startsWith("#"))
-      .map(parseLine)
-      .cache()
-    try ingestParsed(engine, parsed)
-    finally parsed.unpersist() // appends are eager; don't pin executor storage
+  private def isData(line: String): Boolean = {
+    val t = line.trim
+    t.nonEmpty && !t.startsWith("#")
   }
 
-  private def ingestParsed(
-      engine: TsdbEngine, parsed: Dataset[ParsedLine]): Map[String, Long] = {
-    val spark = parsed.sparkSession
+  /** Ingest a Dataset of lines (a streaming or registry source): parsed
+    * where the lines live, collected, then ingested like a write body. */
+  def ingest(engine: TsdbEngine, lines: Dataset[String]): Map[String, Long] = {
+    val spark = lines.sparkSession
     import spark.implicits._
-    // ONE aggregation pass over the cached parse computes both the
-    // per-measurement row counts and the schema shapes: each line's first
-    // field carries a line marker, so line counts fall out of the same
-    // groupBy that dedups (measurement, field, type, tagset) shapes —
-    // counting the write batch itself would compute each batch twice
-    val meta = parsed.flatMap { p =>
-        val tagKeys = p.tags.map(_._1)
-        p.fields.zipWithIndex.map { case (f, i) =>
-          (p.measurement, f._1, f._2, tagKeys, if (i == 0) 1L else 0L) }
-      }.toDF("m", "field", "ftype", "tagKeys", "lineMark")
-      .groupBy("m", "field", "ftype", "tagKeys")
-      .agg(sum("lineMark").as("lines"))
-      .collect()
-    val counts: Map[String, Long] = meta.groupBy(_.getString(0))
-      .map { case (m, rs) => m -> rs.map(_.getLong(4)).sum }
-    val shapes = meta.map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getSeq[String](3))).groupBy(_._1)
+    ingestParsed(engine, lines.filter(isData _).map(parseLine).collect().toSeq)
+  }
 
-    shapes.map { case (m, rows) =>
-      val tagKeys = rows.flatMap(_._4).distinct.sorted.toSeq
-      // deterministic type merge for conflicting lines: widen by fixed
-      // precedence (string > double > int64 > boolean) — a collect-order
-      // toMap would pick a shuffle-dependent winner
-      val precedence = Map("boolean" -> 0, "int64" -> 1, "double" -> 2, "string" -> 3)
-      val fieldTypes: Map[String, String] = rows.groupBy(_._2)
-        .map { case (f, rs) => f -> rs.map(_._3).maxBy(precedence) }
+  /** Ingest lines held on the driver (an HTTP write body). */
+  def ingest(engine: TsdbEngine, lines: Seq[String]): Map[String, Long] =
+    ingestParsed(engine, lines.filter(isData).map(parseLine))
+
+  /** Group parsed lines per measurement, auto-create tables (timestamp key
+    * `time`, tags TAG string, fields typed from first sight) and append
+    * each group through the engine write path (tsid + seq + segments).
+    * Returns rows appended per measurement. */
+  private def ingestParsed(
+      engine: TsdbEngine, parsed: Seq[ParsedLine]): Map[String, Long] = {
+    engine.limiter.checkInsertRule() // AnyInsert brake (protocol entry)
+    val spark = engine.spark
+    // deterministic type merge for conflicting lines: widen by fixed
+    // precedence (string > double > int64 > boolean)
+    val precedence = Map("boolean" -> 0, "int64" -> 1, "double" -> 2, "string" -> 3)
+    def kindOf(t: String): DatumKind.Value = t match {
+      case "int64"   => DatumKind.Int64
+      case "string"  => DatumKind.String
+      case "boolean" => DatumKind.Boolean
+      case _         => DatumKind.Double
+    }
+    val rowSchema = StructType(Seq(StructField("_ns", LongType),
+      StructField("_tags", ArrayType(StringType)),
+      StructField("_fields", ArrayType(StringType))))
+
+    parsed.groupBy(_.measurement).toSeq.sortBy(_._1).map { case (m, ps) =>
+      val tagKeys = ps.flatMap(_.tags.map(_._1)).distinct.sorted
+      val fieldTypes: Map[String, String] = ps.flatMap(_.fields)
+        .groupMapReduce(_._1)(_._2)((a, b) => if (precedence(a) >= precedence(b)) a else b)
       val fieldNames = fieldTypes.keys.toSeq.sorted
-      def kindOf(t: String): DatumKind.Value = t match {
-        case "int64"   => DatumKind.Int64
-        case "string"  => DatumKind.String
-        case "boolean" => DatumKind.Boolean
-        case _         => DatumKind.Double
-      }
       // influx writers vary field sets per point: unseen tags/fields
       // auto-ADD through the engine's shared schema-inferring append
       val wantedCols =
         tagKeys.map(k => ColumnSpec(k, DatumKind.String, isTag = true)) ++
         fieldNames.map(f => ColumnSpec(f, kindOf(fieldTypes(f))))
-      val rowsDf = parsed.filter(_.measurement == m).map { p =>
+      val tagVals = ps.map { p =>
         val tagMap = p.tags.toMap
+        tagKeys.map(tagMap.getOrElse(_, null))
+      }
+      val rows = ps.zip(tagVals).map { case (p, tv) =>
         val fMap = p.fields.map(f => f._1 -> f._3).toMap
-        (p.tsNanos, tagKeys.map(tagMap.get), fieldNames.map(fMap.get))
-      }.toDF("_ns", "_tags", "_fields")
-      val batch = rowsDf.select(
+        Row(p.tsNanos, tv, fieldNames.map(fMap.getOrElse(_, null)))
+      }
+      // values travel as strings; the casts are Spark's, as for any batch
+      val batch = spark.createDataFrame(rows.asJava, rowSchema).select(
         expr("timestamp_micros(_ns div 1000)").as("time") +:
         (tagKeys.zipWithIndex.map { case (k, i) => col("_tags")(i).as(k) } ++
         fieldNames.zipWithIndex.map { case (f, i) =>
@@ -129,9 +124,10 @@ object LineProtocol {
             case _         => c.cast(DoubleType)
           }).as(f)
         }): _*)
-      engine.appendInferring(m, "time", UpdateMode.Overwrite, wantedCols, batch)
-      m -> counts(m)
-    }
+      engine.appendInferring(m, "time", UpdateMode.Overwrite, wantedCols, batch,
+        Some(TsdbEngine.distinctCounts(tagKeys, tagVals)))
+      m -> ps.length.toLong
+    }.toMap
   }
 
   // ---- escaping helpers (`\,` `\ ` `\=` are literal in identifiers)

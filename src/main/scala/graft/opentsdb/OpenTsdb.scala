@@ -2,8 +2,11 @@ package graft.opentsdb
 
 import graft.engine.TsdbEngine
 import graft.model.{ColumnSpec, DatumKind, UpdateMode}
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{
+  ArrayType, DoubleType, LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import graft.promql.PromQL.SeriesTable
 
 /** OpenTSDB query frontend (reference: query_frontend/src/opentsdb/mod.rs).
@@ -331,37 +334,40 @@ object OpenTsdb {
     * auto-ADD through [[TsdbEngine.appendInferring]], the write path every
     * ingest protocol shares (proxy/src/write.rs:176-260).
     *
-    * Bodies parse distributed (map over the Dataset); only the per-metric
-    * schema shape (a few strings) reaches the driver. Returns rows appended
-    * per metric.
+    * A body held on the driver (an HTTP put) parses there; a Dataset of
+    * bodies parses where it lives and its points are collected. Either
+    * way the per-metric shapes, counts and rows are built on the driver
+    * and each metric's append is the only Spark job. Returns rows
+    * appended per metric.
     */
   def put(engine: TsdbEngine, bodies: Dataset[String]): Map[String, Long] = {
-    engine.limiter.checkInsertRule() // AnyInsert brake (protocol entry)
     val spark = bodies.sparkSession
     import spark.implicits._
-    val points = bodies.flatMap(parsePut(_)).cache()
-    try {
-      val counts: Map[String, Long] =
-        points.groupByKey(_.metric).count().collect().toMap
-      val tagKeysByMetric = points
-        .flatMap(p => p.tags.keys.map(k => (p.metric, k)))
-        .distinct().collect().groupBy(_._1)
+    putPoints(engine, bodies.flatMap(parsePut(_)).collect().toSeq)
+  }
 
-      counts.keys.toSeq.sorted.map { m =>
-        val tagKeys =
-          tagKeysByMetric.getOrElse(m, Array.empty).map(_._2).distinct.sorted.toSeq
-        val wantedCols =
-          tagKeys.map(k => ColumnSpec(k, DatumKind.String, isTag = true)) :+
-          ColumnSpec("value", DatumKind.Double)
-        val batch = points.filter(_.metric == m)
-          .map(p => (p.timestampMs, tagKeys.map(k => p.tags.get(k)), p.value))
-          .toDF("_ms", "_tags", "_value")
-          .select(expr("timestamp_micros(_ms * 1000)").as("timestamp") +:
-            col("_value").as("value") +:
-            tagKeys.zipWithIndex.map { case (k, i) => col("_tags")(i).as(k) }: _*)
-        engine.appendInferring(m, "timestamp", UpdateMode.Overwrite, wantedCols, batch)
-        m -> counts(m)
-      }.toMap
-    } finally points.unpersist()
+  /** `/api/put` bodies held on the driver. */
+  def put(engine: TsdbEngine, bodies: Seq[String]): Map[String, Long] =
+    putPoints(engine, bodies.flatMap(parsePut))
+
+  private def putPoints(engine: TsdbEngine, points: Seq[PutPoint]): Map[String, Long] = {
+    engine.limiter.checkInsertRule() // AnyInsert brake (protocol entry)
+    val rowSchema = StructType(Seq(StructField("_ms", LongType),
+      StructField("_tags", ArrayType(StringType)), StructField("_value", DoubleType)))
+    points.groupBy(_.metric).toSeq.sortBy(_._1).map { case (m, ps) =>
+      val tagKeys = ps.flatMap(_.tags.keys).distinct.sorted
+      val wantedCols =
+        tagKeys.map(k => ColumnSpec(k, DatumKind.String, isTag = true)) :+
+        ColumnSpec("value", DatumKind.Double)
+      val tagVals = ps.map(p => tagKeys.map(p.tags.getOrElse(_, null)))
+      val rows = ps.zip(tagVals).map { case (p, tv) => Row(p.timestampMs, tv, p.value) }
+      val batch = engine.spark.createDataFrame(rows.asJava, rowSchema)
+        .select(expr("timestamp_micros(_ms * 1000)").as("timestamp") +:
+          col("_value").as("value") +:
+          tagKeys.zipWithIndex.map { case (k, i) => col("_tags")(i).as(k) }: _*)
+      engine.appendInferring(m, "timestamp", UpdateMode.Overwrite, wantedCols, batch,
+        Some(TsdbEngine.distinctCounts(tagKeys, tagVals)))
+      m -> ps.length.toLong
+    }.toMap
   }
 }

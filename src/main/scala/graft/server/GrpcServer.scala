@@ -460,12 +460,14 @@ final class GraftGrpcServer(
         // values travel as strings; the shared append casts each to its
         // table column's type
         val names = wanted.map(_.name).distinct
-        val batch = rows.map { case (ms, vals) =>
+        val strRows = rows.map { case (ms, vals) =>
           (ms, names.map(n => Option(vals.getOrElse(n, null)).map(_.toString).orNull))
-        }.toDF("_ms", "_vals").select(
+        }
+        val batch = strRows.toDF("_ms", "_vals").select(
           expr("timestamp_micros(_ms * 1000)").as("timestamp") +:
           names.indices.map(i => col("_vals")(i).as(names(i))): _*)
-        engine.appendInferring(t.table, "timestamp", UpdateMode.Append, wanted, batch)
+        engine.appendInferring(t.table, "timestamp", UpdateMode.Append, wanted, batch,
+          Some(TsdbEngine.distinctCounts(names, strRows.map(_._2))))
         success += rows.length
       }
     }

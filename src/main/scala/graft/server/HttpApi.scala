@@ -134,10 +134,7 @@ object HttpApi {
     * success (the server replies 204). */
   def handleInfluxWrite(engine: TsdbEngine, body: String): String =
     try {
-      val spark = engine.spark
-      import spark.implicits._
-      graft.influx.LineProtocol.ingest(engine,
-        spark.createDataset(body.split('\n').toSeq.filter(_.trim.nonEmpty)))
+      graft.influx.LineProtocol.ingest(engine, body.split('\n').toSeq)
       ""
     } catch { case e: Throwable => errorJson(500, e) }
 
@@ -145,9 +142,7 @@ object HttpApi {
     * response on success (the server replies 204). */
   def handleOpentsdbPut(engine: TsdbEngine, body: String): String =
     try {
-      val spark = engine.spark
-      import spark.implicits._
-      graft.opentsdb.OpenTsdb.put(engine, spark.createDataset(Seq(body)))
+      graft.opentsdb.OpenTsdb.put(engine, Seq(body))
       ""
     } catch { case e: Throwable => errorJson(500, e) }
 

@@ -1590,4 +1590,49 @@ class ProtocolsSpec extends SparkSpec {
     assert(out(0L) == 1.0 && out(5000L) == 2.0)
     assert(out(999L) == 0.0 && out(1000L) == 0.0 && out(4999L) == 0.0)
   }
+
+  test("protocol writes parse on the driver: one Spark job per table written") {
+    import graft.server.HttpApi
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    // jobs the body runs under its own job group; the listener bus delivers
+    // in order, so once a later marker job is seen every job before it is
+    def jobsOf(body: => String): Int = {
+      val g = s"pin-${System.nanoTime()}"
+      val marker = s"$g-marker"
+      sc.setJobGroup(g, g)
+      try assert(body == "")
+      finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(marker), "listener never saw the marker job")
+      groups.asScala.count(_ == g)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val e = new TsdbEngine(spark, tmpDir("pin-jobs"))
+      val lp = jobsOf(HttpApi.handleInfluxWrite(e,
+        """cpu,host=a usage=0.5 1704067200000000000
+          |mem,host=a used=7i 1704067200000000000
+          |cpu,host=b usage=0.9 1704067200000000000""".stripMargin))
+      assert(lp == 2, s"line protocol ran $lp jobs for two measurements")
+      val put = jobsOf(HttpApi.handleOpentsdbPut(e,
+        """[{"metric":"sys.cpu","timestamp":1704067200,"value":1.5,"tags":{"host":"a"}},
+          | {"metric":"sys.cpu","timestamp":1704067260,"value":2.5,"tags":{"host":"b"}}]""".stripMargin))
+      assert(put == 1, s"OpenTSDB put ran $put jobs for one metric")
+      assert(e.read("cpu").count() == 2 && e.read("mem").count() == 1 &&
+        e.read("sys.cpu").count() == 2)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.engine.TsdbEngine
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class TsdbEngineSpec extends SparkSpec {
 
@@ -48,6 +49,92 @@ class TsdbEngineSpec extends SparkSpec {
         s"tag columns missing bloom filters: $offsets")
       assert(offsets("value") < 0, s"non-tag column got a bloom filter: $offsets")
     } finally reader.close()
+  }
+
+  /** Every data file under a table directory, with its footer's per-block
+    * column chunks (path -> bloom filter offset) and block row counts. */
+  private def parquetFooters(dir: String): Seq[(java.io.File, Seq[Map[String, Long]], Seq[Long])] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+    walk(new java.io.File(dir)).map { part =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(part.getAbsolutePath),
+          new org.apache.hadoop.conf.Configuration()))
+      try {
+        val blocks = reader.getFooter.getBlocks.asScala.toSeq
+        (part, blocks.map(_.getColumns.asScala.map(c =>
+          c.getPath.toDotString -> c.getBloomFilterOffset).toMap),
+          blocks.map(_.getRowCount))
+      } finally reader.close()
+    }
+  }
+
+  test("tag bloom filters are sized to the write: one-row and trickle files stay small") {
+    val e = engine()
+    e.execute(
+      """CREATE TABLE bsz (host string TAG, region string TAG, value double,
+        |  t timestamp NOT NULL, timestamp KEY(t))
+        |ENGINE=Analytic WITH (enable_ttl='false')""".stripMargin)
+    e.execute(
+      "INSERT INTO bsz (t, host, region, value) VALUES (1702224000000, 'h1', 'eu', 1.0)")
+    val one = parquetFooters(e.catalog.dataDir("bsz"))
+    assert(one.nonEmpty)
+    one.foreach { case (f, blocks, _) =>
+      assert(f.length < 64 * 1024, s"one-row file ${f.getName} is ${f.length} B")
+      assert(blocks.forall(b => b("host") >= 0 && b("region") >= 0),
+        s"tag columns missing bloom filters: $blocks")
+    }
+    // the dashboard trickle shape: 100 distinct hosts in 100 points, too
+    // few repeats for Parquet to keep the host chunk dictionary-encoded
+    assert(graft.server.HttpApi.handleInfluxWrite(e, (0 until 100).map(h =>
+      f"trickle,host=h$h%03d,region=r${h % 4} usage=$h.5 ${1702224000000000000L + h}")
+      .mkString("\n")) == "")
+    val trickle = parquetFooters(e.catalog.dataDir("trickle"))
+    assert(trickle.map(_._3.sum).sum == 100)
+    trickle.foreach { case (f, blocks, _) =>
+      assert(f.length < 64 * 1024, s"trickle file ${f.getName} is ${f.length} B")
+      assert(blocks.forall(_("host") >= 0), s"host chunk without a filter: $blocks")
+    }
+  }
+
+  test("sized tag filters still skip row groups on a tag-equality scan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case s: FileSourceScanExec => Seq(s)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case o => o.children.flatMap(scans)
+    }
+    val e = engine()
+    e.execute(
+      """CREATE TABLE hcard (host string TAG, v double, t timestamp NOT NULL,
+        |  timestamp KEY(t))
+        |ENGINE=Analytic WITH (update_mode='append', enable_ttl='false')""".stripMargin)
+    val n = 20000L
+    e.append("hcard", spark.range(n).select(
+      concat(lit("h"), col("id").cast("string")).as("host"),
+      col("id").cast("double").as("v"),
+      timestamp_millis(lit(1702224000000L) + col("id")).as("t")))
+    // small row groups, so each compacted file holds several
+    spark.conf.set("parquet.block.size", (64 * 1024).toString)
+    try e.compact("hcard")
+    finally spark.conf.unset("parquet.block.size")
+    val files = parquetFooters(e.catalog.dataDir("hcard"))
+    assert(files.map(_._3.sum).sum == n)
+    assert(files.forall(_._3.size > 1), s"row groups per file: ${files.map(_._3.size)}")
+    assert(files.forall(_._2.forall(_("host") >= 0)), "host chunks without a filter")
+
+    val q = e.execute("SELECT v FROM hcard WHERE host = 'h12345'")
+    assert(q.collect().map(_.getDouble(0)).toSeq == Seq(12345.0))
+    val scanned = scans(q.queryExecution.executedPlan)
+      .map(_.metrics("numOutputRows").value).sum
+    // the needle's row group, plus at most one filter false positive
+    val largest = files.map(_._3.max).max
+    assert(scanned > 0 && scanned <= 2 * largest,
+      s"scan read $scanned of $n rows; a row group holds at most $largest")
   }
 
   test("overwrite mode dedups on (tsid, ts); append mode keeps duplicates (F2)") {
