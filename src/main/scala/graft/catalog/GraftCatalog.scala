@@ -7,8 +7,9 @@ import org.json4s.jackson.{JsonMethods, Serialization}
 import scala.jdk.CollectionConverters._
 
 /** File-backed table catalog: one directory per table under the warehouse,
-  * holding `_manifest.json` (schema + options + version + ingest sequence)
-  * and `data/` (parquet, optionally partitioned by time segment).
+  * holding `_manifest.json` (schema + options + version + ingest sequence),
+  * `data/` (parquet, optionally partitioned by time segment) and `_wal/`
+  * (the engine's write-buffer log).
   *
   * Replaces the reference's catalog→schema→table hierarchy
   * (catalog/src/consts.rs: defaults horaedb/public) with a single default
@@ -35,6 +36,10 @@ final class GraftCatalog(val warehouse: String) {
   /** Current data directory (follows the manifest's compaction generation). */
   def dataDir(name: String): String =
     genDataDir(name, if (exists(name)) manifest(name).dataGen.getOrElse(0) else 0)
+
+  /** Write-ahead log directory of a table's write buffer
+    * (`TsdbEngine`'s memtable); outside every data generation. */
+  def walDir(name: String): Path = tableDir(name).resolve("_wal")
 
   /** Streaming checkpoint root for a sink table — lives under the
     * warehouse (not a per-run temp dir) so a restarted stream resumes
@@ -79,11 +84,19 @@ final class GraftCatalog(val warehouse: String) {
 
   /** Flip the manifest to the new generation. The seq floor is the nextSeq
     * observed when the compaction SCAN started — a batch reserved after the
-    * scan is not in the rewrite and must stay above the floor. */
-  def markCompacted(name: String, newGen: Int, seqFloor: Long): Unit = synchronized {
+    * scan is not in the rewrite and must stay above the floor. `flushedSeq`,
+    * when given, is the highest buffered sequence the new generation
+    * stores: the write-ahead log's records up to it are no longer needed. */
+  def markCompacted(name: String, newGen: Int, seqFloor: Long,
+      flushedSeq: Option[Long] = None): Unit = synchronized {
     val m = manifest(name)
-    writeManifest(name, m.copy(dataGen = Some(newGen), compactedSeq = Some(seqFloor)))
+    writeManifest(name, m.copy(dataGen = Some(newGen), compactedSeq = Some(seqFloor),
+      flushedSeq = flushedSeq.orElse(m.flushedSeq)))
   }
+
+  /** The highest buffered sequence stored in Parquet (-1 when none):
+    * write-ahead-log replay skips records at or below it. */
+  def flushedSeq(name: String): Long = manifest(name).flushedSeq.getOrElse(-1L)
 
   def exists(name: String): Boolean = Files.exists(manifestPath(name))
 
@@ -143,9 +156,8 @@ final class GraftCatalog(val warehouse: String) {
       if (s.columns.exists(_.name == c.name))
         throw new IllegalStateException(s"column '${c.name}' already exists in '$name'")
     }
-    writeManifest(name, Manifest(
-      s.copy(columns = s.columns ++ cols, version = s.version + 1), m.nextSeq)
-      .copy(dataGen = m.dataGen, compactedSeq = m.compactedSeq))
+    writeManifest(name,
+      m.withSchema(s.copy(columns = s.columns ++ cols, version = s.version + 1)))
   }
 
   /** Idempotent auto-add for the engine's shared schema-inferring append
@@ -175,17 +187,14 @@ final class GraftCatalog(val warehouse: String) {
       options = TableOptions.fromRaw(s.options.raw + ("segment_duration" -> segmentDuration)),
       sampledPrimaryKey = pk.map(_.toSeq).orElse(s.sampledPrimaryKey),
       version = if (pk.isDefined) s.version + 1 else s.version)
-    writeManifest(name, Manifest(next, m.nextSeq)
-      .copy(dataGen = m.dataGen, compactedSeq = m.compactedSeq))
+    writeManifest(name, m.withSchema(next))
   }
 
   def alterSetting(name: String, settings: Map[String, String]): Unit = synchronized {
     val m = manifest(name)
     val s = m.toSchema
     val merged = TableOptions.fromRaw(s.options.raw ++ settings)
-    writeManifest(name, Manifest(
-      s.copy(options = merged, version = s.version + 1), m.nextSeq)
-      .copy(dataGen = m.dataGen, compactedSeq = m.compactedSeq))
+    writeManifest(name, m.withSchema(s.copy(options = merged, version = s.version + 1)))
   }
 
   /** Reconstructed DDL for SHOW CREATE TABLE, in the reference's canonical
@@ -323,7 +332,13 @@ private[catalog] final case class Manifest(
     // compacted; also keeps round-1 manifests readable)
     dataGen: Option[Int] = None, compactedSeq: Option[Long] = None,
     // PK suggested by first-flush cardinality sampling (engine/Sampler.scala)
-    sampledPk: Option[List[String]] = None) {
+    sampledPk: Option[List[String]] = None,
+    // highest write-buffer sequence stored in Parquet (absent = none yet)
+    flushedSeq: Option[Long] = None) {
+  /** This manifest with schema `s`; sequence and storage state kept. */
+  def withSchema(s: TableSchema): Manifest = Manifest(s, nextSeq)
+    .copy(dataGen = dataGen, compactedSeq = compactedSeq, flushedSeq = flushedSeq)
+
   def toSchema: TableSchema = TableSchema(
     name,
     columns.map(c => ColumnSpec(c.name, DatumKind.withName(c.kind), c.nullable,

@@ -6,9 +6,11 @@ import graft.functions.TsidHash
 import graft.model._
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{
-  Between, BinaryComparison, Expression, In, Literal => CLiteral}
+  Between, BinaryComparison, Expression, In, InSet, Not, UnsafeProjection,
+  Literal => CLiteral}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{
+  Filter, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,8 +45,14 @@ final class TsdbEngine(
     * generations survive one grace cycle. */
   private val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def withTableLock[T](name: String)(f: => T): T =
-    tableLocks.computeIfAbsent(name, _ => new Object).synchronized(f)
+  @annotation.tailrec
+  private def withTableLock[T](name: String)(f: => T): T = {
+    val lock = tableLocks.computeIfAbsent(name, _ => new Object)
+    // DROP TABLE retires the monitor: a caller that waited on it takes
+    // the one a same-named new table now uses
+    val r = lock.synchronized(if (tableLocks.get(name) eq lock) Some(f) else None)
+    if (r.isDefined) r.get else withTableLock(name)(f)
+  }
 
   /** Wall-clock grace for superseded-generation GC. The one-generation
     * grace alone is a race under load: a reader pins its file listing
@@ -62,7 +70,7 @@ final class TsdbEngine(
     * at the first GC pass that sees it. */
   @volatile private[graft] var genGraceMs: Long =
     sys.env.get("SPARK_GRAFT_GEN_GRACE_MS").map(_.toLong).getOrElse(120000L)
-  private val supersededAtMs =
+  private[graft] val supersededAtMs =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), java.lang.Long]()
 
   /** GC superseded generations of `name` after a flip to
@@ -82,6 +90,42 @@ final class TsdbEngine(
           supersededAtMs.remove((name, g))
         }
       }
+    }
+  }
+
+  /** Per-table write buffers (the reference's memtables) and their
+    * write-ahead logs. Line protocol, OpenTSDB put and gRPC Write land
+    * here ([[appendInferring]] over driver rows): one fsynced log record
+    * plus an in-memory buffer version, no Spark job. Every reader sees the
+    * buffer through [[readStorage]]; it leaves memory only through a
+    * compaction or a flush ([[flushBuffer]]) whose manifest flip records
+    * the highest sequence stored, after which its log records are
+    * deleted. Both maps change under the table lock only. */
+  private val memtables = new java.util.concurrent.ConcurrentHashMap[String, MemTable]()
+  private val wals = new java.util.concurrent.ConcurrentHashMap[String, Wal]()
+  private def buffered(name: String): MemTable =
+    memtables.getOrDefault(name, MemTable.Empty)
+  private def walOf(name: String): Wal =
+    wals.computeIfAbsent(name, n => new Wal(catalog.walDir(n)))
+
+  /** Drop a table's buffer and log files; caller holds the table lock. */
+  private def forgetBuffer(name: String): Unit = {
+    memtables.remove(name)
+    Option(wals.remove(name)).getOrElse(new Wal(catalog.walDir(name))).clear()
+  }
+
+  // Recovery (the offset-log pattern): every logged write above the
+  // manifest's stored mark is buffered again; a log whose records are all
+  // stored (a crash between the flip and the log delete) is deleted.
+  catalog.list().foreach { name =>
+    val dir = catalog.walDir(name)
+    if (java.nio.file.Files.isDirectory(dir)) {
+      val mark = catalog.flushedSeq(name)
+      val live = Wal.replay(dir).map(p => (Wal.decode(p), p.length.toLong))
+        .filter(_._1.seq > mark)
+      if (live.isEmpty) forgetBuffer(name)
+      else memtables.put(name,
+        live.foldLeft(MemTable.Empty) { case (m, (b, n)) => m.add(b, n) })
     }
   }
 
@@ -265,7 +309,7 @@ final class TsdbEngine(
       else lit(-1L)
     // input_file_name() is a file: URI with a variable number of slashes;
     // normalize to a plain absolute path before stripping the table dir
-    val perFile = readStorage(s)
+    val perFile = readFiles(s)
       .groupBy(expr(
         s"substring(regexp_replace(input_file_name(), '^file:/+', '/'), " +
           s"length('${dir.toString}') + 2)")
@@ -325,11 +369,15 @@ final class TsdbEngine(
 
   graft.functions.GraftFunctions.register(spark)
   // engine optimizer rules: Exact/Inexact dedup pushdown + KEY/HASH bucket
-  // pruning (both no-ops on plans without engine shapes)
+  // pruning (both no-ops on plans without engine shapes). Spark's own
+  // ConvertToLocalRelation runs after them, so a tag filter the pushdown
+  // lands on a write buffer's local relation is applied while planning
+  // and the tasks carry only the matching buffered rows.
   if (!spark.experimental.extraOptimizations.contains(graft.plans.DedupTagPushdown))
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations ++
-        Seq(graft.plans.DedupTagPushdown, graft.plans.BucketPruning)
+        Seq(graft.plans.DedupTagPushdown, graft.plans.BucketPruning,
+          org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation)
 
   /** Execute a script (one or more ;-separated statements); returns the
     * result of the last statement. */
@@ -344,7 +392,14 @@ final class TsdbEngine(
       catalog.create(schema, ifNotExists); affectedRows(0)
     case DropTable(name, ifExists) =>
       invalidateRollups(name)
-      catalog.drop(name, ifExists)
+      withTableLock(name) {
+        if (catalog.exists(name)) forgetBuffer(name)
+        catalog.drop(name, ifExists)
+        // a same-named table created later starts with no GC history
+        // and its own lock
+        supersededAtMs.keySet.removeIf(_._1 == name)
+        tableLocks.remove(name)
+      }
       spark.catalog.dropTempView(name) // a stale view would read deleted files
       affectedRows(0)
     case DescribeTable(name) => describe(name)
@@ -400,8 +455,9 @@ final class TsdbEngine(
     // when every batch is under the compaction seq floor the data is
     // physically deduped — skip the window (cheaper plan, same rows).
     // Skipping is safe only if NO append/compaction committed across the
-    // listing: appends reserve their seq before files land, so an
-    // unchanged fingerprint proves the listing matches the checked state.
+    // listing: appends reserve their seq before files land (buffered
+    // writes before the buffer takes their rows), so an unchanged
+    // fingerprint proves the listing matches the checked state.
     val dedupSafeToSkip =
       !catalog.needsDedup(name) && catalog.readFingerprint(name) == pre
     val deduped = s.options.updateMode match {
@@ -451,7 +507,50 @@ final class TsdbEngine(
       .filter(col("__rn") === 1)
       .drop("__rn")
 
+  /** The table's stored rows: its Parquet files plus its write buffer.
+    * The buffer version is taken BEFORE the data directory is resolved
+    * and listed, and the file scan drops that version's sequences: a
+    * concurrent flush or compaction that moves them into files after the
+    * snapshot then cannot surface them twice, and one that moved them
+    * before it is already in the listing. With an empty buffer this is
+    * the bare file scan. The exclusion is an `InSet`, which codegen
+    * reads from a referenced hash set: an `IN` list of longs would be
+    * inlined into the generated code, so every write (a new sequence
+    * set) would compile the scan stage afresh. */
   private def readStorage(s: TableSchema): DataFrame = {
+    val mem = buffered(s.name)
+    val files = readFiles(s)
+    if (mem.isEmpty) files
+    else {
+      val filesPlan = GraftBridge.plan(files)
+      val seq = filesPlan.output.find(_.name == TableSchema.SeqColumn).get
+      GraftBridge.ofRows(spark, Union(
+        Filter(Not(InSet(seq, mem.seqs.toSet[Any])), filesPlan),
+        bufferRelation(s, mem, files.schema.fields.toSeq).newInstance()))
+    }
+  }
+
+  /** A write buffer as a local relation with the columns `fields`: storage
+    * columns, and `__segment` and `__bucket` by the rules every write
+    * applies. Evaluated once per buffer version, so a query plans over
+    * stored rows instead of re-deriving them. */
+  private def bufferRelation(
+      s: TableSchema, mem: MemTable, fields: Seq[StructField]): LocalRelation =
+    mem.relation(s.storageStruct, fields) { raw =>
+      val derived = Map(TableSchema.SegmentColumn -> segmentOf(s),
+        TableSchema.BucketColumn -> s.partitionBy.map(bucketOf))
+      val Project(exprs, _) = GraftBridge.plan(
+        GraftBridge.ofRows(spark, LocalRelation(raw)).select(fields.map { f =>
+          derived.get(f.name).flatten
+            .getOrElse(col("`" + f.name.replace("`", "``") + "`"))
+            .cast(f.dataType).as(f.name)
+        }: _*))
+      val project = UnsafeProjection.create(exprs, raw)
+      project.initialize(0)
+      row => project(row).copy()
+    }
+
+  private def readFiles(s: TableSchema): DataFrame = {
     val dir = catalog.dataDir(s.name)
     import graft.plans.Partitioning
     // the bucket spec rides on a data column's metadata so BucketPruning
@@ -514,7 +613,9 @@ final class TsdbEngine(
     val tagDistinct =
       s.columns.filter(_.isTag).map(_.name -> rows.length.toLong).toMap ++
       TsdbEngine.distinctCounts(targets, rows.map(_.toSeq))
-    append(ins.table, df.select(s.columns.map(c => col(c.name)): _*), Some(tagDistinct))
+    // one task, so the partitioned write lands one file per segment
+    append(ins.table, df.select(s.columns.map(c => col(c.name)): _*).coalesce(1),
+      Some(tagDistinct))
     rows.length.toLong
   }
 
@@ -544,20 +645,12 @@ final class TsdbEngine(
     * keeps its own timestamp key: the batch's timestamp column is written
     * there. The batch is then aligned to the re-read schema: every column
     * it lacks is written as NULL, including a tag that first-flush
-    * sampling moved into the primary key. `tagDistinct` is passed on to
-    * [[append]]. */
+    * sampling moved into the primary key. A DataFrame batch (InfluxQL
+    * INTO) is an [[append]] to Parquet. */
   def appendInferring(
       name: String, timestampKey: String, updateMode: UpdateMode.Value,
-      wanted: Seq[ColumnSpec], batch: DataFrame,
-      tagDistinct: Option[Map[String, Long]] = None): Unit = {
-    val created = catalog.create(
-      TableSchema(name,
-        ColumnSpec(timestampKey, DatumKind.Timestamp, isNullable = false) +: wanted,
-        timestampKey, None,
-        TableOptions(raw = Map("update_mode" -> updateMode.toString.toLowerCase))),
-      ifNotExists = true)
-    if (!created) catalog.alterAddColumnsIfAbsent(name, wanted)
-    val s = catalog.get(name)
+      wanted: Seq[ColumnSpec], batch: DataFrame): Unit = {
+    val s = ensureTable(name, timestampKey, updateMode, wanted)
     val have = batch.columns.toSet
     append(name, batch.select(s.columns.map { c =>
       val src =
@@ -565,13 +658,56 @@ final class TsdbEngine(
         else if (c.name != timestampKey && have(c.name)) col(c.name)
         else lit(null)
       src.cast(c.sparkType).as(c.name)
-    }: _*), tagDistinct)
+    }: _*))
   }
 
-  /** Append a batch of user-schema rows: computes tsid + ingest sequence and
-    * writes time-segmented parquet. Also the Structured Streaming
-    * foreachBatch target (streaming ingest replaces the reference's WAL +
-    * memtable path; checkpointing replaces WAL durability).
+  /** The same write for rows already on the driver (line protocol,
+    * OpenTSDB put, gRPC Write): each row is the timestamp in epoch micros
+    * followed by one Scala value per `wanted` column (NULL when absent).
+    * The rows go to the table's write buffer, with no Spark job: under
+    * the table lock the write passes the limiter, drops stale rollup
+    * registrations and reserves its sequence; the rows are stamped
+    * (values converted to the column types, `tsid`) in plain Scala;
+    * one log record is appended and fsynced; then the buffer takes the
+    * rows, and a buffer past `write_buffer_size` is flushed. */
+  def appendInferring(
+      name: String, timestampKey: String, updateMode: UpdateMode.Value,
+      wanted: Seq[ColumnSpec], rows: Seq[Array[Any]]): Unit = {
+    ensureTable(name, timestampKey, updateMode, wanted)
+    withTableLock(name) {
+      limiter.checkWrite(name) // blocked tables refuse every write path
+      invalidateRollups(name) // fresh raw writes must not be served stale
+      val s = catalog.get(name)
+      val seq = catalog.reserveSeq(name, 1)
+      val batch = MemBatch.stamp(s, seq, wanted.map(_.name), rows)
+      val record = Wal.encode(batch)
+      walOf(name).append(seq, record)
+      val mem = buffered(name).add(batch, record.length.toLong)
+      memtables.put(name, mem)
+      if (mem.bytes >= s.options.writeBufferSize) flushBuffer(name)
+    }
+  }
+
+  /** Create `name` if missing, else add the `wanted` columns it lacks;
+    * returns the schema as it then stands. */
+  private def ensureTable(
+      name: String, timestampKey: String, updateMode: UpdateMode.Value,
+      wanted: Seq[ColumnSpec]): TableSchema = {
+    val created = catalog.create(
+      TableSchema(name,
+        ColumnSpec(timestampKey, DatumKind.Timestamp, isNullable = false) +: wanted,
+        timestampKey, None,
+        TableOptions(raw = Map("update_mode" -> updateMode.toString.toLowerCase))),
+      ifNotExists = true)
+    if (!created) catalog.alterAddColumnsIfAbsent(name, wanted)
+    catalog.get(name)
+  }
+
+  /** Append a batch of user-schema rows straight to Parquet: computes
+    * tsid + ingest sequence and writes time-segmented files, with no
+    * write buffer in between. The DataFrame writers use it: the
+    * Structured Streaming foreachBatch target (whose checkpoint is its
+    * durability), InfluxQL INTO, INSERT and rollup refreshes.
     *
     * `tagDistinct` is what a writer holding its rows on the driver knows:
     * each tag column's number of distinct values in the batch (a tag it
@@ -617,15 +753,7 @@ final class TsdbEngine(
     // PARTITION BY KEY/HASH/RANDOM → __bucket directory partitions
     // (reference partition/rule/key.rs: hash64 % n)
     s.partitionBy.foreach { pb =>
-      val bucket = pb match {
-        case PartitionByKey(ks, n) =>
-          graft.plans.Partitioning.bucketColumn(ks.map(col), n)
-        case PartitionByHash(e, n) =>
-          graft.plans.Partitioning.bucketColumn(Seq(expr(e)), n)
-        case PartitionByRandom(n) =>
-          pmod(xxhash64(monotonically_increasing_id()), lit(n.toLong)).cast("int")
-      }
-      df = df.withColumn(TableSchema.BucketColumn, bucket)
+      df = df.withColumn(TableSchema.BucketColumn, bucketOf(pb))
       partCols :+= TableSchema.BucketColumn
     }
 
@@ -634,18 +762,31 @@ final class TsdbEngine(
       .parquet(catalog.dataDir(name))
   }
 
-  /** The time layout rule, shared by [[append]] and [[compact]]: with a
-    * segment duration, a row lands in directory `__segment = floor(ts_ms /
-    * seg)`, so segment k holds [k·seg, (k+1)·seg). Returns the frame and
-    * its partition columns. */
+  /** The `__bucket` rule of PARTITION BY KEY/HASH/RANDOM, shared by
+    * [[append]] and the write buffer (reference partition/rule/key.rs:
+    * hash64 % n). */
+  private def bucketOf(pb: PartitionBy): Column = pb match {
+    case PartitionByKey(ks, n) =>
+      graft.plans.Partitioning.bucketColumn(ks.map(col), n)
+    case PartitionByHash(e, n) =>
+      graft.plans.Partitioning.bucketColumn(Seq(expr(e)), n)
+    case PartitionByRandom(n) =>
+      pmod(xxhash64(monotonically_increasing_id()), lit(n.toLong)).cast("int")
+  }
+
+  /** The time layout rule, shared by [[append]], [[compact]] and the
+    * write buffer: with a segment duration, a row lands in directory
+    * `__segment = floor(ts_ms / seg)`, so segment k holds
+    * [k·seg, (k+1)·seg). Returns the frame and its partition columns. */
   private def withSegment(df: DataFrame, s: TableSchema): (DataFrame, Seq[String]) =
-    s.options.segmentMillis match {
-      case Some(seg) =>
-        (df.withColumn(TableSchema.SegmentColumn,
-          floor(unix_millis(col(s.timestampKey)) / seg).cast(LongType)),
-          Seq(TableSchema.SegmentColumn))
+    segmentOf(s) match {
+      case Some(c) => (df.withColumn(TableSchema.SegmentColumn, c), Seq(TableSchema.SegmentColumn))
       case None => (df, Nil)
     }
+
+  private def segmentOf(s: TableSchema): Option[Column] =
+    s.options.segmentMillis.map(seg =>
+      floor(unix_millis(col(s.timestampKey)) / seg).cast(LongType))
 
   /** Parquet bloom filters on TAG columns — the Spark-native analogue of
     * the reference's per-SST Xor8 tag filters (sst/parquet/meta_data/
@@ -680,18 +821,23 @@ final class TsdbEngine(
     }
   }
 
-  /** First flush of a table created without `segment_duration`: sample the
-    * accumulated (pre-flush) storage, pick a segment duration from observed
-    * timestamp spacing and — when [[enablePkSampling]] and the table is
-    * append-mode (table_options.rs:521 support_sample_pk) — reorder the PK
-    * by ascending column cardinality, then physically re-layout the data
-    * into the new `__segment` directories. Mirrors the reference's sampling
-    * memtable flush (instance/flush_compaction.rs:355-400 + sampler.rs).
-    * A no-op once `segment_duration` is set: appends are already durable
-    * parquet here, so there is nothing else a flush must persist. */
+  /** Flush the table's write buffer to Parquet ([[flushBuffer]]). The
+    * first flush of a table created without `segment_duration` samples
+    * first: it reads the accumulated storage (buffer included), picks a
+    * segment duration from observed timestamp spacing and — when
+    * [[enablePkSampling]] and the table is append-mode
+    * (table_options.rs:521 support_sample_pk) — reorders the PK by
+    * ascending column cardinality. Rows already in Parquet are then
+    * re-laid out into the new `__segment` directories by a compaction,
+    * which takes the buffer along; a table with no files yet just flushes
+    * its buffer in the new layout. Mirrors the reference's sampling
+    * memtable flush (instance/flush_compaction.rs:355-400 + sampler.rs). */
   def flush(name: String, nowMs: Long = System.currentTimeMillis()): Unit = {
     val s = catalog.get(name)
-    if (s.options.segmentDuration.nonEmpty) return
+    if (s.options.segmentDuration.nonEmpty) {
+      withTableLock(name)(flushBuffer(name))
+      return
+    }
     val storage = readStorage(s)
     val tsMs = unix_millis(col(s.timestampKey))
     // distinct timestamps in time order, capped: one distinct + sort of the
@@ -720,7 +866,40 @@ final class TsdbEngine(
         }
       } else None
     catalog.applySampling(name, pkSuggestion, Sampler.durationString(durationMs))
-    compact(name, nowMs)
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(catalog.dataDir(name))))
+      compact(name, nowMs)
+    else withTableLock(name)(flushBuffer(name))
+  }
+
+  /** Write the whole buffer to Parquet as one generation flip, like
+    * compaction: the current generation is hard-linked into the next,
+    * the buffer lands there in one task (one file per segment, tag
+    * filters sized from the buffer's own distinct counts), and the
+    * manifest flips to it recording the buffer's highest sequence. Only
+    * then do the buffer and its log go. A crash before the flip leaves
+    * the manifest on the old generation and the log intact, so replay
+    * neither loses nor duplicates a row. Caller holds the table lock. */
+  private def flushBuffer(name: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val mem = buffered(name)
+    if (mem.isEmpty) return
+    val s = catalog.get(name)
+    val (gen, floor) = catalog.compactionState(name)
+    val cur = Paths.get(catalog.genDataDir(name, gen))
+    val next = Paths.get(catalog.genDataDir(name, gen + 1))
+    if (Files.exists(next)) GraftCatalog.deleteRecursively(next) // a crashed attempt
+    if (Files.isDirectory(cur)) GraftCatalog.linkTree(cur, next)
+    val partFields = segmentOf(s).map(_ => StructField(TableSchema.SegmentColumn, LongType)).toSeq ++
+      s.partitionBy.map(_ => graft.plans.Partitioning.bucketField)
+    val partCols = partFields.map(_.name)
+    val rows = GraftBridge.ofRows(spark,
+      bufferRelation(s, mem, s.storageStruct.fields.toSeq ++ partFields).newInstance())
+    val ndv = s.tagColumns.map(c => c.name -> mem.distinctCount(c.name)).toMap
+    val w = bloomOnTags(rows.coalesce(1).write.mode("append"), s, Some(ndv))
+    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(next.toString)
+    catalog.markCompacted(name, gen + 1, floor, Some(mem.seqs.max))
+    forgetBuffer(name)
+    gcSupersededGenerations(name, gen)
   }
 
   // ---------------- compaction / TTL purge ----------------
@@ -759,6 +938,7 @@ final class TsdbEngine(
     val s = catalog.get(name)
     val (gen, _) = catalog.compactionState(name)
     val seqFloor = catalog.nextSeqOf(name)
+    val mem = buffered(name) // absorbed: the rewrite reads it with the files
     val storage = readStorage(s)
 
     var df = s.options.updateMode match {
@@ -805,7 +985,9 @@ final class TsdbEngine(
     val newDir = catalog.genDataDir(name, gen + 1)
     val w = bloomOnTags(df.write.mode("overwrite"), s, None)
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(newDir)
-    catalog.markCompacted(name, gen + 1, seqFloor)
+    catalog.markCompacted(name, gen + 1, seqFloor,
+      if (mem.isEmpty) None else Some(mem.seqs.max))
+    if (!mem.isEmpty) forgetBuffer(name)
     // grace-period GC: keep the generation we just superseded (in-flight
     // readers may still hold plans over it) and anything superseded less
     // than genGraceMs ago; drop the rest
@@ -1051,9 +1233,10 @@ final class TsdbEngine(
 
   /** Consistent table snapshot → a portable directory (manifest + the
     * immutable current data generation, hard-linked where possible). See
-    * [[GraftCatalog.exportSnapshot]]; serialized against writers. */
+    * [[GraftCatalog.exportSnapshot]]; serialized against writers, and the
+    * write buffer is flushed first so the snapshot holds every row. */
   def exportSnapshot(name: String, destDir: String): Unit =
-    withTableLock(name) { catalog.exportSnapshot(name, destDir) }
+    withTableLock(name) { flushBuffer(name); catalog.exportSnapshot(name, destDir) }
 
   /** Restore/clone a snapshot directory as table `newName` (this engine's
     * warehouse — also the cross-environment restore path). */

@@ -28,14 +28,30 @@ case class TsidHash(children: Seq[Expression], columnIds: Seq[Int])
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
 
-  override def eval(input: InternalRow): Any = {
+  @transient private lazy val childTypes = children.map(_.dataType)
+
+  override def eval(input: InternalRow): Any =
+    TsidHash.hash(columnIds, childTypes, i => children(i).eval(input))
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(children = newChildren)
+}
+
+object TsidHash {
+  /** The tsid byte encoding and hash, stated once: the expression above
+    * and the engine's driver-side write stamp both call it. `value(i)` is
+    * tag `i`'s Catalyst value (UTF8String, Long, ...; null when absent)
+    * and `dataTypes(i)` its type; each non-null tag contributes its
+    * column id (LE int32), its byte length (LE int32) and its bytes. */
+  def hash(columnIds: Seq[Int], dataTypes: Seq[DataType], value: Int => Any): Long = {
     val buf = new java.io.ByteArrayOutputStream(64)
     var i = 0
-    while (i < children.length) {
-      val v = children(i).eval(input)
+    while (i < columnIds.length) {
+      val v = value(i)
       if (v != null) {
         writeIntLE(buf, columnIds(i))
-        val bytes = children(i).dataType match {
+        val bytes = dataTypes(i) match {
           case StringType => v.asInstanceOf[UTF8String].getBytes
           case BinaryType => v.asInstanceOf[Array[Byte]]
           case LongType | TimestampType => longBytes(v.asInstanceOf[Long])
@@ -64,12 +80,6 @@ case class TsidHash(children: Seq[Expression], columnIds: Seq[Int])
     a
   }
 
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
-}
-
-object TsidHash {
   /** tsid column from tag columns (with their schema positions as ids). */
   def tsid(tags: Seq[(Column, Int)]): Column =
     GraftBridge.col(TsidHash(tags.map(t => GraftBridge.expr(t._1)), tags.map(_._2)))

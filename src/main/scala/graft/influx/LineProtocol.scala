@@ -2,10 +2,7 @@ package graft.influx
 
 import graft.engine.TsdbEngine
 import graft.model.{ColumnSpec, DatumKind, UpdateMode}
-import org.apache.spark.sql.{Dataset, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.Dataset
 
 /** InfluxDB line protocol ingest (reference: proxy/src/influxdb/types.rs:
   * 491-540 groups lines per measurement+tagset into WriteTableRequests; the
@@ -15,8 +12,9 @@ import scala.jdk.CollectionConverters._
   * `measurement[,tag=v]* field=value[,field=value]* [timestamp-ns]`
   *
   * A write body is already on the driver, so it parses there, like the
-  * reference's request-thread parse: shapes, type widening and line counts
-  * cost no Spark job, and each measurement's append is one. Field types:
+  * reference's request-thread parse: shapes, type widening, line counts
+  * and the typed rows are plain Scala, and each measurement's rows go to
+  * the engine's write buffer, so a write runs no Spark job. Field types:
   * float (default), integer (`i` suffix), string (quoted), boolean. Tags
   * are strings (TAG columns). Timestamps are nanoseconds.
   */
@@ -73,13 +71,12 @@ object LineProtocol {
     ingestParsed(engine, lines.filter(isData).map(parseLine))
 
   /** Group parsed lines per measurement, auto-create tables (timestamp key
-    * `time`, tags TAG string, fields typed from first sight) and append
-    * each group through the engine write path (tsid + seq + segments).
-    * Returns rows appended per measurement. */
+    * `time`, tags TAG string, fields typed from first sight) and write
+    * each group's rows through the engine's shared write path (tsid + seq
+    * + write buffer). Returns rows written per measurement. */
   private def ingestParsed(
       engine: TsdbEngine, parsed: Seq[ParsedLine]): Map[String, Long] = {
     engine.limiter.checkInsertRule() // AnyInsert brake (protocol entry)
-    val spark = engine.spark
     // deterministic type merge for conflicting lines: widen by fixed
     // precedence (string > double > int64 > boolean)
     val precedence = Map("boolean" -> 0, "int64" -> 1, "double" -> 2, "string" -> 3)
@@ -89,9 +86,6 @@ object LineProtocol {
       case "boolean" => DatumKind.Boolean
       case _         => DatumKind.Double
     }
-    val rowSchema = StructType(Seq(StructField("_ns", LongType),
-      StructField("_tags", ArrayType(StringType)),
-      StructField("_fields", ArrayType(StringType))))
 
     parsed.groupBy(_.measurement).toSeq.sortBy(_._1).map { case (m, ps) =>
       val tagKeys = ps.flatMap(_.tags.map(_._1)).distinct.sorted
@@ -103,29 +97,22 @@ object LineProtocol {
       val wantedCols =
         tagKeys.map(k => ColumnSpec(k, DatumKind.String, isTag = true)) ++
         fieldNames.map(f => ColumnSpec(f, kindOf(fieldTypes(f))))
-      val tagVals = ps.map { p =>
+      // each value as its measurement-wide type (a narrower line's value
+      // widens: 1i in a double field is 1.0, anything in a string field
+      // keeps its text)
+      def typed(t: String, raw: String): Any = t match {
+        case "int64"   => raw.toLong
+        case "string"  => raw
+        case "boolean" => raw == "t"
+        case _         => raw.toDouble
+      }
+      val rows = ps.map { p =>
         val tagMap = p.tags.toMap
-        tagKeys.map(tagMap.getOrElse(_, null))
-      }
-      val rows = ps.zip(tagVals).map { case (p, tv) =>
         val fMap = p.fields.map(f => f._1 -> f._3).toMap
-        Row(p.tsNanos, tv, fieldNames.map(fMap.getOrElse(_, null)))
+        (Seq[Any](p.tsNanos / 1000L) ++ tagKeys.map(tagMap.getOrElse(_, null)) ++
+          fieldNames.map(f => fMap.get(f).map(typed(fieldTypes(f), _)).orNull)).toArray
       }
-      // values travel as strings; the casts are Spark's, as for any batch
-      val batch = spark.createDataFrame(rows.asJava, rowSchema).select(
-        expr("timestamp_micros(_ns div 1000)").as("time") +:
-        (tagKeys.zipWithIndex.map { case (k, i) => col("_tags")(i).as(k) } ++
-        fieldNames.zipWithIndex.map { case (f, i) =>
-          val c = col("_fields")(i)
-          (fieldTypes(f) match {
-            case "int64"   => c.cast(LongType)
-            case "string"  => c
-            case "boolean" => c === "t"
-            case _         => c.cast(DoubleType)
-          }).as(f)
-        }): _*)
-      engine.appendInferring(m, "time", UpdateMode.Overwrite, wantedCols, batch,
-        Some(TsdbEngine.distinctCounts(tagKeys, tagVals)))
+      engine.appendInferring(m, "time", UpdateMode.Overwrite, wantedCols, rows)
       m -> ps.length.toLong
     }.toMap
   }

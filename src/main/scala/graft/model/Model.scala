@@ -119,6 +119,14 @@ final case class TableOptions(
   def ttlMillis: Option[Long] = ttl.map(TableOptions.durationMillis)
   def segmentMillis: Option[Long] = segmentDuration.map(TableOptions.durationMillis)
 
+  /** `write_buffer_size` (bytes, default 32 MiB): a table's write buffer
+    * (the engine's memtable, filled by line protocol, OpenTSDB put and
+    * gRPC Write) is flushed to Parquet once its write-ahead-log bytes
+    * reach it, as the reference flushes a full memtable. */
+  def writeBufferSize: Long = raw.collectFirst {
+    case (k, v) if k.equalsIgnoreCase("write_buffer_size") => v.trim.toLong
+  }.getOrElse(TableOptions.ReferenceDefaults("write_buffer_size").toLong)
+
   /** The full option map the reference surfaces in SHOW CREATE TABLE
     * (table_options.rs to_raw_map: every knob, defaults filled in). Keys the
     * engine has no semantics for (arena_block_size, memtable_type, ...) are

@@ -2,11 +2,8 @@ package graft.opentsdb
 
 import graft.engine.TsdbEngine
 import graft.model.{ColumnSpec, DatumKind, UpdateMode}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{
-  ArrayType, DoubleType, LongType, StringType, StructField, StructType}
-import scala.jdk.CollectionConverters._
 import graft.promql.PromQL.SeriesTable
 
 /** OpenTSDB query frontend (reference: query_frontend/src/opentsdb/mod.rs).
@@ -337,8 +334,8 @@ object OpenTsdb {
     * A body held on the driver (an HTTP put) parses there; a Dataset of
     * bodies parses where it lives and its points are collected. Either
     * way the per-metric shapes, counts and rows are built on the driver
-    * and each metric's append is the only Spark job. Returns rows
-    * appended per metric.
+    * and go to the engine's write buffer, with no Spark job. Returns rows
+    * written per metric.
     */
   def put(engine: TsdbEngine, bodies: Dataset[String]): Map[String, Long] = {
     val spark = bodies.sparkSession
@@ -352,21 +349,16 @@ object OpenTsdb {
 
   private def putPoints(engine: TsdbEngine, points: Seq[PutPoint]): Map[String, Long] = {
     engine.limiter.checkInsertRule() // AnyInsert brake (protocol entry)
-    val rowSchema = StructType(Seq(StructField("_ms", LongType),
-      StructField("_tags", ArrayType(StringType)), StructField("_value", DoubleType)))
     points.groupBy(_.metric).toSeq.sortBy(_._1).map { case (m, ps) =>
       val tagKeys = ps.flatMap(_.tags.keys).distinct.sorted
       val wantedCols =
         tagKeys.map(k => ColumnSpec(k, DatumKind.String, isTag = true)) :+
         ColumnSpec("value", DatumKind.Double)
-      val tagVals = ps.map(p => tagKeys.map(p.tags.getOrElse(_, null)))
-      val rows = ps.zip(tagVals).map { case (p, tv) => Row(p.timestampMs, tv, p.value) }
-      val batch = engine.spark.createDataFrame(rows.asJava, rowSchema)
-        .select(expr("timestamp_micros(_ms * 1000)").as("timestamp") +:
-          col("_value").as("value") +:
-          tagKeys.zipWithIndex.map { case (k, i) => col("_tags")(i).as(k) }: _*)
-      engine.appendInferring(m, "timestamp", UpdateMode.Overwrite, wantedCols, batch,
-        Some(TsdbEngine.distinctCounts(tagKeys, tagVals)))
+      val rows = ps.map { p =>
+        (Seq[Any](p.timestampMs * 1000L) ++ tagKeys.map(p.tags.getOrElse(_, null)) :+
+          p.value).toArray
+      }
+      engine.appendInferring(m, "timestamp", UpdateMode.Overwrite, wantedCols, rows)
       m -> ps.length.toLong
     }.toMap
   }

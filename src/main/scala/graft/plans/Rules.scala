@@ -163,16 +163,25 @@ object DedupTagPushdown extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** Slide the predicate down to the scan through the shapes between the
-    * dedup window and its relation: projections (refs permitting) and the
+    * dedup window and its relation: projections (refs permitting), the
     * WindowGroupLimit Spark inserts for rank-limit filters (safe for
     * series-constant predicates: they drop whole (tsid, ts) partitions, so
-    * per-partition top-k is unchanged). */
+    * per-partition top-k is unchanged), and the union of a table's files
+    * with its write buffer (into each side, attributes mapped by
+    * position), so the file scan keeps its pushed-down filter. */
   private def pushThrough(node: LogicalPlan, pred: Expression): LogicalPlan =
     node match {
       case p: Project if pred.references.subsetOf(p.child.outputSet) =>
         p.copy(child = pushThrough(p.child, pred))
       case wgl: WindowGroupLimit =>
         wgl.copy(child = pushThrough(wgl.child, pred))
+      case u: Union if !u.byName && !u.allowMissingCol =>
+        u.withNewChildren(u.children.map { c =>
+          val toChild = AttributeMap(u.output.zip(c.output))
+          pushThrough(c, pred.transform {
+            case a: Attribute if toChild.contains(a) => toChild(a)
+          })
+        })
       case other => Filter(pred, other)
     }
 

@@ -427,8 +427,6 @@ final class GraftGrpcServer(
   private def doWrite(req: Pb.WriteRequest): Long = {
     engine.limiter.checkInsertRule() // AnyInsert brake (protocol entry)
     import graft.model.{ColumnSpec, DatumKind, UpdateMode}
-    import org.apache.spark.sql.functions.{col, expr}
-    val spark = engine.spark
     var success = 0L
     req.tables.foreach { t =>
       val fieldKind: Map[String, DatumKind.Value] = t.fieldNames.zipWithIndex.map {
@@ -442,9 +440,8 @@ final class GraftGrpcServer(
             case _                                => DatumKind.Double
           })
       }.toMap
-      val wanted =
-        t.tagNames.map(k => ColumnSpec(k, DatumKind.String, isTag = true)) ++
-        t.fieldNames.map(f => ColumnSpec(f, fieldKind(f)))
+      val wanted = (t.tagNames.map(k => ColumnSpec(k, DatumKind.String, isTag = true)) ++
+        t.fieldNames.map(f => ColumnSpec(f, fieldKind(f)))).distinctBy(_.name)
       // rows: (ts_ms, tag values by name, field values by name)
       val rows: Seq[(Long, Map[String, Any])] = t.entries.flatMap { e =>
         val tagVals: Map[String, Any] = e.tags.map(tag =>
@@ -456,18 +453,11 @@ final class GraftGrpcServer(
         }
       }
       if (rows.nonEmpty) {
-        import spark.implicits._
-        // values travel as strings; the shared append casts each to its
-        // table column's type
-        val names = wanted.map(_.name).distinct
-        val strRows = rows.map { case (ms, vals) =>
-          (ms, names.map(n => Option(vals.getOrElse(n, null)).map(_.toString).orNull))
-        }
-        val batch = strRows.toDF("_ms", "_vals").select(
-          expr("timestamp_micros(_ms * 1000)").as("timestamp") +:
-          names.indices.map(i => col("_vals")(i).as(names(i))): _*)
-        engine.appendInferring(t.table, "timestamp", UpdateMode.Append, wanted, batch,
-          Some(TsdbEngine.distinctCounts(names, strRows.map(_._2))))
+        // the shared write converts each value to its table column's type
+        engine.appendInferring(t.table, "timestamp", UpdateMode.Append, wanted,
+          rows.map { case (ms, vals) =>
+            (ms * 1000L +: wanted.map(c => vals.getOrElse(c.name, null))).toArray[Any]
+          })
         success += rows.length
       }
     }

@@ -375,15 +375,17 @@ final class GraftHttpServer(engine: TsdbEngine, port: Int = 0) {
   }
 
   // POST /debug/flush_memtable (http.rs:484-526): flushes every table's
-  // memtable to SSTs and answers {"success": [...], "failed": [...]}.
-  // This engine's write path is already durable parquet at append time —
-  // there is no memtable to flush — so every table trivially succeeds;
-  // the response shape (and "all data in SSTs afterwards" postcondition)
-  // match the reference.
+  // write buffer to Parquet (`TsdbEngine.flush`) and answers
+  // {"success": [...], "failed": [...]}: a table whose flush throws is
+  // listed under "failed" and the others still flush.
   route("/debug/flush_memtable") { x =>
-    val names = engine.catalog.list().sorted
-    json(x, names.map(jstr).mkString(
-      """{"success":[""", ",", """],"failed":[]}"""))
+    val (ok, failed) = engine.catalog.list().sorted.partition { n =>
+      try { engine.flush(n); true }
+      catch { case e: Exception =>
+        System.err.println(s"[flush_memtable] $n failed: ${e.getMessage}"); false }
+    }
+    json(x, ok.map(jstr).mkString("""{"success":[""", ",", "],") +
+      failed.map(jstr).mkString(""""failed":[""", ",", "]}"))
   }
 
   // GET /route/<table>: single-node routing — every existing table routes

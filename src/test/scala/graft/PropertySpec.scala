@@ -661,4 +661,37 @@ class PropertySpec extends SparkSpec {
     assert(tot.getLong(1) <= tot.getLong(0),
       s"v3 total clean ${tot.getLong(1)} > v2 ${tot.getLong(0)}")
   }
+
+  test("tsid: the driver-side write stamp agrees with TsidHash through Spark") {
+    import graft.model.{ColumnSpec, DatumKind, TableSchema}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import scala.jdk.CollectionConverters._
+    val value: Gen[String] = Gen.frequency(
+      2 -> Gen.const(null), 2 -> Gen.const(""), 4 -> Gen.alphaNumStr,
+      3 -> Gen.listOf(Gen.oneOf("é", "日本", "\u0000", " ", ",", "=", "😀", "ß"))
+        .map(_.mkString),
+      2 -> Gen.asciiPrintableStr)
+    val sample: Gen[(Int, List[List[String]])] = for {
+      k <- Gen.choose(1, 4)
+      rows <- Gen.listOfN(40, Gen.listOfN(k, value))
+    } yield (k, rows)
+    val prop = Prop.forAll(sample) { case (k, rows) =>
+      val tags = (0 until k).map(i => ColumnSpec(s"t$i", DatumKind.String, isTag = true))
+      val s = TableSchema("p", ColumnSpec("ts", DatumKind.Timestamp, isNullable = false) +: tags,
+        "ts", None)
+      val stamped = graft.engine.MemBatch.stamp(s, 0L, tags.map(_.name),
+        rows.map(r => (0L +: r).toArray[Any])).rows.map(_.last.asInstanceOf[Long])
+      val df = spark.createDataFrame(rows.map(r => Row.fromSeq(r)).asJava,
+        StructType(tags.map(c => StructField(c.name, StringType))))
+      val viaSpark = df.select(graft.functions.TsidHash.tsid(
+        tags.zipWithIndex.map { case (c, i) => (col(c.name), i + 1) })).collect()
+        .map(_.getLong(0)).toSeq
+      stamped == viaSpark
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(20)
+      .withInitialSeed(org.scalacheck.rng.Seed(7L)), prop)
+    assert(res.passed, res.status.toString)
+  }
 }

@@ -1591,7 +1591,7 @@ class ProtocolsSpec extends SparkSpec {
     assert(out(999L) == 0.0 && out(1000L) == 0.0 && out(4999L) == 0.0)
   }
 
-  test("protocol writes parse on the driver: one Spark job per table written") {
+  test("protocol writes parse on the driver: no Spark job per table written") {
     import graft.server.HttpApi
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
@@ -1626,11 +1626,11 @@ class ProtocolsSpec extends SparkSpec {
         """cpu,host=a usage=0.5 1704067200000000000
           |mem,host=a used=7i 1704067200000000000
           |cpu,host=b usage=0.9 1704067200000000000""".stripMargin))
-      assert(lp == 2, s"line protocol ran $lp jobs for two measurements")
+      assert(lp == 0, s"line protocol ran $lp jobs for two measurements")
       val put = jobsOf(HttpApi.handleOpentsdbPut(e,
         """[{"metric":"sys.cpu","timestamp":1704067200,"value":1.5,"tags":{"host":"a"}},
           | {"metric":"sys.cpu","timestamp":1704067260,"value":2.5,"tags":{"host":"b"}}]""".stripMargin))
-      assert(put == 1, s"OpenTSDB put ran $put jobs for one metric")
+      assert(put == 0, s"OpenTSDB put ran $put jobs for one metric")
       assert(e.read("cpu").count() == 2 && e.read("mem").count() == 1 &&
         e.read("sys.cpu").count() == 2)
     } finally sc.removeSparkListener(listener)

@@ -91,6 +91,7 @@ class TsdbEngineSpec extends SparkSpec {
     assert(graft.server.HttpApi.handleInfluxWrite(e, (0 until 100).map(h =>
       f"trickle,host=h$h%03d,region=r${h % 4} usage=$h.5 ${1702224000000000000L + h}")
       .mkString("\n")) == "")
+    e.flush("trickle")
     val trickle = parquetFooters(e.catalog.dataDir("trickle"))
     assert(trickle.map(_._3.sum).sum == 100)
     trickle.foreach { case (f, blocks, _) =>
