@@ -86,12 +86,22 @@ final class GraftCatalog(val warehouse: String) {
     * observed when the compaction SCAN started — a batch reserved after the
     * scan is not in the rewrite and must stay above the floor. `flushedSeq`,
     * when given, is the highest buffered sequence the new generation
-    * stores: the write-ahead log's records up to it are no longer needed. */
+    * stores: the write-ahead log's records up to it are no longer needed,
+    * so the flip is fsynced before this returns. */
   def markCompacted(name: String, newGen: Int, seqFloor: Long,
       flushedSeq: Option[Long] = None): Unit = synchronized {
     val m = manifest(name)
     writeManifest(name, m.copy(dataGen = Some(newGen), compactedSeq = Some(seqFloor),
-      flushedSeq = flushedSeq.orElse(m.flushedSeq)))
+      flushedSeq = flushedSeq.orElse(m.flushedSeq)), durable = true)
+  }
+
+  /** Raise the next unreserved sequence to at least `seq` (fsynced):
+    * write-ahead-log replay calls it, because [[reserveSeq]] does not
+    * fsync and an OS crash can roll the counter back below a logged
+    * write's sequence. */
+  def raiseNextSeq(name: String, seq: Long): Unit = synchronized {
+    val m = manifest(name)
+    if (m.nextSeq < seq) writeManifest(name, m.copy(nextSeq = seq), durable = true)
   }
 
   /** The highest buffered sequence stored in Parquet (-1 when none):
@@ -193,7 +203,7 @@ final class GraftCatalog(val warehouse: String) {
   def alterSetting(name: String, settings: Map[String, String]): Unit = synchronized {
     val m = manifest(name)
     val s = m.toSchema
-    val merged = TableOptions.fromRaw(s.options.raw ++ settings)
+    val merged = TableOptions.fromRaw(s.options.raw ++ settings).validated
     writeManifest(name, m.withSchema(s.copy(options = merged, version = s.version + 1)))
   }
 
@@ -281,16 +291,35 @@ final class GraftCatalog(val warehouse: String) {
     JsonMethods.parse(Files.readString(manifestPath(name))).extract[Manifest]
   }
 
-  private def writeManifest(name: String, m: Manifest): Unit = {
+  /** Replace the manifest atomically (tmp + rename). `durable` also
+    * fsyncs the new file before the rename and the directory after it. */
+  private def writeManifest(name: String, m: Manifest, durable: Boolean = false): Unit = {
     val tmp = manifestPath(name).resolveSibling("_manifest.json.tmp")
     Files.writeString(tmp, Serialization.writePretty(m))
+    if (durable) GraftCatalog.sync(tmp)
     Files.move(tmp, manifestPath(name),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    if (durable) GraftCatalog.sync(tmp.getParent)
   }
 }
 
 object GraftCatalog {
+  /** fsync a file or directory. */
+  def sync(p: Path): Unit = {
+    val ch = java.nio.channels.FileChannel.open(p, java.nio.file.StandardOpenOption.READ)
+    try ch.force(true) finally ch.close()
+  }
+
+  /** fsync every file and directory under `root`, directories last. */
+  def syncTree(root: Path): Unit = {
+    val s = Files.walk(root)
+    val (dirs, files) = try s.iterator().asScala.toSeq.partition(Files.isDirectory(_))
+      finally s.close()
+    files.foreach(sync)
+    dirs.reverse.foreach(sync)
+  }
+
   /** Recursive hard-link tree copy with per-file copy fallback (cross-
     * filesystem moves, filesystems without link support). */
   def linkTree(src: Path, dest: Path): Unit = {

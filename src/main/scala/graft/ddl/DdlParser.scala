@@ -305,7 +305,7 @@ object DdlParser {
     if (pk.forall(_.contains(TableSchema.TsidColumn)))
       cols = cols.filterNot(_.name == TableSchema.TsidColumn)
     CreateTable(
-      TableSchema(name, cols, ts, pk, TableOptions.fromRaw(opts), partition),
+      TableSchema(name, cols, ts, pk, TableOptions.fromRaw(opts).validated, partition),
       ifNotExists)
   }
 

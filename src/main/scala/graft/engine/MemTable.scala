@@ -66,9 +66,10 @@ private[graft] object MemBatch {
     * for absent); each value is converted to its table column's type, a
     * column the request lacks is NULL, and `tsid` is hashed from the tag
     * columns by [[TsidHash.hash]], the same function the write
-    * expression calls. */
+    * expression calls. `zone` is the session time zone, in which a
+    * zoneless timestamp string is read. */
   def stamp(s: TableSchema, seq: Long, names: Seq[String],
-      rows: Seq[Array[Any]]): MemBatch = {
+      rows: Seq[Array[Any]], zone: java.time.ZoneId): MemBatch = {
     val cols = s.columns.toIndexedSeq
     val src = cols.map { c =>
       if (c.name == s.timestampKey) 0
@@ -83,7 +84,7 @@ private[graft] object MemBatch {
       var i = 0
       while (i < cols.length) {
         val j = src(i)
-        v(i) = if (j < 0) null else if (j == 0) r(0) else toInternal(r(j), cols(i))
+        v(i) = if (j < 0) null else if (j == 0) r(0) else toInternal(r(j), cols(i), zone)
         i += 1
       }
       if (s.usesTsid)
@@ -95,8 +96,9 @@ private[graft] object MemBatch {
 
   /** A protocol value (String, Double, Long, Int, Boolean, bytes) as the
     * Catalyst value of column `c`, with the conversions Spark's ANSI cast
-    * allows; anything else fails the write. */
-  def toInternal(v: Any, c: ColumnSpec): Any = {
+    * allows (a string reaches a timestamp or date column through Spark's
+    * own parsers); anything else fails the write. */
+  def toInternal(v: Any, c: ColumnSpec, zone: java.time.ZoneId): Any = {
     def bad: Nothing = throw new IllegalArgumentException(
       s"cannot write ${v.getClass.getSimpleName} value '$v' into column '${c.name}' (${c.kind})")
     def long(lo: Long, hi: Long): Long = {
@@ -147,13 +149,11 @@ private[graft] object MemBatch {
       }
       case DatumKind.Timestamp => v match {
         case s: String =>
-          try DateTimeUtils.fromJavaTimestamp(java.sql.Timestamp.valueOf(s.trim))
-          catch { case _: IllegalArgumentException => bad }
+          DateTimeUtils.stringToTimestamp(UTF8String.fromString(s), zone).getOrElse(bad)
         case _ => bad
       }
       case DatumKind.Date => v match {
-        case s: String => try java.time.LocalDate.parse(s.trim).toEpochDay.toInt
-          catch { case _: java.time.DateTimeException => bad }
+        case s: String => DateTimeUtils.stringToDate(UTF8String.fromString(s)).getOrElse(bad)
         case _ => bad
       }
       case _ => bad
@@ -165,10 +165,12 @@ private[graft] object MemBatch {
   * memtable of the reference's write path (instance/write.rs:345-380).
   * The engine swaps versions under the table lock; readers take one
   * version and never see it change. */
-private[engine] final class MemTable(val batches: Vector[MemBatch], val bytes: Long) {
+private[engine] final class MemTable(
+    val batches: Vector[MemBatch], val bytes: Long, val rows: Long) {
   def isEmpty: Boolean = batches.isEmpty
   def seqs: Seq[Long] = batches.map(_.seq)
-  def add(b: MemBatch, size: Long): MemTable = new MemTable(batches :+ b, bytes + size)
+  def add(b: MemBatch, size: Long): MemTable =
+    new MemTable(batches :+ b, bytes + size, rows + b.rows.length)
 
   @volatile private var cached: (Seq[StructField], LocalRelation) = _
 
@@ -202,7 +204,7 @@ private[engine] final class MemTable(val batches: Vector[MemBatch], val bytes: L
 }
 
 private[engine] object MemTable {
-  val Empty = new MemTable(Vector.empty, 0L)
+  val Empty = new MemTable(Vector.empty, 0L, 0L)
 }
 
 /** A table's write-ahead log under `<table>/_wal/`: one length-prefixed,

@@ -108,6 +108,10 @@ final class TsdbEngine(
   private def walOf(name: String): Wal =
     wals.computeIfAbsent(name, n => new Wal(catalog.walDir(n)))
 
+  /** The tables whose write buffer holds rows, by name. */
+  def bufferedTables: Seq[String] =
+    memtables.asScala.collect { case (n, m) if !m.isEmpty => n }.toSeq.sorted
+
   /** Drop a table's buffer and log files; caller holds the table lock. */
   private def forgetBuffer(name: String): Unit = {
     memtables.remove(name)
@@ -116,13 +120,17 @@ final class TsdbEngine(
 
   // Recovery (the offset-log pattern): every logged write above the
   // manifest's stored mark is buffered again; a log whose records are all
-  // stored (a crash between the flip and the log delete) is deleted.
+  // stored (a crash between the flip and the log delete) is deleted. The
+  // manifest's sequence counter is not fsynced per write, so after an OS
+  // crash it can lag a logged record: it is raised past every replayed
+  // sequence before any new write reserves one.
   catalog.list().foreach { name =>
     val dir = catalog.walDir(name)
     if (java.nio.file.Files.isDirectory(dir)) {
       val mark = catalog.flushedSeq(name)
-      val live = Wal.replay(dir).map(p => (Wal.decode(p), p.length.toLong))
-        .filter(_._1.seq > mark)
+      val logged = Wal.replay(dir).map(p => (Wal.decode(p), p.length.toLong))
+      if (logged.nonEmpty) catalog.raiseNextSeq(name, logged.map(_._1.seq).max + 1)
+      val live = logged.filter(_._1.seq > mark)
       if (live.isEmpty) forgetBuffer(name)
       else memtables.put(name,
         live.foldLeft(MemTable.Empty) { case (m, (b, n)) => m.add(b, n) })
@@ -669,23 +677,49 @@ final class TsdbEngine(
     * registrations and reserves its sequence; the rows are stamped
     * (values converted to the column types, `tsid`) in plain Scala;
     * one log record is appended and fsynced; then the buffer takes the
-    * rows, and a buffer past `write_buffer_size` is flushed. */
+    * rows. The write is acknowledged from then on: a buffer past
+    * `write_buffer_size` or the engine's row budgets is flushed after it
+    * ([[flushOverBudget]]), and a flush that fails does not fail it. */
   def appendInferring(
       name: String, timestampKey: String, updateMode: UpdateMode.Value,
       wanted: Seq[ColumnSpec], rows: Seq[Array[Any]]): Unit = {
     ensureTable(name, timestampKey, updateMode, wanted)
-    withTableLock(name) {
+    val full = withTableLock(name) {
       limiter.checkWrite(name) // blocked tables refuse every write path
       invalidateRollups(name) // fresh raw writes must not be served stale
       val s = catalog.get(name)
+      val limit = s.options.writeBufferSize // a bad stored value fails before the log
       val seq = catalog.reserveSeq(name, 1)
-      val batch = MemBatch.stamp(s, seq, wanted.map(_.name), rows)
+      val batch = MemBatch.stamp(s, seq, wanted.map(_.name), rows, sessionZone)
       val record = Wal.encode(batch)
       walOf(name).append(seq, record)
       val mem = buffered(name).add(batch, record.length.toLong)
       memtables.put(name, mem)
-      if (mem.bytes >= s.options.writeBufferSize) flushBuffer(name)
+      mem.bytes >= limit || mem.rows >= TsdbEngine.BufferRowsPerTable
     }
+    flushOverBudget(if (full) Some(name) else None)
+  }
+
+  private def sessionZone: java.time.ZoneId =
+    org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+      spark.sessionState.conf.sessionLocalTimeZone)
+
+  /** Flush `full` and then, largest first, buffers until every table's
+    * together hold at most [[TsdbEngine.BufferRowsTotal]] rows. Runs after
+    * a buffered write is durable and visible, so a flush that fails is
+    * logged and left to the next flush or compaction: the rows stay in
+    * the buffer and the log, and the write still succeeds exactly once. */
+  private def flushOverBudget(full: Option[String]): Unit = {
+    def tryFlush(name: String): Unit =
+      try withTableLock(name)(flushBuffer(name))
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[graft] write buffer flush of '$name' failed: $e") }
+    full.foreach(tryFlush)
+    var total = memtables.values.asScala.map(_.rows).sum
+    if (total > TsdbEngine.BufferRowsTotal)
+      memtables.asScala.toSeq.map { case (n, m) => (n, m.rows) }.sortBy(-_._2)
+        .iterator.takeWhile(_ => total > TsdbEngine.BufferRowsTotal)
+        .foreach { case (n, rows) => tryFlush(n); total -= rows }
   }
 
   /** Create `name` if missing, else add the `wanted` columns it lacks;
@@ -876,7 +910,8 @@ final class TsdbEngine(
     * the buffer lands there in one task (one file per segment, tag
     * filters sized from the buffer's own distinct counts), and the
     * manifest flips to it recording the buffer's highest sequence. Only
-    * then do the buffer and its log go. A crash before the flip leaves
+    * once the new generation's files and that manifest are fsynced do the
+    * buffer and its log go. A crash before the flip leaves
     * the manifest on the old generation and the log intact, so replay
     * neither loses nor duplicates a row. Caller holds the table lock. */
   private def flushBuffer(name: String): Unit = {
@@ -897,6 +932,7 @@ final class TsdbEngine(
     val ndv = s.tagColumns.map(c => c.name -> mem.distinctCount(c.name)).toMap
     val w = bloomOnTags(rows.coalesce(1).write.mode("append"), s, Some(ndv))
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(next.toString)
+    GraftCatalog.syncTree(next) // durable before the log that holds the rows goes
     catalog.markCompacted(name, gen + 1, floor, Some(mem.seqs.max))
     forgetBuffer(name)
     gcSupersededGenerations(name, gen)
@@ -985,6 +1021,8 @@ final class TsdbEngine(
     val newDir = catalog.genDataDir(name, gen + 1)
     val w = bloomOnTags(df.write.mode("overwrite"), s, None)
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(newDir)
+    // absorbed rows must be durable in files before their log records go
+    if (!mem.isEmpty) GraftCatalog.syncTree(java.nio.file.Paths.get(newDir))
     catalog.markCompacted(name, gen + 1, seqFloor,
       if (mem.isEmpty) None else Some(mem.seqs.max))
     if (!mem.isEmpty) forgetBuffer(name)
@@ -1560,6 +1598,16 @@ final class TsdbEngine(
 }
 
 object TsdbEngine {
+  /** Row budgets of the write buffers: a table's buffer is flushed once
+    * it holds `BufferRowsPerTable` rows (or its `write_buffer_size` in log
+    * bytes, if that comes first), and the largest buffers are flushed
+    * while all tables' together hold more than `BufferRowsTotal`. Every
+    * query over a table folds its buffered rows on the driver, so the
+    * budgets bound that cost; SCALING.md §8.33 has the measurement they
+    * come from. */
+  val BufferRowsPerTable: Long = 16000L
+  val BufferRowsTotal: Long = 64000L
+
   /** Each named column's number of distinct values over rows held on the
     * driver, where `names(i)` is every row's column `i`: the `tagDistinct`
     * that a writer which built its rows passes to [[TsdbEngine.append]]. */

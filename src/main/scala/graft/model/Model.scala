@@ -119,13 +119,21 @@ final case class TableOptions(
   def ttlMillis: Option[Long] = ttl.map(TableOptions.durationMillis)
   def segmentMillis: Option[Long] = segmentDuration.map(TableOptions.durationMillis)
 
-  /** `write_buffer_size` (bytes, default 32 MiB): a table's write buffer
-    * (the engine's memtable, filled by line protocol, OpenTSDB put and
-    * gRPC Write) is flushed to Parquet once its write-ahead-log bytes
-    * reach it, as the reference flushes a full memtable. */
+  /** `write_buffer_size` (bytes, or a size such as `32MB`; default
+    * 32 MiB): a table's write buffer (the engine's memtable, filled by
+    * line protocol, OpenTSDB put and gRPC Write) is flushed to Parquet
+    * once its write-ahead-log bytes reach it, as the reference flushes a
+    * full memtable. The engine also flushes earlier, at its own row
+    * budgets (`TsdbEngine.BufferRowsPerTable`). */
   def writeBufferSize: Long = raw.collectFirst {
-    case (k, v) if k.equalsIgnoreCase("write_buffer_size") => v.trim.toLong
+    case (k, v) if k.equalsIgnoreCase("write_buffer_size") => TableOptions.sizeBytes(k, v)
   }.getOrElse(TableOptions.ReferenceDefaults("write_buffer_size").toLong)
+
+  /** These options, after checking every value that has engine meaning
+    * and is not already checked by [[TableOptions.fromRaw]]: CREATE and
+    * ALTER ... SET call it, so a bad value fails the DDL instead of a
+    * later write. */
+  def validated: TableOptions = { writeBufferSize; this }
 
   /** The full option map the reference surfaces in SHOW CREATE TABLE
     * (table_options.rs to_raw_map: every knob, defaults filled in). Keys the
@@ -158,6 +166,27 @@ object TableOptions {
     "ttl" -> "7d",
     "update_mode" -> "OVERWRITE",
     "write_buffer_size" -> "33554432")
+
+  /** A positive byte count, bare or with a 1024-based unit (`B`, `KB`,
+    * `MB`, `GB`; `KiB`-style spellings too), as the reference reads its
+    * size options. */
+  def sizeBytes(key: String, v: String): Long = {
+    val m = """(?i)(\d+)\s*(b|k|ki?b|m|mi?b|g|gi?b)?""".r
+    val n = v.trim match {
+      case m(n, u) =>
+        val unit = Option(u).map(_.toLowerCase.take(1)) match {
+          case None | Some("b") => 1L
+          case Some("k") => 1L << 10
+          case Some("m") => 1L << 20
+          case _ => 1L << 30
+        }
+        try Math.multiplyExact(n.toLong, unit)
+        catch { case _: ArithmeticException | _: NumberFormatException => -1L }
+      case _ => -1L
+    }
+    if (n <= 0) throw new IllegalArgumentException(s"bad $key '$v': expected a positive size")
+    n
+  }
 
   /** `7d` / `2h` / `30m` / `10s`-style duration strings. */
   def durationMillis(s: String): Long = {

@@ -374,12 +374,13 @@ final class GraftHttpServer(engine: TsdbEngine, port: Int = 0) {
     }
   }
 
-  // POST /debug/flush_memtable (http.rs:484-526): flushes every table's
-  // write buffer to Parquet (`TsdbEngine.flush`) and answers
+  // POST /debug/flush_memtable (http.rs:484-526): flushes every table
+  // whose write buffer holds rows to Parquet (`TsdbEngine.flush`; a table
+  // with nothing buffered keeps its files and schema) and answers
   // {"success": [...], "failed": [...]}: a table whose flush throws is
   // listed under "failed" and the others still flush.
   route("/debug/flush_memtable") { x =>
-    val (ok, failed) = engine.catalog.list().sorted.partition { n =>
+    val (ok, failed) = engine.bufferedTables.partition { n =>
       try { engine.flush(n); true }
       catch { case e: Exception =>
         System.err.println(s"[flush_memtable] $n failed: ${e.getMessage}"); false }

@@ -314,7 +314,14 @@ class HttpServerSpec extends SparkSpec {
     val tsid1 = withServer(base => check(base, Some(tsid0)))
     // flush, restart and check
     withServer { base =>
-      assert(post(s"$base/debug/flush_memtable", "").statusCode() == 200)
+      val ddl = () => tables.map(new graft.catalog.GraftCatalog(wh).showCreate(_))
+      val before = ddl()
+      val fl = post(s"$base/debug/flush_memtable", "")
+      assert(fl.statusCode() == 200)
+      // INSERT-only tables hold nothing buffered: no flush, no first-flush
+      // sampling, so their schema and options are unchanged
+      assert(mapper.readTree(fl.body()).get("success").size() == 0, fl.body())
+      assert(ddl() == before)
       check(base, Some(tsid1))
     }
     withServer(base => check(base, Some(tsid1)))

@@ -117,6 +117,95 @@ class MemTableSpec extends SparkSpec {
     assert(err.getMessage.contains("corrupt WAL record"), err.getMessage)
   }
 
+  test("a flush that fails after the write is durable does not fail the write") {
+    val e = new TsdbEngine(spark, tmpDir("mt-flushfail"))
+    e.execute(
+      s"""CREATE TABLE f (host string TAG, v double, ts timestamp NOT NULL,
+         |  TIMESTAMP KEY(ts)) ENGINE=Analytic
+         |WITH (update_mode='append', segment_duration='1h', write_buffer_size='1B')""".stripMargin)
+    val key = "spark.sql.parquet.output.committer.class"
+    spark.conf.set(key, classOf[FailingParquetCommitter].getName) // every Parquet write fails
+    try {
+      lp(e, "f", (0 until 20).map(i => ("h", T0 + i, 1.0)))
+      lp(e, "f", (0 until 10).map(i => ("g", T0 + i, 2.0)))
+      assert(e.read("f").count() == 30)
+      assert(e.bufferedTables == Seq("f"))
+      assert(!Files.exists(Paths.get(e.catalog.dataDir("f"))), "a failed flush left files")
+      val err = intercept[Exception](e.flush("f"))
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("injected")), err.toString)
+    } finally spark.conf.unset(key)
+    // the next write's threshold flush takes every buffered row along
+    lp(e, "f", Seq(("k", T0, 3.0)))
+    assert(e.bufferedTables.isEmpty && walFiles(e, "f").isEmpty)
+    assert(e.read("f").count() == 31)
+    assert(new TsdbEngine(spark, e.warehouse).read("f").count() == 31)
+  }
+
+  test("write_buffer_size is checked by CREATE and ALTER and accepts size units") {
+    val e = new TsdbEngine(spark, tmpDir("mt-wbs"))
+    def create(t: String, v: String) = e.execute(
+      s"CREATE TABLE $t (v double, ts timestamp NOT NULL, TIMESTAMP KEY(ts)) " +
+        s"ENGINE=Analytic WITH (write_buffer_size='$v')")
+    create("a", "32MB")
+    assert(e.catalog.get("a").options.writeBufferSize == (32L << 20))
+    create("b", "4096")
+    assert(e.catalog.get("b").options.writeBufferSize == 4096L)
+    Seq("lots", "0", "-1", "99999999999999999999").foreach { v =>
+      intercept[IllegalArgumentException](create("c", v))
+      assert(!e.catalog.exists("c"))
+    }
+    intercept[IllegalArgumentException](
+      e.execute("ALTER TABLE b MODIFY SETTING write_buffer_size='x'"))
+    assert(e.catalog.get("b").options.writeBufferSize == 4096L)
+    e.execute("ALTER TABLE b MODIFY SETTING write_buffer_size='1KiB'")
+    assert(e.catalog.get("b").options.writeBufferSize == 1024L)
+  }
+
+  test("replay raises the sequence counter past every logged write") {
+    val wh = tmpDir("mt-seq")
+    val a = new TsdbEngine(spark, wh)
+    segTable(a, "q")
+    lp(a, "q", Seq(("h", T0, 1.0)))
+    lp(a, "q", Seq(("h", T0, 2.0)))
+    val logged = a.catalog.nextSeqOf("q") - 1
+    // an OS crash lost the unsynced counter update of both writes
+    val mf = Paths.get(a.catalog.dataDir("q")).resolveSibling("_manifest.json")
+    Files.writeString(mf, Files.readString(mf).replaceAll("\"nextSeq\"\\s*:\\s*\\d+", "\"nextSeq\" : 0"))
+    assert(a.catalog.nextSeqOf("q") == 0)
+    val b = new TsdbEngine(spark, wh)
+    assert(b.catalog.nextSeqOf("q") > logged)
+    // the next write is newer than both logged ones: it wins alone
+    lp(b, "q", Seq(("h", T0, 3.0)))
+    def values(e: TsdbEngine) = e.read("q").collect().map(_.getAs[Double]("v")).toSeq
+    assert(values(b) == Seq(3.0))
+    b.flush("q")
+    assert(values(new TsdbEngine(spark, wh)) == Seq(3.0))
+  }
+
+  test("buffers flush at the per-table and the all-tables row budgets") {
+    val e = new TsdbEngine(spark, tmpDir("mt-budget"))
+    val per = TsdbEngine.BufferRowsPerTable.toInt
+    def write(t: String, rows: Int, from: Int = 0): Unit =
+      lp(e, t, (from until from + rows).map(i => (s"h${i % 50}", T0 + i * 10L, i.toDouble)))
+    segTable(e, "p", mode = "append")
+    write("p", per - 1)
+    assert(e.bufferedTables == Seq("p"))
+    write("p", 1, from = per - 1)
+    assert(e.bufferedTables.isEmpty, "the table's budget did not flush it")
+    assert(e.read("p").count() == per)
+    // tables below their own budget, together over the total one
+    val n = (TsdbEngine.BufferRowsTotal / (per - 1)).toInt + 1
+    val tables = (0 until n).map(i => s"g$i")
+    tables.foreach(segTable(e, _, mode = "append"))
+    tables.zipWithIndex.foreach { case (t, i) => write(t, per - 1 - i) }
+    val left = tables.filter(e.bufferedTables.contains)
+    assert(left.nonEmpty && left.length < n)
+    assert(tables.filterNot(left.contains) == tables.take(n - left.length),
+      "the largest buffers were not the ones flushed")
+    tables.zipWithIndex.foreach { case (t, i) => assert(e.read(t).count() == per - 1 - i) }
+  }
+
   test("a column added after a buffered write reads NULL, before and after the flush") {
     val e = new TsdbEngine(spark, tmpDir("mt-schema"))
     LineProtocol.ingest(e, Seq(s"s,host=a v=1.0 ${T0 * 1000000L}"))
@@ -206,4 +295,13 @@ class MemTableSpec extends SparkSpec {
     assert(e.read("cc").count() == 24L * per)
     assert(new TsdbEngine(spark, e.warehouse).read("cc").count() == 24L * per)
   }
+}
+
+/** A Parquet output committer whose job setup fails: with it set as
+  * `spark.sql.parquet.output.committer.class`, every Parquet write fails. */
+class FailingParquetCommitter(
+    out: org.apache.hadoop.fs.Path, ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+    extends org.apache.parquet.hadoop.ParquetOutputCommitter(out, ctx) {
+  override def setupJob(job: org.apache.hadoop.mapreduce.JobContext): Unit =
+    throw new java.io.IOException("injected Parquet write failure")
 }

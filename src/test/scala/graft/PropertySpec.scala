@@ -682,7 +682,7 @@ class PropertySpec extends SparkSpec {
       val s = TableSchema("p", ColumnSpec("ts", DatumKind.Timestamp, isNullable = false) +: tags,
         "ts", None)
       val stamped = graft.engine.MemBatch.stamp(s, 0L, tags.map(_.name),
-        rows.map(r => (0L +: r).toArray[Any])).rows.map(_.last.asInstanceOf[Long])
+        rows.map(r => (0L +: r).toArray[Any]), java.time.ZoneOffset.UTC).rows.map(_.last.asInstanceOf[Long])
       val df = spark.createDataFrame(rows.map(r => Row.fromSeq(r)).asJava,
         StructType(tags.map(c => StructField(c.name, StringType))))
       val viaSpark = df.select(graft.functions.TsidHash.tsid(
@@ -692,6 +692,36 @@ class PropertySpec extends SparkSpec {
     }
     val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(20)
       .withInitialSeed(org.scalacheck.rng.Seed(7L)), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("write stamp: strings reach timestamp and date columns as Spark's cast reads them") {
+    import graft.model.{ColumnSpec, DatumKind}
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import scala.util.Try
+    val zoned: Gen[String] = for {
+      date <- Gen.oneOf("2024-01-05", "2024-1-5", "2024", "2024-02", "1999-12-31", "2024-13-01")
+      sep <- Gen.oneOf(" ", "T")
+      time <- Gen.oneOf("", "12:34", "12:34:56", "12:34:56.789", "1:2:3", "25:00:00")
+      zone <- Gen.oneOf("", "Z", "+01:00", " UTC", "-0800", "America/New_York")
+      pad <- Gen.oneOf("", " ")
+    } yield pad + date + (if (time.isEmpty) "" else sep + time) + zone + pad
+    val value: Gen[String] = Gen.frequency(8 -> zoned, 1 -> Gen.alphaNumStr, 1 -> Gen.const(""))
+    val ts = ColumnSpec("c", DatumKind.Timestamp)
+    val date = ColumnSpec("c", DatumKind.Date)
+    val utc = java.time.ZoneOffset.UTC
+    val prop = Prop.forAll(Gen.listOfN(30, value)) { vs =>
+      val df = spark.createDataFrame(vs.map(Tuple1(_))).toDF("s")
+      val viaSpark = df.selectExpr("unix_micros(try_cast(s AS timestamp))",
+        "unix_date(try_cast(s AS date))").collect()
+      vs.zip(viaSpark).forall { case (v, r) =>
+        val t = Try(graft.engine.MemBatch.toInternal(v, ts, utc)).toOption
+        val d = Try(graft.engine.MemBatch.toInternal(v, date, utc)).toOption
+        t == Option(r.get(0)) && d == Option(r.get(1))
+      }
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(20)
+      .withInitialSeed(org.scalacheck.rng.Seed(11L)), prop)
     assert(res.passed, res.status.toString)
   }
 }
