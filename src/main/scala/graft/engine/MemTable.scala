@@ -6,11 +6,12 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, StandardOpenOption}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
@@ -172,19 +173,22 @@ private[engine] final class MemTable(
   def add(b: MemBatch, size: Long): MemTable =
     new MemTable(batches :+ b, bytes + size, rows + b.rows.length)
 
-  @volatile private var cached: (Seq[StructField], LocalRelation) = _
+  @volatile private var cached: (Seq[StructField], LogicalRDD) = _
 
-  /** The buffer as a local relation with the columns `fields`, built once
-    * per version and field list. `projection` maps a row over `struct`
-    * (a table's storage columns, whose attributes it is given) to one
-    * over `fields`. */
-  def relation(struct: StructType, fields: Seq[StructField])(
-      projection: Seq[Attribute] => InternalRow => InternalRow): LocalRelation = {
+  /** The buffer as a one-partition scan with the columns `fields`, built
+    * once per version and field list. `projection` maps a row over
+    * `struct` (a table's storage columns, whose attributes it is given)
+    * to one over `fields`. The scan is not a `LocalRelation`: Spark would
+    * fold every query's projections and filters into one by evaluating
+    * them over each buffered row on the driver, per query (SCALING.md
+    * §8.33); here the one task evaluates them. */
+  def relation(spark: SparkSession, struct: StructType, fields: Seq[StructField])(
+      projection: Seq[Attribute] => InternalRow => InternalRow): LogicalRDD = {
     val c = cached
     if (c != null && c._1 == fields) c._2
     else {
       lazy val project = projection(nullableAttributes(struct.fields.toSeq))
-      val rel = LocalRelation(nullableAttributes(fields),
+      val rel = GraftBridge.rowScan(spark, nullableAttributes(fields),
         batches.flatMap(_.projectedTo(struct, fields, project)))
       cached = (fields, rel)
       rel
@@ -221,7 +225,7 @@ private[engine] final class Wal(dir: Path) {
       Files.createDirectories(dir)
       ch = FileChannel.open(dir.resolve(f"$seq%020d.log"), StandardOpenOption.CREATE,
         StandardOpenOption.WRITE, StandardOpenOption.APPEND)
-      Wal.syncDir(dir) // the new file's directory entry is durable too
+      graft.catalog.GraftCatalog.sync(dir) // the new file's directory entry is durable too
     }
     val crc = new java.util.zip.CRC32()
     crc.update(payload)
@@ -255,11 +259,6 @@ private[engine] object Wal {
         .toSeq.sortBy(_.getFileName.toString)
       finally s.close()
     }
-
-  private def syncDir(dir: Path): Unit = {
-    val d = FileChannel.open(dir, StandardOpenOption.READ)
-    try d.force(true) finally d.close()
-  }
 
   /** Every record payload under `dir`, in write order. A record cut off
     * at the end of the last file is a write that was never acknowledged:

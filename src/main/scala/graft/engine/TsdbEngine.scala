@@ -377,15 +377,11 @@ final class TsdbEngine(
 
   graft.functions.GraftFunctions.register(spark)
   // engine optimizer rules: Exact/Inexact dedup pushdown + KEY/HASH bucket
-  // pruning (both no-ops on plans without engine shapes). Spark's own
-  // ConvertToLocalRelation runs after them, so a tag filter the pushdown
-  // lands on a write buffer's local relation is applied while planning
-  // and the tasks carry only the matching buffered rows.
+  // pruning (both no-ops on plans without engine shapes)
   if (!spark.experimental.extraOptimizations.contains(graft.plans.DedupTagPushdown))
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations ++
-        Seq(graft.plans.DedupTagPushdown, graft.plans.BucketPruning,
-          org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation)
+        Seq(graft.plans.DedupTagPushdown, graft.plans.BucketPruning)
 
   /** Execute a script (one or more ;-separated statements); returns the
     * result of the last statement. */
@@ -538,13 +534,14 @@ final class TsdbEngine(
     }
   }
 
-  /** A write buffer as a local relation with the columns `fields`: storage
+  /** A write buffer as a one-partition scan with the columns `fields`: storage
     * columns, and `__segment` and `__bucket` by the rules every write
     * applies. Evaluated once per buffer version, so a query plans over
     * stored rows instead of re-deriving them. */
   private def bufferRelation(
-      s: TableSchema, mem: MemTable, fields: Seq[StructField]): LocalRelation =
-    mem.relation(s.storageStruct, fields) { raw =>
+      s: TableSchema, mem: MemTable, fields: Seq[StructField]
+  ): org.apache.spark.sql.execution.LogicalRDD =
+    mem.relation(spark, s.storageStruct, fields) { raw =>
       val derived = Map(TableSchema.SegmentColumn -> segmentOf(s),
         TableSchema.BucketColumn -> s.partitionBy.map(bucketOf))
       val Project(exprs, _) = GraftBridge.plan(
@@ -930,7 +927,7 @@ final class TsdbEngine(
     val rows = GraftBridge.ofRows(spark,
       bufferRelation(s, mem, s.storageStruct.fields.toSeq ++ partFields).newInstance())
     val ndv = s.tagColumns.map(c => c.name -> mem.distinctCount(c.name)).toMap
-    val w = bloomOnTags(rows.coalesce(1).write.mode("append"), s, Some(ndv))
+    val w = bloomOnTags(rows.write.mode("append"), s, Some(ndv))
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(next.toString)
     GraftCatalog.syncTree(next) // durable before the log that holds the rows goes
     catalog.markCompacted(name, gen + 1, floor, Some(mem.seqs.max))
@@ -1602,9 +1599,9 @@ object TsdbEngine {
     * it holds `BufferRowsPerTable` rows (or its `write_buffer_size` in log
     * bytes, if that comes first), and the largest buffers are flushed
     * while all tables' together hold more than `BufferRowsTotal`. Every
-    * query over a table folds its buffered rows on the driver, so the
-    * budgets bound that cost; SCALING.md §8.33 has the measurement they
-    * come from. */
+    * query over a table reads all of its buffered rows in one task, and
+    * the driver holds every buffer, so the budgets bound both; SCALING.md
+    * §8.33 has the measurement they come from. */
   val BufferRowsPerTable: Long = 16000L
   val BufferRowsTotal: Long = 64000L
 

@@ -19,6 +19,18 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A one-partition scan over rows held on the driver. Unlike a
+    * `LocalRelation`, the optimizer does not evaluate a query's
+    * projections and filters over its rows while planning: its task does.
+    * Its size estimate is a `LocalRelation`'s. */
+  def rowScan(spark: SparkSession, output: Seq[catalyst.expressions.Attribute],
+      rows: Seq[catalyst.InternalRow]): execution.LogicalRDD = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val size = output.map(_.dataType.defaultSize.toLong).sum * rows.length
+    execution.LogicalRDD(output, s.sparkContext.parallelize(rows, 1))(s,
+      Some(catalyst.plans.logical.Statistics(BigInt(math.max(1L, size)))))
+  }
+
   /** The analyzed logical plan behind a DataFrame. */
   def plan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
