@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *   sbt 'runMain graft.Profile q273_ivf_rebalance,q133_ann_pq 3 plans/r11'
+  *   sbt 'runMain graft.Profile q273_ivf_rebalance,q133_ann_pq 3 plans/r12'
   * (3rd arg optional: directory to write <name>_plan.txt explain dumps)
   */
 object Profile {

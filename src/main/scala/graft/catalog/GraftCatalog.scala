@@ -62,25 +62,25 @@ final class GraftCatalog(val warehouse: String) {
   /** Next unassigned ingest sequence (== number of batches ever reserved). */
   def nextSeqOf(name: String): Long = manifest(name).nextSeq
 
-  /** False iff every ingested batch is already covered by the compaction seq
-    * floor — the read path can skip the dedup window (reference: compacted
-    * SSTs need no merge-dedup, compaction/mod.rs:78-128). */
-  def needsDedup(name: String): Boolean = {
-    val m = manifest(name)
-    m.nextSeq > m.compactedSeq.getOrElse(0L)
+  /** Read-consistency fingerprint: any committed append, flush or
+    * compaction flip changes it. A reader that wants to SKIP the dedup
+    * window compares the fingerprint from before and after pinning its
+    * file listing — equality proves no state transition committed across
+    * the listing, closing the check-then-list race (appends reserve their
+    * seq BEFORE files land, so a changed manifest is always visible by the
+    * second look). */
+  def readFingerprint(name: String): GraftCatalog.Fingerprint = synchronized {
+    fingerprintOf(manifest(name))
   }
 
-  /** Read-consistency fingerprint (dataGen, compactedSeq, nextSeq): any
-    * committed append or compaction flip changes it. A reader that wants
-    * to SKIP the dedup window compares the fingerprint from before and
-    * after pinning its file listing — equality proves no state transition
-    * committed across the listing, closing the check-then-list race
-    * (appends reserve their seq BEFORE files land, so a changed manifest
-    * is always visible by the second look). */
-  def readFingerprint(name: String): (Int, Long, Long) = synchronized {
+  /** The schema and the [[readFingerprint]] from one manifest read. */
+  def readState(name: String): (TableSchema, GraftCatalog.Fingerprint) = synchronized {
     val m = manifest(name)
-    (m.dataGen.getOrElse(0), m.compactedSeq.getOrElse(0L), m.nextSeq)
+    (m.toSchema, fingerprintOf(m))
   }
+
+  private def fingerprintOf(m: Manifest) =
+    GraftCatalog.Fingerprint(m.dataGen.getOrElse(0), m.compactedSeq.getOrElse(0L), m.nextSeq)
 
   /** Flip the manifest to the new generation. The seq floor is the nextSeq
     * observed when the compaction SCAN started — a batch reserved after the
@@ -305,6 +305,11 @@ final class GraftCatalog(val warehouse: String) {
 }
 
 object GraftCatalog {
+  /** A table's storage state as a reader sees it: the data generation,
+    * the compaction sequence floor (rows below it are physically deduped)
+    * and the next unreserved sequence. */
+  final case class Fingerprint(dataGen: Int, compactedSeq: Long, nextSeq: Long)
+
   /** fsync a file or directory. */
   def sync(p: Path): Unit = {
     val ch = java.nio.channels.FileChannel.open(p, java.nio.file.StandardOpenOption.READ)

@@ -8,7 +8,14 @@ import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, StandardOpenOption}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.expressions.{
+  Attribute, BoundReference, Expression, GenericInternalRow, Not, Predicate, UnsafeProjection,
+  UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{
+  CodegenContext, ExprCode, FalseLiteral, GenerateUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.LogicalRDD
@@ -174,6 +181,7 @@ private[engine] final class MemTable(
     new MemTable(batches :+ b, bytes + size, rows + b.rows.length)
 
   @volatile private var cached: (Seq[StructField], LogicalRDD) = _
+  @volatile private var newest: (Seq[StructField], Seq[String], LogicalRDD, BufferKeys) = _
 
   /** The buffer as a one-partition scan with the columns `fields`, built
     * once per version and field list. `projection` maps a row over
@@ -181,19 +189,58 @@ private[engine] final class MemTable(
     * to one over `fields`. The scan is not a `LocalRelation`: Spark would
     * fold every query's projections and filters into one by evaluating
     * them over each buffered row on the driver, per query (SCALING.md
-    * §8.33); here the one task evaluates them. */
+    * §8.33); here the one task evaluates them. Every buffered version of
+    * a key is in it: compaction, flush and the dedup window read this. */
   def relation(spark: SparkSession, struct: StructType, fields: Seq[StructField])(
       projection: Seq[Attribute] => InternalRow => InternalRow): LogicalRDD = {
     val c = cached
     if (c != null && c._1 == fields) c._2
     else {
-      lazy val project = projection(nullableAttributes(struct.fields.toSeq))
       val rel = GraftBridge.rowScan(spark, nullableAttributes(fields),
-        batches.flatMap(_.projectedTo(struct, fields, project)))
+        rowsAs(struct, fields, projection))
       cached = (fields, rel)
       rel
     }
   }
+
+  /** Like [[relation]], but only each primary key's newest row (the
+    * newest `(__seq, __subseq)`, the row the dedup window keeps), plus the
+    * set of those keys as [[BufferKeys]]. Built on the first such read of
+    * a version, never by a write. Batches are held in sequence order and
+    * a batch's rows in `__subseq` order, so a key's last row is its
+    * newest. */
+  def newestRows(spark: SparkSession, struct: StructType, fields: Seq[StructField],
+      pk: Seq[String])(
+      projection: Seq[Attribute] => InternalRow => InternalRow): (LogicalRDD, BufferKeys) = {
+    val c = newest
+    if (c != null && c._1 == fields && c._2 == pk) (c._3, c._4)
+    else {
+      val rows = rowsAs(struct, fields, projection)
+      val keyOf = UnsafeProjection.create(BufferKeys.normalized(pk.map { n =>
+        val i = fields.indexWhere(_.name == n)
+        BoundReference(i, fields(i).dataType, nullable = true)
+      }))
+      val last = new java.util.HashMap[UnsafeRow, Integer]()
+      rows.indices.foreach(i => last.put(keyOf(rows(i)).copy(), i))
+      val keep = last.values.asScala.map(_.intValue).toArray.sorted
+      val rel = GraftBridge.rowScan(spark, nullableAttributes(fields), keep.map(rows).toSeq)
+      val keys = new BufferKeys(
+        spark.sparkContext.broadcast(new java.util.HashSet[UnsafeRow](last.keySet)))
+      newest = (fields, pk, rel, keys)
+      (rel, keys)
+    }
+  }
+
+  private def rowsAs(struct: StructType, fields: Seq[StructField],
+      projection: Seq[Attribute] => InternalRow => InternalRow): IndexedSeq[InternalRow] = {
+    lazy val project = projection(nullableAttributes(struct.fields.toSeq))
+    batches.flatMap(_.projectedTo(struct, fields, project))
+  }
+
+  /** True when the buffer holds exactly the sequences `[from, until)`:
+    * every batch reserved in that range, and none outside it. */
+  def holdsExactly(from: Long, until: Long): Boolean =
+    batches.length == until - from && batches.forall(b => b.seq >= from && b.seq < until)
 
   private def nullableAttributes(fields: Seq[StructField]): Seq[Attribute] =
     DataTypeUtils.toAttributes(StructType(fields.map(_.copy(nullable = true))))
@@ -209,6 +256,61 @@ private[engine] final class MemTable(
 
 private[engine] object MemTable {
   val Empty = new MemTable(Vector.empty, 0L, 0L)
+}
+
+/** A buffer version's primary keys (as the UnsafeRows of
+  * [[BufferKeys.normalized]] key columns), shipped to tasks once as a
+  * broadcast. Equal by identity of the version's build, so a plan that
+  * tests against it does not grow or re-canonicalize with the keys. */
+final class BufferKeys(keys: Broadcast[java.util.HashSet[UnsafeRow]]) extends Serializable {
+  private val id = BufferKeys.ids.incrementAndGet()
+
+  def contains(key: UnsafeRow): Boolean = keys.value.contains(key)
+
+  /** `pk` (a row's primary-key columns, in the key order) is not among
+    * the keys. */
+  def excludes(pk: Seq[Expression]): Expression = Not(BufferedKey(BufferKeys.normalized(pk), this))
+
+  override def equals(o: Any): Boolean = o match {
+    case k: BufferKeys => k.id == id
+    case _ => false
+  }
+  override def hashCode: Int = java.lang.Long.hashCode(id)
+  override def toString: String = s"buffer#$id"
+}
+
+private[engine] object BufferKeys {
+  private val ids = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Key columns as the dedup window partitions them: a float or double
+    * value's -0.0 and NaNs are normalized; NULLs compare equal. */
+  def normalized(pk: Seq[Expression]): Seq[Expression] = pk.map(e => e.dataType match {
+    case FloatType | DoubleType => NormalizeNaNAndZero(e)
+    case _ => e
+  })
+}
+
+/** True when a row's key (`children`, the normalized key columns) is in
+  * `keys`: the key is written as an `UnsafeRow` and looked up in the
+  * broadcast set. */
+private[engine] case class BufferedKey(children: Seq[Expression], keys: BufferKeys)
+    extends Predicate {
+  override def nullable: Boolean = false
+
+  @transient private lazy val keyOf = UnsafeProjection.create(children)
+
+  override def eval(input: InternalRow): Any = keys.contains(keyOf(input))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val set = ctx.addReferenceObj("bufferKeys", keys)
+    val key = GenerateUnsafeProjection.createCode(ctx, children)
+    ev.copy(code = code"""
+      ${key.code}
+      boolean ${ev.value} = $set.contains(${key.value});""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
 }
 
 /** A table's write-ahead log under `<table>/_wal/`: one length-prefixed,

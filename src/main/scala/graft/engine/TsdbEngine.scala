@@ -8,6 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{
   Between, BinaryComparison, Expression, In, InSet, Not, UnsafeProjection,
   Literal => CLiteral}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.plans.logical.{
   Filter, LocalRelation, LogicalPlan, Project, Union}
@@ -97,7 +98,8 @@ final class TsdbEngine(
     * write-ahead logs. Line protocol, OpenTSDB put and gRPC Write land
     * here ([[appendInferring]] over driver rows): one fsynced log record
     * plus an in-memory buffer version, no Spark job. Every reader sees the
-    * buffer through [[readStorage]]; it leaves memory only through a
+    * buffer ([[withBuffer]], or [[newestOverFiles]] for a [[read]] over
+    * compacted files); it leaves memory only through a
     * compaction or a flush ([[flushBuffer]]) whose manifest flip records
     * the highest sequence stored, after which its log records are
     * deleted. Both maps change under the table lock only. */
@@ -317,7 +319,7 @@ final class TsdbEngine(
       else lit(-1L)
     // input_file_name() is a file: URI with a variable number of slashes;
     // normalize to a plain absolute path before stripping the table dir
-    val perFile = readFiles(s)
+    val perFile = readFiles(s, dir.toString)
       .groupBy(expr(
         s"substring(regexp_replace(input_file_name(), '^file:/+', '/'), " +
           s"length('${dir.toString}') + 2)")
@@ -436,36 +438,45 @@ final class TsdbEngine(
   /** Resolved user-facing DataFrame for a table: storage scan + TTL filter +
     * (overwrite mode) newest-sequence-wins dedup, projected back to the
     * user schema. Mirrors the reference's merge-dedup read
-    * (analytic_engine/src/row_iter/dedup.rs) as a window over the PK —
-    * filters composed on top stay correct because they apply after dedup
-    * (the reference's "Inexact filter" contract, provider.rs:335-351).
-    */
+    * (analytic_engine/src/row_iter/dedup.rs), where compacted SSTs need
+    * no dedup and the newer source wins.
+    *
+    * An overwrite table skips the dedup window while its write buffer
+    * holds exactly the sequences `[compactedSeq, nextSeq)`: the files then
+    * hold one row per key, each older than any buffered row, so the read
+    * is [[newestOverFiles]] (the bare file scan when the buffer is empty).
+    * "Exactly", because a buffer version taken before a compaction
+    * absorbed it can be older than a direct append that the compaction
+    * stored. Otherwise (a flush or a direct Parquet append since the last
+    * compaction) it is the window over files ∪ buffer ([[newestPerKey]]);
+    * filters composed on top stay correct because they apply after dedup,
+    * the reference's "Inexact filter" contract (provider.rs:335-351).
+    *
+    * The skip also needs the manifest's fingerprint unchanged across the
+    * file listing, or it races concurrent writers, flushes and
+    * compactions (a reader could decide "all compacted", then list files
+    * that already include a newer rewrite — both versions would surface
+    * with no window; caught by ConcurrencySpec's compaction-race stress):
+    * appends reserve their sequence before files land and buffered writes
+    * before the buffer takes their rows. The buffer version is taken
+    * first, as in [[readStorage]]. */
   def read(name: String): DataFrame = {
-    val s = catalog.get(name)
-    // fingerprint BEFORE the scan pins its file listing: the dedup-skip
-    // decision below is a check-then-list race against concurrent
-    // writers/compaction otherwise (a reader could decide "all compacted",
-    // then list files that already include a newer rewrite — both
-    // versions would surface with no window; caught by ConcurrencySpec's
-    // compaction-race stress under full-suite load)
-    val pre = catalog.readFingerprint(name)
-    val storage = readStorage(s)
+    val mem = buffered(name)
+    val (s, pre) = catalog.readState(name)
+    val files = readFiles(s, catalog.genDataDir(name, pre.dataGen))
+    val skipWindow = s.options.updateMode == UpdateMode.Overwrite &&
+      mem.holdsExactly(pre.compactedSeq, pre.nextSeq) && catalog.readFingerprint(name) == pre
+    val storage =
+      if (skipWindow && !mem.isEmpty) newestOverFiles(s, mem, files)
+      else withBuffer(s, mem, files)
     val ttled = s.options.ttlMillis match {
       case Some(ttl) if s.options.enableTtl =>
         storage.filter(col(s.timestampKey) >=
           (current_timestamp() - expr(s"INTERVAL ${ttl / 1000} SECOND")))
       case _ => storage
     }
-    // when every batch is under the compaction seq floor the data is
-    // physically deduped — skip the window (cheaper plan, same rows).
-    // Skipping is safe only if NO append/compaction committed across the
-    // listing: appends reserve their seq before files land (buffered
-    // writes before the buffer takes their rows), so an unchanged
-    // fingerprint proves the listing matches the checked state.
-    val dedupSafeToSkip =
-      !catalog.needsDedup(name) && catalog.readFingerprint(name) == pre
     val deduped = s.options.updateMode match {
-      case UpdateMode.Overwrite if !dedupSafeToSkip => newestPerKey(ttled, s)
+      case UpdateMode.Overwrite if !skipWindow => newestPerKey(ttled, s)
       case _ => ttled
     }
     // canonical presentation order: PK columns first, generated tsid
@@ -511,19 +522,24 @@ final class TsdbEngine(
       .filter(col("__rn") === 1)
       .drop("__rn")
 
-  /** The table's stored rows: its Parquet files plus its write buffer.
-    * The buffer version is taken BEFORE the data directory is resolved
-    * and listed, and the file scan drops that version's sequences: a
-    * concurrent flush or compaction that moves them into files after the
-    * snapshot then cannot surface them twice, and one that moved them
-    * before it is already in the listing. With an empty buffer this is
-    * the bare file scan. The exclusion is an `InSet`, which codegen
-    * reads from a referenced hash set: an `IN` list of longs would be
-    * inlined into the generated code, so every write (a new sequence
-    * set) would compile the scan stage afresh. */
+  /** The table's stored rows: its Parquet files plus its write buffer,
+    * every buffered version of a key included ([[withBuffer]]). The
+    * buffer version is taken BEFORE the data directory is resolved and
+    * listed: a concurrent flush or compaction that moves its rows into
+    * files after the snapshot then cannot surface them twice, and one
+    * that moved them before it is already in the listing. */
   private def readStorage(s: TableSchema): DataFrame = {
     val mem = buffered(s.name)
-    val files = readFiles(s)
+    withBuffer(s, mem, readFiles(s, catalog.dataDir(s.name)))
+  }
+
+  /** `files` ∪ the buffer `mem`, the file scan dropping the buffer's
+    * sequences; with an empty buffer this is the bare file scan. The
+    * exclusion is an `InSet`, which codegen reads from a referenced hash
+    * set: an `IN` list of longs would be inlined into the generated code,
+    * so every write (a new sequence set) would compile the scan stage
+    * afresh. */
+  private def withBuffer(s: TableSchema, mem: MemTable, files: DataFrame): DataFrame =
     if (mem.isEmpty) files
     else {
       val filesPlan = GraftBridge.plan(files)
@@ -532,6 +548,19 @@ final class TsdbEngine(
         Filter(Not(InSet(seq, mem.seqs.toSet[Any])), filesPlan),
         bufferRelation(s, mem, files.schema.fields.toSeq).newInstance()))
     }
+
+  /** One row per key from files that hold one row per key and the buffer
+    * `mem`: the file rows whose key the buffer does not hold, and the
+    * buffer's newest row per key. A file row that a concurrent flush or
+    * compaction stored from `mem` has a buffered key, so it is dropped
+    * with the older versions. */
+  private def newestOverFiles(s: TableSchema, mem: MemTable, files: DataFrame): DataFrame = {
+    val filesPlan = GraftBridge.plan(files)
+    val fields = files.schema.fields.toSeq
+    val (newest, keys) = mem.newestRows(spark, s.storageStruct, fields, s.primaryKey)(
+      bufferProjection(s, fields))
+    val pk = s.primaryKey.map(n => filesPlan.output.find(_.name == n).get)
+    GraftBridge.ofRows(spark, Union(Filter(keys.excludes(pk), filesPlan), newest.newInstance()))
   }
 
   /** A write buffer as a one-partition scan with the columns `fields`: storage
@@ -541,22 +570,26 @@ final class TsdbEngine(
   private def bufferRelation(
       s: TableSchema, mem: MemTable, fields: Seq[StructField]
   ): org.apache.spark.sql.execution.LogicalRDD =
-    mem.relation(spark, s.storageStruct, fields) { raw =>
-      val derived = Map(TableSchema.SegmentColumn -> segmentOf(s),
-        TableSchema.BucketColumn -> s.partitionBy.map(bucketOf))
-      val Project(exprs, _) = GraftBridge.plan(
-        GraftBridge.ofRows(spark, LocalRelation(raw)).select(fields.map { f =>
-          derived.get(f.name).flatten
-            .getOrElse(col("`" + f.name.replace("`", "``") + "`"))
-            .cast(f.dataType).as(f.name)
-        }: _*))
-      val project = UnsafeProjection.create(exprs, raw)
-      project.initialize(0)
-      row => project(row).copy()
-    }
+    mem.relation(spark, s.storageStruct, fields)(bufferProjection(s, fields))
 
-  private def readFiles(s: TableSchema): DataFrame = {
-    val dir = catalog.dataDir(s.name)
+  /** Maps a buffered row over the storage columns `raw` to one over
+    * `fields` ([[bufferRelation]]). */
+  private def bufferProjection(s: TableSchema, fields: Seq[StructField])(
+      raw: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]): InternalRow => InternalRow = {
+    val derived = Map(TableSchema.SegmentColumn -> segmentOf(s),
+      TableSchema.BucketColumn -> s.partitionBy.map(bucketOf))
+    val Project(exprs, _) = GraftBridge.plan(
+      GraftBridge.ofRows(spark, LocalRelation(raw)).select(fields.map { f =>
+        derived.get(f.name).flatten
+          .getOrElse(col("`" + f.name.replace("`", "``") + "`"))
+          .cast(f.dataType).as(f.name)
+      }: _*))
+    val project = UnsafeProjection.create(exprs, raw)
+    project.initialize(0)
+    row => project(row).copy()
+  }
+
+  private def readFiles(s: TableSchema, dir: String): DataFrame = {
     import graft.plans.Partitioning
     // the bucket spec rides on a data column's metadata so BucketPruning
     // can map key-equality filters to candidate bucket directories
@@ -670,10 +703,10 @@ final class TsdbEngine(
     * OpenTSDB put, gRPC Write): each row is the timestamp in epoch micros
     * followed by one Scala value per `wanted` column (NULL when absent).
     * The rows go to the table's write buffer, with no Spark job: under
-    * the table lock the write passes the limiter, drops stale rollup
-    * registrations and reserves its sequence; the rows are stamped
-    * (values converted to the column types, `tsid`) in plain Scala;
-    * one log record is appended and fsynced; then the buffer takes the
+    * the table lock the write passes the limiter and drops stale rollup
+    * registrations; the rows are stamped (values converted to the column
+    * types, `tsid`) in plain Scala; the write reserves its sequence; one
+    * log record is appended and fsynced; then the buffer takes the
     * rows. The write is acknowledged from then on: a buffer past
     * `write_buffer_size` or the engine's row budgets is flushed after it
     * ([[flushOverBudget]]), and a flush that fails does not fail it. */
@@ -686,8 +719,12 @@ final class TsdbEngine(
       invalidateRollups(name) // fresh raw writes must not be served stale
       val s = catalog.get(name)
       val limit = s.options.writeBufferSize // a bad stored value fails before the log
+      // a value that does not convert fails the write before it spends a
+      // sequence: one that reaches neither the buffer nor the files would
+      // keep reads on the dedup window until the next compaction
+      val stamped = MemBatch.stamp(s, -1L, wanted.map(_.name), rows, sessionZone)
       val seq = catalog.reserveSeq(name, 1)
-      val batch = MemBatch.stamp(s, seq, wanted.map(_.name), rows, sessionZone)
+      val batch = new MemBatch(seq, stamped.fields, stamped.rows)
       val record = Wal.encode(batch)
       walOf(name).append(seq, record)
       val mem = buffered(name).add(batch, record.length.toLong)
@@ -949,9 +986,11 @@ final class TsdbEngine(
     *     partition-parallel end-to-end;
     *  3. flip the manifest to the new generation and record the seq floor
     *     (the nextSeq observed BEFORE the rewrite scan — later batches stay
-    *     above it): until the next append, reads skip the dedup window
-    *     entirely, and the window's shuffle afterwards is bounded by live
-    *     data, not accumulated history.
+    *     above it): until the next flush or direct Parquet append, reads
+    *     skip the dedup window entirely (buffered writes are read as the
+    *     buffer's newest row per key over the files, [[read]]), and the
+    *     window's shuffle afterwards is bounded by live data, not
+    *     accumulated history.
     *
     * Readers hold no locks: they resolve the directory through the manifest,
     * which flips atomically (tmp + ATOMIC_MOVE); the superseded generation

@@ -119,7 +119,11 @@ object NanosTimeRangePushdown extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 /** Pushes series-constant filter conjuncts below the engine's dedup-on-read
-  * window — the reference's Exact/Inexact pushdown contract
+  * window. The window is the read's fallback: a read of a compacted table,
+  * with or without buffered rows, plans none (`TsdbEngine.read`), so this
+  * rule serves only reads after a flush or a direct Parquet append since
+  * the last compaction, snapshot reads and the compaction rewrite. This is
+  * the reference's Exact/Inexact pushdown contract
   * (table_engine/src/provider.rs:335-351): filters on tag columns are exact
   * below the merge-dedup because every row of a series shares its tag
   * values (tsid is a function of all tags), so dropping a series before

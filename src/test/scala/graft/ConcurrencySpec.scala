@@ -728,4 +728,86 @@ class ConcurrencySpec extends SparkSpec {
       .as[(String, Long)].collect().toSeq.sortBy(_._1)
     assert(fin == (0 until hosts).map(h => (s"h$h", rounds.toLong)), fin.toString)
   }
+
+  /** The same guard for the buffered read without the window: line
+    * protocol re-writes every key into the write buffer while a maintainer
+    * alternates compaction (after which buffered rows are read as the
+    * buffer's newest row per key over key-excluded files) and flush (after
+    * which the window is back). Every read must see one version per key,
+    * per-key versions never going back, and some reads must have been
+    * planned without the window. */
+  test("buffered read without the window: no duplicate/stale keys while compact and flush race") {
+    import graft.influx.LineProtocol
+    val engine = new TsdbEngine(spark, tmpDir("conc-buf"))
+    engine.execute("CREATE TABLE buf_t (ts TIMESTAMP NOT NULL TIMESTAMP KEY, " +
+      "host STRING TAG, v BIGINT) WITH (update_mode = 'overwrite', segment_duration = '1h')")
+    val failure = new AtomicReference[Throwable](null)
+    val start = new CountDownLatch(1)
+    val writerDone = new CountDownLatch(1)
+    def thread(name: String)(body: => Unit): Thread = {
+      val t = new Thread(() => {
+        start.await()
+        try body catch { case e: Throwable => failure.compareAndSet(null, e) }
+      }, name)
+      t.start(); t
+    }
+    import spark.implicits._
+    val tNs = 1704067200000L * 1000000L
+    val hosts = 4
+    val rounds = 30
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val unwindowed = new java.util.concurrent.atomic.AtomicInteger(0)
+
+    val wa = thread("lp-writer") {
+      try {
+        for (r <- 1 to rounds) {
+          LineProtocol.ingest(engine, (0 until hosts).map(h => s"buf_t,host=h$h v=${r}i $tNs"))
+          Thread.sleep(5)
+        }
+      } finally writerDone.countDown()
+    }
+    val mt = thread("maintainer") {
+      var k = 0
+      while (writerDone.getCount > 0) {
+        if (k % 2 == 0) engine.compact("buf_t") else engine.flush("buf_t")
+        k += 1
+        Thread.sleep(20)
+      }
+      engine.compact("buf_t")
+    }
+    def reader(): Unit = {
+      val lastSeen = scala.collection.mutable.Map.empty[String, Long]
+      while (writerDone.getCount > 0 || reads.get() < 100) {
+        val df = engine.read("buf_t")
+        val plan = df.queryExecution.optimizedPlan
+        // buffered rows (the buffer's scan) read with no window over them
+        if (plan.collectFirst { case b: org.apache.spark.sql.execution.LogicalRDD => b }.nonEmpty &&
+            plan.collectFirst {
+              case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty)
+          unwindowed.incrementAndGet()
+        val rows = df.select("host", "v").as[(String, Long)].collect()
+        reads.incrementAndGet()
+        assert(rows.map(_._1).distinct.length == rows.length,
+          s"duplicate keys visible: ${rows.toSeq.sortBy(_._1)}")
+        rows.foreach { case (h, v) =>
+          val prev = lastSeen.getOrElse(h, 0L)
+          assert(v >= prev, s"key $h version went backwards: $prev -> $v")
+          lastSeen(h) = v
+        }
+        if (writerDone.getCount == 0 && reads.get() >= 100) return
+      }
+    }
+    val r1 = thread("reader-1")(reader())
+    val r2 = thread("reader-2")(reader())
+
+    start.countDown()
+    Seq(wa, mt, r1, r2).foreach(_.join(TimeUnit.MINUTES.toMillis(5)))
+    if (failure.get() != null) throw failure.get()
+    assert(reads.get() >= 100, s"only ${reads.get()} read interleavings")
+    assert(unwindowed.get() > 0, "no read of buffered rows was planned without the window")
+
+    val fin = engine.read("buf_t").select("host", "v")
+      .as[(String, Long)].collect().toSeq.sortBy(_._1)
+    assert(fin == (0 until hosts).map(h => (s"h$h", rounds.toLong)), fin.toString)
+  }
 }

@@ -235,6 +235,79 @@ class MemTableSpec extends SparkSpec {
     assert(value() == Seq(5.0))
   }
 
+  /** Whether the read's optimized plan holds a window (the dedup window). */
+  private def windowed(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.nonEmpty
+
+  /** Spark jobs `body` runs, counted under its own job group; a marker
+    * job after it proves the listener bus delivered every earlier job. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val g = s"jobs-${System.nanoTime()}"
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(g + "-marker", g)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains(g + "-marker") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(g + "-marker"), "listener never saw the marker job")
+      groups.asScala.count(_ == g)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("buffered rows over a compacted overwrite table read without the dedup window") {
+    val e = new TsdbEngine(spark, tmpDir("mt-nowindow"))
+    segTable(e, "nw")
+    lp(e, "nw", (0 until 40).map(i => (s"h${i % 8}", T0 + (i / 8) * 60000L, i.toDouble)))
+    e.compact("nw")
+    assert(!windowed(e.read("nw")), "a compacted table with an empty buffer planned the window")
+    // re-sent keys (one twice in a write), a new key and a late row
+    lp(e, "nw", Seq(("h1", T0, 100.0), ("h2", T0 + 60000L, 101.0), ("h1", T0, 102.0)))
+    lp(e, "nw", Seq(("h9", T0 + 600000L, 103.0), ("h3", T0 - 3600000L, 104.0)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[String]("host"), r.getAs[java.sql.Timestamp]("ts").getTime,
+        r.getAs[Double]("v"))).toSeq.sortBy(r => (r._1, r._2))
+    val snapshot = e.readAsOf("nw", e.currentSeq("nw") - 1)
+    assert(windowed(snapshot))
+    assert(!windowed(e.read("nw")), "buffered rows over compacted files planned the window")
+    val got = rows(e.read("nw"))
+    assert(got == rows(snapshot))
+    assert(got.length == 42 && got.contains(("h1", T0, 102.0)) && got.contains(("h2", T0 + 60000L, 101.0)))
+    // the window's shuffle stage is the job the read no longer runs
+    val fast = jobsOf(e.read("nw").collect())
+    val window = jobsOf(e.readAsOf("nw", e.currentSeq("nw") - 1).collect())
+    assert(fast == window - 1, s"read ran $fast jobs, the window read $window")
+
+    // a flush stores buffered sequences above the compaction floor
+    e.flush("nw")
+    assert(windowed(e.read("nw")), "read skipped the window after a flush")
+    assert(rows(e.read("nw")) == got)
+    e.compact("nw")
+    lp(e, "nw", Seq(("h1", T0, 200.0)))
+    assert(!windowed(e.read("nw")))
+    // a write whose value does not convert spends no sequence
+    intercept[IllegalArgumentException](
+      LineProtocol.ingest(e, Seq(s"nw,host=h5 v=\"text\" ${T0 * 1000000L}")))
+    assert(!windowed(e.read("nw")), "a rejected write put reads back on the window")
+    // so does a direct Parquet append
+    e.execute(s"INSERT INTO nw (host, v, ts) VALUES ('h2', 201.0, $T0)")
+    assert(windowed(e.read("nw")), "read skipped the window after an INSERT")
+    val after = rows(e.read("nw"))
+    assert(after.contains(("h1", T0, 200.0)) && after.contains(("h2", T0, 201.0)) && after.length == 42)
+  }
+
   test("DROP forgets the buffer: a re-created table of the same name reads 0 rows") {
     val e = new TsdbEngine(spark, tmpDir("mt-drop"))
     segTable(e, "d")

@@ -724,4 +724,80 @@ class PropertySpec extends SparkSpec {
       .withInitialSeed(org.scalacheck.rng.Seed(11L)), prop)
     assert(res.passed, res.status.toString)
   }
+
+  test("overwrite read equals the window snapshot under random buffered writes, flush, compact and INSERT") {
+    import graft.engine.TsdbEngine
+    import graft.influx.LineProtocol
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    val t0 = 1704067200000L // an hour boundary
+    // a row: host (None = the tag left out), region, minute step (negative:
+    // a late row in the previous hour's segment) and the key double x
+    // (None = absent); every written row gets a value of its own
+    case class R(host: Option[Int], region: Option[Int], step: Int, x: Option[Double])
+    sealed trait Op
+    case class Write(rows: List[R]) extends Op
+    case class Insert(rows: List[R]) extends Op
+    case object Flush extends Op
+    case object Compact extends Op
+    val row: Gen[R] = for {
+      h <- Gen.frequency(1 -> Gen.const(None), 5 -> Gen.choose(0, 2).map(Some(_)))
+      r <- Gen.frequency(1 -> Gen.const(None), 3 -> Gen.choose(0, 1).map(Some(_)))
+      step <- Gen.frequency(4 -> Gen.choose(0, 2), 1 -> Gen.choose(-2, -1))
+      x <- Gen.frequency(1 -> Gen.const(None), 2 -> Gen.oneOf(0.0, -0.0, 1.5).map(Some(_)))
+    } yield R(h, r, step, x)
+    val op: Gen[Op] = Gen.frequency(
+      6 -> Gen.choose(1, 6).flatMap(Gen.listOfN(_, row)).map(Write(_)),
+      1 -> Gen.choose(1, 3).flatMap(Gen.listOfN(_, row)).map(Insert(_)),
+      1 -> Gen.const(Flush), 2 -> Gen.const(Compact))
+    val tables = Seq(
+      // implicit (tsid, ts) key: every tag is part of the key
+      "pi" -> ("CREATE TABLE pi (host string TAG, region string TAG, x double, v double, " +
+        "ts timestamp NOT NULL, TIMESTAMP KEY(ts))"),
+      // explicit key with a NULL-able tag and a double: region is not in it
+      "pe" -> ("CREATE TABLE pe (host string TAG, region string TAG, x double, v double, " +
+        "ts timestamp NOT NULL, TIMESTAMP KEY(ts), PRIMARY KEY(host, x, ts))"))
+    val opts = " ENGINE=Analytic WITH (update_mode='overwrite', segment_duration='1h', " +
+      "enable_ttl='false')"
+    var unwindowed = 0
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    val prop = Prop.forAll(Gen.choose(3, 8).flatMap(Gen.listOfN(_, op))) { ops =>
+      val e = new TsdbEngine(spark, tmpDir("prop-nowin"))
+      tables.foreach { case (_, ddl) => e.execute(ddl + opts) }
+      var value = 0
+      ops.forall { o =>
+        tables.foreach { case (t, _) =>
+          def v(): Double = { value += 1; value.toDouble }
+          def ms(r: R): Long = t0 + r.step * 60000L
+          o match {
+            case Write(rs) => LineProtocol.ingest(e, rs.map { r =>
+              val tags = r.host.map(h => s",host=h$h").getOrElse("") +
+                r.region.map(g => s",region=r$g").getOrElse("")
+              s"$t$tags ${r.x.map(x => s"x=$x,").getOrElse("")}v=${v()} ${ms(r) * 1000000L}"
+            })
+            case Insert(rs) => e.execute(s"INSERT INTO $t (host, region, x, v, ts) VALUES " +
+              rs.map { r =>
+                def q(o: Option[Any], pre: String) = o.map(a => s"'$pre$a'").getOrElse("NULL")
+                s"(${q(r.host, "h")}, ${q(r.region, "r")}, ${r.x.getOrElse("NULL")}, ${v()}, ${ms(r)})"
+              }.mkString(", "))
+            case Flush => e.flush(t)
+            case Compact => e.compact(t)
+          }
+        }
+        tables.forall { case (t, _) =>
+          val df = e.read(t)
+          val plan = df.queryExecution.optimizedPlan
+          if (plan.collectFirst { case b: org.apache.spark.sql.execution.LogicalRDD => b }.nonEmpty &&
+              plan.collectFirst {
+                case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty)
+            unwindowed += 1
+          rows(df) == rows(e.readAsOf(t, e.currentSeq(t) - 1))
+        }
+      }
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(8)
+      .withInitialSeed(org.scalacheck.rng.Seed(13L)), prop)
+    assert(res.passed, res.status.toString)
+    assert(unwindowed > 0, "no read of buffered rows skipped the window")
+  }
 }
