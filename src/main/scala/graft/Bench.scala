@@ -22,44 +22,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    TempDirs.sweepStale() // leftover graft-* dirs from crashed/killed runs
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tune(spark)
-
-    // warmup: parquet footers + codegen + shuffle machinery, untimed.
-    // Best-effort: a missing fixture must not kill the bench (the timed
-    // loop degrades per-query instead)
-    def quietly(f: => Any): Unit = try f catch { case _: Throwable => () }
-    // SPARK_GRAFT_COLD=1: skip ALL warmups (fixture ingest, codegen,
-    // static-init priming) so every query pays its full end-to-end cost —
-    // the mode for cross-round per-query comparisons, where a warmed
-    // shared fixture would otherwise hide ingest work inside whichever
-    // query happens to run first (the r3 q47/q49 0.07 s artifact). The
-    // default (warmed) line measures steady-state query semantics; see
-    // README "Bench semantics".
-    val cold = sys.env.get("SPARK_GRAFT_COLD").contains("1")
-    if (!cold) {
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings")
-      .foreach(n => quietly(Tables.t(spark, sfDir, n).count()))
-    quietly(SparkEntry.entry(spark).count())
-    // case-mapping string functions pay a ~1.8 s one-time static init (the
-    // collation-aware UTF8 path) on first evaluation — warm it here so the
-    // first timed query using upper()/lower() measures execution, not
-    // class loading
-    quietly(spark.sql(
-      "SELECT upper('w'), lower('W'), initcap('w'), regexp_replace('a','a','b')").collect())
-    // the shared InfluxQL fixture is memoized per session; build it here so
-    // whichever influx query happens to run first times its own semantics,
-    // not the fixture ingest (q47 ingests fresh and still times the write path)
-    quietly(queries.Protocols.warmIngest(spark, sfDir))
-    }
+    val spark = warmSession(cpus, sfDir)
 
     // optional comma-separated name filter for targeted profiling runs
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -125,7 +89,7 @@ object Bench {
     // runs (and unknown queries on-environment) fall back to a
     // battery-median yardstick instead. Disabled in COLD mode (a re-run
     // is warm by definition) and by SPARK_GRAFT_REMEASURE=0.
-    val remeasureOn = !cold &&
+    val remeasureOn = !coldMode &&
       !sys.env.get("SPARK_GRAFT_REMEASURE").contains("0")
     // SPARK_GRAFT_FORCE_REMEASURE: comma-separated query names treated as
     // spiked regardless of threshold (exactly one adjudication re-run) —
@@ -197,6 +161,52 @@ object Bench {
     spark.stop()
     println(out)
     System.out.flush()
+  }
+
+  /** SPARK_GRAFT_COLD=1: skip ALL warmups (fixture ingest, codegen,
+    * static-init priming) so every query pays its full end-to-end cost —
+    * the mode for cross-round per-query comparisons, where a warmed
+    * shared fixture would otherwise hide ingest work inside whichever
+    * query happens to run first (the r3 q47/q49 0.07 s artifact). The
+    * default (warmed) line measures steady-state query semantics; see
+    * README "Bench semantics". */
+  private def coldMode: Boolean = sys.env.get("SPARK_GRAFT_COLD").contains("1")
+
+  private[graft] def quietly(f: => Any): Unit = try f catch { case _: Throwable => () }
+
+  /** The timing session shared by Bench and [[Profile]] (each `main`
+    * passes its own SPARK_GRAFT_CPUS default): stale temp dirs swept,
+    * `local[cpus]` with as many shuffle partitions, tuned tables, then
+    * the untimed warmup unless [[coldMode]] — parquet footers, codegen
+    * and shuffle machinery. The warmup is best-effort: a missing fixture
+    * must not kill the run (the timed loop degrades per query instead). */
+  private[graft] def warmSession(cpus: String, sfDir: String): SparkSession = {
+    TempDirs.sweepStale() // leftover graft-* dirs from crashed/killed runs
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    Tables.tune(spark)
+    if (!coldMode) {
+      Seq("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings")
+        .foreach(n => quietly(Tables.t(spark, sfDir, n).count()))
+      quietly(SparkEntry.entry(spark).count())
+      // case-mapping string functions pay a ~1.8 s one-time static init
+      // (the collation-aware UTF8 path) on first evaluation — warm it here
+      // so the first timed query using upper()/lower() measures
+      // execution, not class loading
+      quietly(spark.sql(
+        "SELECT upper('w'), lower('W'), initcap('w'), regexp_replace('a','a','b')").collect())
+      // the shared InfluxQL fixture is memoized per session; build it here
+      // so whichever influx query happens to run first times its own
+      // semantics, not the fixture ingest (q47 ingests fresh and still
+      // times the write path)
+      quietly(queries.Protocols.warmIngest(spark, sfDir))
+    }
+    spark
   }
 
   /** The driver stores only the LAST ~2000 chars of this process's output

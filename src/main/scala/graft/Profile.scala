@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round instrumentation (guide §1: measure first).
   *
@@ -24,25 +23,9 @@ object Profile {
     val iters = if (args.length > 1) args(1).toInt else 2
     val planDir = if (args.length > 2) Some(args(2)) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    TempDirs.sweepStale()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tune(spark)
-
-    // mirror Bench's warmup so first-run numbers are comparable
-    def quietly(f: => Any): Unit = try f catch { case _: Throwable => () }
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings")
-      .foreach(n => quietly(Tables.t(spark, sfDir, n).count()))
-    quietly(SparkEntry.entry(spark).count())
-    quietly(spark.sql(
-      "SELECT upper('w'), lower('W'), initcap('w'), regexp_replace('a','a','b')").collect())
-    quietly(queries.Protocols.warmIngest(spark, sfDir))
+    // Bench's session and warmup, so first-run numbers are comparable
+    val spark = Bench.warmSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), sfDir)
 
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -126,7 +109,7 @@ object Profile {
             val dt = (System.nanoTime() - t0) / 1e9
             // Bench-equivalent inter-query reclaim
             spark.sparkContext.getPersistentRDDs.values
-              .foreach(r => quietly(r.unpersist(blocking = false)))
+              .foreach(r => Bench.quietly(r.unpersist(blocking = false)))
             Thread.sleep(200) // let listener events drain
             println(f"[profile] $name run $i: $dt%.3f s ok=$ok " +
               f"jobs=$jobs stages=$stages tasks=$tasks " +

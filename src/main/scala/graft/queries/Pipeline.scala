@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{GraftQuery, Tables}
 import graft.pipeline.{Decontaminate, Dedup, DomainStats, Ivf, LanguageModel, Multimodal, Pii, Pq, Relevance, Similarity, TextAnalysis, TokenizerAudit, UrlCanon}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** LLM-training-data pipeline battery over the documents/embeddings
@@ -164,6 +165,82 @@ object PipelineQueries {
         .select(col("keeper_id").as("doc_id"))
     }
 
+  /** Domain keep/drop on cleaned per-document stats (`cd`: doc_id,
+    * domain, clean_tokens): a domain survives while under 4000 bp of its
+    * documents keep fewer than 40 clean tokens. The pipelines judge
+    * quality AFTER cleaning, so template chrome no longer pads thin pages
+    * past the bar. Composed by q317/q322/q324/q328 through
+    * [[cleanedRelease]] (oracle twin: [[keptDomainsCteSqlOf]]). */
+  private def cleanedKeptDomains(cd: DataFrame): DataFrame =
+    cd.groupBy("domain")
+      .agg(count(lit(1)).as("__n"),
+        sum(when(col("clean_tokens") < 40, 1L).otherwise(0L)).as("__nl"))
+      .filter(floor(col("__nl") * 10000.0 / col("__n")).cast("long") < 4000)
+      .select("domain")
+
+  /** Near-dup clusters over `pairs`, then soft-dedup weights
+    * (`weight_x10000` = ⌊10000 / cluster size⌋) over the population `pop`.
+    * Returns the cluster assignment `cc(doc_id, cluster_id)` too: ONE CC
+    * execution feeds both the weights and a cluster split (the CC loop is
+    * eager; a second `softDedupWeights` call would run the whole
+    * iterative join loop again). Composed by q307 and, through
+    * [[cleanedRelease]], q317/q322/q324/q328 (oracle twin:
+    * [[clusterWeightCteSqlOf]]). */
+  private def clusterWeights(
+      pop: DataFrame, pairs: DataFrame): (DataFrame, DataFrame) = {
+    val cc = Dedup.connectedComponents(pairs).withColumnRenamed("id", "doc_id")
+    (cc, Dedup.softDedupWeightsFromCC(pop, "doc_id", cc))
+  }
+
+  /** Per-split masses: hash-split `key` (80/10/10), then per split the
+    * distinct keys (as `nKeys`), documents, effective documents (the sum
+    * of `weight_x10000`) and each `sums` column (column → output name);
+    * `derive` adds per-document columns after the split label (q307's
+    * raw token count). Composed by q307 and [[cleanedRelease]] (oracle
+    * twin: [[releaseReportSql]]). */
+  private def splitMasses(df: DataFrame, key: String, nKeys: String,
+      sums: Seq[(String, String)],
+      derive: DataFrame => DataFrame = identity): DataFrame =
+    derive(df.withColumn("split", TextAnalysis.hashSplit(col(key))))
+      .groupBy("split")
+      .agg(countDistinct(key).as(nKeys), count(lit(1)).as("n_docs") +:
+        (("weight_x10000" -> "eff_docs_x10000") +: sums)
+          .map { case (c, n) => sum(c).as(n) }: _*)
+
+  /** The cleaned-stats release chain that q317/q322/q324/q328 compose:
+    * population → cleaning core → [[cleanedKeptDomains]] →
+    * [[clusterWeights]] → split → [[splitMasses]] with `clean_tokens`
+    * and `extraSums`. When `capped`, the population is the memoized
+    * [[relcapsKeptIds]] keeper set and the near-dup pairs are restricted
+    * to it on both endpoints — identical to regenerating the pairs over
+    * the capped corpus, without a second generator run; otherwise it is
+    * every document. `byCluster` splits on the near-dup cluster (its min id,
+    * singletons their own), so no near-dup pair straddles an eval
+    * boundary; otherwise on the registered domain. `core` maps the
+    * population (with `url`) to per-document cleaned stats. */
+  private def cleanedRelease(
+      s: SparkSession, dir: String, capped: Boolean, byCluster: Boolean,
+      extraSums: (String, String)*)(
+      core: DataFrame => DataFrame): DataFrame = {
+    val withUrl = t(s, dir, "documents").withColumn("url", syntheticUrl)
+    val keepers = if (capped) Some(relcapsKeptIds(s, dir)) else None
+    val cd = core(keepers.fold(withUrl)(k =>
+      withUrl.join(k, Seq("doc_id"), "left_semi")))
+    val keptd = cleanedKeptDomains(cd)
+    val pairs = keepers.foldLeft(jaccardPairs(s, dir))((p, k) => p
+      .join(k.select(col("doc_id").as("id_a")), Seq("id_a"), "left_semi")
+      .join(k.select(col("doc_id").as("id_b")), Seq("id_b"), "left_semi"))
+    val (cc, weighted) =
+      clusterWeights(keepers.getOrElse(t(s, dir, "documents")), pairs)
+    val kept = cd.join(broadcast(keptd), "domain")
+      .join(weighted.select(col("doc_id"), col("weight_x10000")), "doc_id")
+    val sums = ("clean_tokens" -> "clean_tokens") +: extraSums
+    if (!byCluster) splitMasses(kept, "domain", "n_domains", sums)
+    else splitMasses(kept.join(cc, Seq("doc_id"), "left")
+        .withColumn("__cl", coalesce(col("cluster_id"), col("doc_id"))),
+      "__cl", "n_clusters", sums)
+  }
+
   /** Deterministic synthetic URL per document (the fixture has no URL
     * column): scheme/case/port/tracking/fragment variants derived from
     * doc_id so canonicalization has real work to do and the DuckDB oracle
@@ -239,11 +316,14 @@ object PipelineQueries {
        |        ${graft.pipeline.Psl.pubLenCaseSql("string_split(host, '.')")} AS pub
        |      FROM c0)""".stripMargin
 
-  /** The exact-Jaccard near-dup pair CTE (t + p) shared by every oracle
-    * that replays the memoized q54/q87 pair list (q87/q254/q255/q282/
-    * q283/q303/q305/q306/q307) — ONE definition so a threshold or
-    * blocking change cannot drift between oracles and the Spark pair
-    * generator. */
+  /** The URL CTEs over `documents`: synthetic URL `u` → parsed `c0` →
+    * `c(doc_id, canonical, domain, host, path)` — the prefix of every
+    * URL-bearing oracle over `documents`. */
+  private val urlCteSql =
+    s"""u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
+       |c0 AS ($urlCanonSql),
+       |c AS ($urlAssembleSql)""".stripMargin
+
   /** The content-defined paragraph CTE chain (pt → ptok → pseg → paras;
     * internal names are p-prefixed so the chain can coexist with
     * [[jaccPairCteSql]]'s `t`/`p` in one WITH — the q317 capstone needs
@@ -269,6 +349,14 @@ object PipelineQueries {
 
   private val paraCteSql = paraCteSqlOf(8)
 
+  /** [[urlCteSql]] plus the grain-8 paragraphs with their registered
+    * domain, `pdx(doc_id, para_idx, para, n_tok, domain)` — the prefix of
+    * q317/q322/q323/q324/q328. */
+  private val urlParaCteSql =
+    urlCteSql + ",\n" + paraCteSql + """,
+      |pdx AS (SELECT p.doc_id, p.para_idx, p.para, p.n_tok, c.domain
+      |  FROM paras p JOIN c USING (doc_id))""".stripMargin
+
   /** The ONE fuzzy-template operating point, threaded into BOTH the
     * engine call sites (q313/q314/q316 lambdas) and the shared oracle
     * CTEs below — a parameter changed here changes every consumer on
@@ -291,9 +379,7 @@ object PipelineQueries {
     * drift between them or from the engine lambdas. Callers prefix
     * `WITH RECURSIVE ` and append their rollup. */
   private val fuzzyCteSql =
-    (s"""u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-        |c0 AS ($urlCanonSql),
-        |c AS ($urlAssembleSql),
+    (s"""$urlCteSql,
         |""" + paraCteSqlOf(FuzzyOp.grain) + s""",
         |pd AS (SELECT p.doc_id, p.para_idx, p.para, p.n_tok, c.domain
         |  FROM paras p JOIN c USING (doc_id)),
@@ -373,13 +459,30 @@ object PipelineQueries {
     * q325/q326 oracle base. Callers prefix `WITH RECURSIVE ` and append
     * their rollup. */
   private val fuzzySyndCteSql =
-    (s"""u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-        |c0 AS ($urlCanonSql),
-        |c AS ($urlAssembleSql),
+    (s"""$urlCteSql,
         |""" + paraCteSqlOf(FuzzyOp.grain) + s""",
         |pd AS (SELECT p.doc_id, p.para_idx, p.para, p.n_tok, c.domain
         |  FROM paras p JOIN c USING (doc_id)),
         |""").stripMargin + globalFuzzyCcCteSqlOf("pd")
+
+  /** The fuzzy keep-origin drop over the occurrence frame `from` and
+    * [[globalFuzzyCcCteSqlOf]]'s `gmem`: occurrences with their cluster
+    * (`gocc`), first-occurrence domain per cluster (`gatt`), qualifying
+    * clusters (`gq`: >= 3 domains, >= 2 variants) and the occurrences
+    * dropped outside their origin domain `gdrop(doc_id, para_idx)` —
+    * shared by q326 (full corpus) and q328 (capped population). */
+  private def fuzzyDropCteSqlOf(from: String) =
+    s"""gocc AS (SELECT $from.doc_id, $from.domain, $from.para_idx,
+       |    m.ph, m.cluster_id
+       |  FROM $from JOIN gmem m ON m.ph = md5($from.para)),
+       |gatt AS (SELECT *, first_value(domain) OVER (
+       |    PARTITION BY cluster_id ORDER BY doc_id, para_idx) AS fd
+       |  FROM gocc),
+       |gq AS (SELECT cluster_id FROM gatt GROUP BY 1
+       |  HAVING count(DISTINCT domain) >= 3
+       |     AND count(DISTINCT ph) >= 2),
+       |gdrop AS (SELECT doc_id, para_idx FROM gatt
+       |  JOIN gq USING (cluster_id) WHERE fd <> domain)""".stripMargin
 
   /** The shared md5-portable minhash coefficient table (`mco`) — include
     * EXACTLY ONCE alongside any number of [[minhashCtesOf]] instances. */
@@ -427,6 +530,11 @@ object PipelineQueries {
         |gmem AS (SELECT gdp.ph, gdp.para, gcc.cluster_id
         |  FROM gdp JOIN gcc ON gcc.id = gdp.ph)""").stripMargin
 
+  /** The exact-Jaccard near-dup pair CTE (t + p) shared by every oracle
+    * that replays the memoized q54/q87 pair list (q87/q254/q255/q282/
+    * q283/q303/q305/q306/q307 and the [[cleanedReleaseSql]] pipelines) —
+    * ONE definition so a threshold or blocking change cannot drift
+    * between oracles and the Spark pair generator. */
   private val jaccPairCteSql =
     """t AS (SELECT doc_id, lang,
       |    list_distinct(string_split_regex(trim(text), '\s+')) AS toks,
@@ -438,6 +546,199 @@ object PipelineQueries {
       |    ON a.lang = b.lang AND abs(a.lenb - b.lenb) <= 1 AND a.doc_id < b.doc_id
       |  WHERE len(list_intersect(a.toks, b.toks))::DOUBLE /
       |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.8)""".stripMargin
+
+  /** The syndication-weighted cap chain over `pdx`/`c`: exact
+    * cross-domain qualification (`q1`, >= 3 domains) → first-occurrence
+    * attribution (`kq`) → per-domain copied-in share (`sy`) → per-domain
+    * budget max(floor, base − unit at >= 700 bp, − 2·unit at >= 1000 bp)
+    * (`caps`) → canonical-URL keepers ranked per domain (`kc`). q323
+    * reports it at the cap-binding test point (3, 1, 1); [[cappedCteSql]]
+    * keeps `rk <= cap` at the release budget. */
+  private def capCteSqlOf(base: Int, unit: Int, floor: Int) =
+    s"""q1 AS (SELECT md5(para) AS ph FROM pdx
+       |  GROUP BY 1 HAVING count(DISTINCT domain) >= 3),
+       |kq AS (SELECT pdx.*, first_value(domain) OVER (
+       |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS fd,
+       |    (md5(para) IN (SELECT ph FROM q1)) AS isq
+       |  FROM pdx),
+       |sy AS (SELECT domain,
+       |    CAST(floor(sum(CASE WHEN isq AND fd <> domain THEN n_tok
+       |      ELSE 0 END) * 10000.0 / sum(n_tok)) AS BIGINT) AS synd_in_bp
+       |  FROM kq GROUP BY 1),
+       |caps AS (SELECT domain, greatest($floor, $base -
+       |    CASE WHEN synd_in_bp >= 1000 THEN ${2 * unit}
+       |         WHEN synd_in_bp >= 700 THEN $unit ELSE 0 END) AS cap
+       |  FROM sy),
+       |d AS (SELECT canonical, domain, min(doc_id) AS keeper_id
+       |  FROM c GROUP BY 1, 2),
+       |kc AS (SELECT domain, keeper_id, row_number() OVER (
+       |    PARTITION BY domain ORDER BY keeper_id) AS rk FROM d)""".stripMargin
+
+  /** The q324/q328 capped population — the [[relcapsKeptIds]] twin:
+    * [[capCteSqlOf]] at the release budget (base 30, unit 10, floor 5,
+    * computed over the FULL population), its keepers `kept(doc_id)` and
+    * their paragraphs `px`. */
+  private val cappedCteSql =
+    capCteSqlOf(30, 10, 5) + """,
+      |kept AS (SELECT keeper_id AS doc_id FROM kc
+      |  JOIN caps USING (domain) WHERE rk <= cap),
+      |px AS (SELECT pdx.* FROM pdx JOIN kept USING (doc_id))""".stripMargin
+
+  /** Within-domain templates over the paragraph frame `from`: hashes
+    * shared by >= 3 documents of one domain (`tm(domain, ph)`, dropped
+    * everywhere — the q312 rule every cleaning core starts with). */
+  private def templateCteSqlOf(from: String) =
+    s"""tm AS (SELECT domain, md5(para) AS ph FROM $from
+       |  GROUP BY 1, 2 HAVING count(DISTINCT doc_id) >= 3)""".stripMargin
+
+  /** Domain keep/drop over a per-document frame `stats(doc_id, domain,
+    * tok)`: `keptd` holds the domains where under 4000 bp of documents
+    * have `tok` < 40 — the q307 raw-token rule and the
+    * [[cleanedKeptDomains]] twin. */
+  private def keptDomainsCteSqlOf(stats: String, tok: String) =
+    s"""roll AS (SELECT domain, count(*) AS n_docs,
+       |    sum(CASE WHEN $tok < 40 THEN 1 ELSE 0 END) AS n_low
+       |  FROM $stats GROUP BY 1),
+       |keptd AS (SELECT domain FROM roll
+       |  WHERE CAST(floor(n_low * 10000.0 / n_docs) AS BIGINT) < 4000)""".stripMargin
+
+  /** The cleaned keep/drop after a strip: keep-first over the surviving
+    * paragraphs `survivors` (`k`), clean tokens per document (`cd`),
+    * every document of the paragraph frame `pop` with its clean tokens
+    * (`cda`; 0 when every paragraph was stripped), then
+    * [[keptDomainsCteSqlOf]] — the `cleanTokenStats*` +
+    * [[cleanedKeptDomains]] twin (q317/q322/q324/q328). */
+  private def cleanKeepCteSqlOf(survivors: String, pop: String) =
+    s"""k AS (SELECT *, row_number() OVER (
+       |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS rk
+       |  FROM $survivors),
+       |cd AS (SELECT doc_id, domain,
+       |    sum(CASE WHEN rk = 1 THEN n_tok ELSE 0 END) AS clean_tok
+       |  FROM k GROUP BY 1, 2),
+       |ad AS (SELECT DISTINCT doc_id, domain FROM $pop),
+       |cda AS (SELECT a.doc_id, a.domain,
+       |    coalesce(cd.clean_tok, 0) AS clean_tok
+       |  FROM ad a LEFT JOIN cd USING (doc_id, domain)),
+       |""".stripMargin + keptDomainsCteSqlOf("cda", "clean_tok")
+
+  /** The near-dup cluster CTEs over a pair frame `pairs(id_a, id_b)`:
+    * both-direction `edges`, the recursive transitive closure `reach`
+    * and `cc(id, cluster_id)` (the min reachable id) — the q87 closure
+    * every cluster oracle replays. Callers prefix `WITH RECURSIVE `. */
+  private def ccCteSqlOf(pairs: String) =
+    s"""edges AS (SELECT id_a AS src, id_b AS dst FROM $pairs
+       |  UNION SELECT id_b, id_a FROM $pairs),
+       |reach(id, r) AS (
+       |  SELECT src, src FROM edges
+       |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id),
+       |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
+
+  /** Every clustered document with its cluster id — the q87 oracle, and
+    * q255's from-scratch recompute that the incremental path must equal. */
+  private val clusterIdsSql =
+    "WITH RECURSIVE " + jaccPairCteSql + ",\n" + ccCteSqlOf("p") +
+      "\nSELECT id AS doc_id, cluster_id FROM cc"
+
+  /** [[ccCteSqlOf]] plus cluster sizes (`sz`) and every document of the
+    * population `pop(doc_id)` with its cluster size `w(doc_id, csz)` (1
+    * for singletons) — the [[clusterWeights]] twin (all documents for
+    * q303/q307/q317/q322, the capped keepers for q324/q328). */
+  private def clusterWeightCteSqlOf(pairs: String, pop: String) =
+    ccCteSqlOf(pairs) + s""",
+       |sz AS (SELECT cluster_id, count(*) AS csz FROM cc GROUP BY 1),
+       |w AS (SELECT x.doc_id, coalesce(s.csz, 1) AS csz
+       |  FROM $pop x LEFT JOIN
+       |    (SELECT cc.id AS doc_id, sz.csz FROM cc JOIN sz USING (cluster_id)) s
+       |    USING (doc_id))""".stripMargin
+
+  /** The 80/10/10 train/val/test label of the VARCHAR expression `key`
+    * (first 8 md5 hex digits of `key || ':split'`, mod 100) — the
+    * `TextAnalysis.hashSplit` twin. */
+  private def splitCaseSql(key: String) = {
+    val b = s"('0x' || substr(md5($key || ':split'), 1, 8))::BIGINT % 100"
+    s"CASE WHEN $b < 80 THEN 'train' WHEN $b < 90 THEN 'val' ELSE 'test' END"
+  }
+
+  /** The pipeline report over a per-document frame `stats(doc_id,
+    * domain, tok)`, `keptd`, `w` and `cc`: documents of kept domains →
+    * split by domain, or by near-dup cluster (`cl`, min id; singletons
+    * their own) → per split the distinct keys, documents, effective
+    * documents (Σ ⌊10000 / csz⌋), Σ `tok` as `tokName` and each `extra`
+    * per-document expression (→ output name, drawn from `join`) — the
+    * [[splitMasses]] twin. */
+  private def releaseReportSql(stats: String, tok: String, tokName: String,
+      byCluster: Boolean, join: String = "",
+      extra: Seq[(String, String)] = Nil) = {
+    val (key, nKeys) = if (byCluster) ("cl", "n_clusters") else ("domain", "n_domains")
+    val cols = (if (byCluster) Seq(s"coalesce(cc.cluster_id, $stats.doc_id) AS cl")
+      else Nil) ++ extra.map { case (e, n) => s"$e AS $n" }
+    val ccJoin = if (byCluster) s"\n  LEFT JOIN cc ON cc.id = $stats.doc_id" else ""
+    s"""kk AS (SELECT $stats.doc_id, $stats.domain, $stats.$tok, w.csz${cols.map(", " + _).mkString}
+       |  FROM $stats JOIN w USING (doc_id)$ccJoin$join
+       |  WHERE $stats.domain IN (SELECT domain FROM keptd)),
+       |lab AS (SELECT *, ${splitCaseSql(if (byCluster) "cl::VARCHAR" else "domain")} AS split
+       |  FROM kk)
+       |SELECT split, count(DISTINCT $key)::BIGINT AS $nKeys,
+       |  count(*)::BIGINT AS n_docs,
+       |  sum(CAST(floor(10000.0 / csz) AS BIGINT))::BIGINT AS eff_docs_x10000,
+       |  sum($tok)::BIGINT AS $tokName${extra.map { case (_, n) => s",\n  sum($n)::BIGINT AS $n" }.mkString}
+       |FROM lab GROUP BY 1""".stripMargin
+  }
+
+  /** The q317/q322 cleaning core over `pdx` — the `cleanTokenStats`
+    * twin: template drop-all (`tm` → survivors `np`), then
+    * [[cleanKeepCteSqlOf]]. */
+  private val templateCoreSql =
+    templateCteSqlOf("pdx") + """,
+      |np AS (SELECT pdx.* FROM pdx LEFT JOIN tm
+      |  ON tm.domain = pdx.domain AND tm.ph = md5(pdx.para)
+      |  WHERE tm.ph IS NULL),
+      |""".stripMargin + cleanKeepCteSqlOf("np", "pdx")
+
+  /** The q324 (`fuzzy` false) and q328 cleaning cores over the capped
+    * paragraphs `px` — the `cleanTokenStatsV2`/`V3` twins. Each paragraph
+    * gets one class, by precedence: template 0, fuzzy syndication -2
+    * (q328 only: keep-origin over qualifying GLOBAL near-dup clusters of
+    * the capped population, [[fuzzyDropCteSqlOf]]), exact syndication
+    * -1 (keep-origin over >= 3 domains), kept 1. Keep-first runs over the
+    * kept class only; `sd` counts each document's syndication drops. */
+  private def syndCoreSqlOf(fuzzy: Boolean) =
+    (if (!fuzzy) "" else globalFuzzyCcCteSqlOf("px") + ",\n" +
+      fuzzyDropCteSqlOf("px") + ",\n") + templateCteSqlOf("px") + s""",
+      |q2 AS (SELECT md5(para) AS ph FROM px
+      |  GROUP BY 1 HAVING count(DISTINCT domain) >= 3),
+      |fx AS (SELECT px.*, first_value(domain) OVER (
+      |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS fd
+      |  FROM px),
+      |mk AS (SELECT fx.*, CASE WHEN tm.ph IS NOT NULL THEN 0${
+        if (fuzzy) "\n    WHEN gd.para_idx IS NOT NULL THEN -2" else ""}
+      |    WHEN md5(fx.para) IN (SELECT ph FROM q2)
+      |      AND fx.fd <> fx.domain THEN -1
+      |    ELSE 1 END AS cls
+      |  FROM fx LEFT JOIN tm
+      |    ON tm.domain = fx.domain AND tm.ph = md5(fx.para)${
+        if (fuzzy) "\n  LEFT JOIN gdrop gd\n    ON gd.doc_id = fx.doc_id AND gd.para_idx = fx.para_idx" else ""}),
+      |sd AS (SELECT doc_id,
+      |    sum(CASE WHEN cls = -1 THEN 1 ELSE 0 END) AS n_synd${
+        if (fuzzy) ",\n    sum(CASE WHEN cls = -2 THEN 1 ELSE 0 END) AS n_fz" else ""}
+      |  FROM mk GROUP BY 1),
+      |""".stripMargin + cleanKeepCteSqlOf("mk WHERE cls = 1", "px")
+
+  /** The [[cleanedRelease]] twin: URL/paragraph prefix → (`capped`: the
+    * [[cappedCteSql]] population) → the cleaning `core` ending at
+    * `cda`/`keptd` → near-dup pairs (`capped`: both endpoints kept, `pk`)
+    * → [[clusterWeightCteSqlOf]] → [[releaseReportSql]] with
+    * `clean_tokens`, `join` and `extra`. */
+  private def cleanedReleaseSql(capped: Boolean, byCluster: Boolean,
+      core: String, join: String = "", extra: Seq[(String, String)] = Nil) =
+    "WITH RECURSIVE " + urlParaCteSql + ",\n" +
+      (if (capped) cappedCteSql + ",\n" else "") + core + ",\n" + jaccPairCteSql +
+      (if (!capped) "" else """,
+        |pk AS (SELECT id_a, id_b FROM p
+        |  JOIN kept ka ON ka.doc_id = p.id_a
+        |  JOIN kept kb ON kb.doc_id = p.id_b)""".stripMargin) + ",\n" +
+      clusterWeightCteSqlOf(if (capped) "pk" else "p", if (capped) "kept" else "documents") +
+      ",\n" + releaseReportSql("cda", "clean_tok", "clean_tokens", byCluster, join, extra)
 
   val all: Seq[GraftQuery] = Seq(
 
@@ -887,13 +1188,7 @@ object PipelineQueries {
     //      list (min-label propagation); oracle re-derives components via
     //      a recursive transitive-closure CTE over the same pairs
     GraftQuery("q87_near_dup_clusters",
-      Some(("""WITH RECURSIVE """ + jaccPairCteSql + """,
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM p
-             |  UNION SELECT id_b, id_a FROM p),
-             |reach(id, r) AS (
-             |  SELECT src, src FROM edges
-             |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id)
-             |SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id""").stripMargin),
+      Some(clusterIdsSql),
       (s, dir) => Dedup.connectedComponents(jaccardPairs(s, dir))
         .select(col("id").as("doc_id"), col("cluster_id"))),
 
@@ -903,18 +1198,12 @@ object PipelineQueries {
     //      Singletons survive as their own cluster. Oracle re-derives the
     //      q87 closure, then takes the same argmax with QUALIFY.
     GraftQuery("q282_keep_best_dedup",
-      Some(("""WITH RECURSIVE """ + jaccPairCteSql + """,
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM p
-             |  UNION SELECT id_b, id_a FROM p),
-             |reach(id, r) AS (
-             |  SELECT src, src FROM edges
-             |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id),
-             |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
+      Some("WITH RECURSIVE " + jaccPairCteSql + ",\n" + ccCteSqlOf("p") + """
              |SELECT d.doc_id, d.lang, d.source, d.n_chars
              |FROM documents d LEFT JOIN cc ON cc.id = d.doc_id
              |QUALIFY row_number() OVER (
              |  PARTITION BY coalesce(cc.cluster_id, d.doc_id)
-             |  ORDER BY d.n_chars DESC, d.doc_id) = 1""").stripMargin),
+             |  ORDER BY d.n_chars DESC, d.doc_id) = 1""".stripMargin),
       (s, dir) => Dedup.dedupByClustersKeepBest(
         t(s, dir, "documents").select("doc_id", "lang", "source", "n_chars"),
         "doc_id", jaccardPairs(s, dir), col("n_chars"))),
@@ -2654,21 +2943,13 @@ object PipelineQueries {
     //      representative; crossing_clusters is the audit certificate
     //      (0 by construction, computed from the data, not assumed).
     GraftQuery("q254_leakage_safe_split",
-      Some(("""WITH RECURSIVE """ + jaccPairCteSql + """,
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM p
-             |  UNION SELECT id_b, id_a FROM p),
-             |reach(id, r) AS (
-             |  SELECT src, src FROM edges
-             |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id),
-             |cc AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
+      Some(s"""WITH RECURSIVE $jaccPairCteSql,
+             |${ccCteSqlOf("p")},
              |lab AS (SELECT d.doc_id, d.n_chars,
              |    coalesce(cc.cluster_id, d.doc_id) AS cluster_id
-             |  FROM documents d LEFT JOIN cc USING (doc_id)),
-             |s AS (SELECT *, CASE WHEN b < 80 THEN 'train'
-             |    WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-             |  FROM (SELECT *,
-             |    ('0x' || substr(md5(cluster_id::VARCHAR || ':split'), 1, 8))::BIGINT % 100 AS b
-             |  FROM lab)),
+             |  FROM documents d LEFT JOIN cc ON cc.id = d.doc_id),
+             |s AS (SELECT *, ${splitCaseSql("cluster_id::VARCHAR")} AS split
+             |  FROM lab),
              |x AS (SELECT count(*)::BIGINT AS crossing FROM (
              |  SELECT cluster_id FROM s GROUP BY 1
              |  HAVING count(DISTINCT split) > 1))
@@ -2676,7 +2957,7 @@ object PipelineQueries {
              |  count(DISTINCT cluster_id)::BIGINT AS n_clusters,
              |  sum(n_chars)::BIGINT AS sum_chars,
              |  (SELECT crossing FROM x) AS crossing_clusters
-             |FROM s GROUP BY 1""").stripMargin),
+             |FROM s GROUP BY 1""".stripMargin),
       (s, dir) => {
         val cc = graft.pipeline.Dedup.connectedComponents(jaccardPairs(s, dir))
           .withColumnRenamed("id", "doc_id")
@@ -2705,13 +2986,7 @@ object PipelineQueries {
     //      from-scratch transitive closure over all pairs: incremental
     //      must be indistinguishable from recompute.
     GraftQuery("q255_incremental_clusters",
-      Some(("""WITH RECURSIVE """ + jaccPairCteSql + """,
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM p
-             |  UNION SELECT id_b, id_a FROM p),
-             |reach(id, r) AS (
-             |  SELECT src, src FROM edges
-             |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id)
-             |SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id""").stripMargin),
+      Some(clusterIdsSql),
       (s, dir) => {
         val pairs = jaccardPairs(s, dir)
         def isNew(c: org.apache.spark.sql.Column) = pmod(c, lit(10L)) >= 8
@@ -2936,9 +3211,7 @@ object PipelineQueries {
     //      SUM of kept keeper ids (validates WHICH rows the cap kept, not
     //      just how many). One hash agg + one domain-keyed window.
     GraftQuery("q295_url_dedup_cap",
-      Some(s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-              |c0 AS ($urlCanonSql),
-              |c AS ($urlAssembleSql),
+      Some(s"""WITH $urlCteSql,
               |d AS (SELECT canonical, domain, min(doc_id) AS keeper_id,
               |        count(*) AS n_variants FROM c GROUP BY 1, 2),
               |k AS (SELECT domain, keeper_id, row_number() OVER (
@@ -2993,9 +3266,7 @@ object PipelineQueries {
     //      registered domain decides keep/drop at domain grain. One
     //      map-only canonicalization + one domain-keyed hash agg.
     GraftQuery("q297_domain_quality_rollup",
-      Some(s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-              |c0 AS ($urlCanonSql),
-              |c AS ($urlAssembleSql),
+      Some(s"""WITH $urlCteSql,
               |j AS (SELECT c.domain,
               |    len(string_split_regex(trim(d.text), '\\s+')) AS ntok
               |  FROM c JOIN documents d USING (doc_id)),
@@ -3067,20 +3338,13 @@ object PipelineQueries {
     //      a naive doc-level hash split would have sent across the eval
     //      boundary (the concrete leak risk the domain split retires).
     GraftQuery("q300_domain_split",
-      Some(s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-              |c0 AS ($urlCanonSql),
-              |c AS ($urlAssembleSql),
+      Some(s"""WITH $urlCteSql,
               |j AS (SELECT c.doc_id, c.domain,
               |    len(string_split_regex(trim(d.text), '\\s+')) AS ntok
               |  FROM c JOIN documents d USING (doc_id)),
-              |s AS (SELECT domain, ntok,
-              |    ('0x' || substr(md5(domain || ':split'), 1, 8))::BIGINT % 100 AS db,
-              |    ('0x' || substr(md5(doc_id::VARCHAR || ':split'), 1, 8))::BIGINT % 100 AS ib
-              |  FROM j),
-              |lab AS (SELECT domain, ntok,
-              |    CASE WHEN db < 80 THEN 'train' WHEN db < 90 THEN 'val' ELSE 'test' END AS split,
-              |    CASE WHEN ib < 80 THEN 'train' WHEN ib < 90 THEN 'val' ELSE 'test' END AS doc_split
-              |  FROM s)
+              |lab AS (SELECT domain, ntok, ${splitCaseSql("domain")} AS split,
+              |    ${splitCaseSql("doc_id::VARCHAR")} AS doc_split
+              |  FROM j)
               |SELECT split, count(DISTINCT domain)::BIGINT AS n_domains,
               |  count(*)::BIGINT AS n_docs, sum(ntok)::BIGINT AS total_tokens,
               |  sum(CASE WHEN doc_split <> split THEN 1 ELSE 0 END)::BIGINT AS n_docs_naive_other
@@ -3123,9 +3387,7 @@ object PipelineQueries {
     //      signal page-level filters can't see. Exact rational, floored
     //      basis points.
     GraftQuery("q302_domain_lang_coherence",
-      Some(s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-              |c0 AS ($urlCanonSql),
-              |c AS ($urlAssembleSql),
+      Some(s"""WITH $urlCteSql,
               |j AS (SELECT c.domain, d.lang FROM c JOIN documents d USING (doc_id)),
               |dl AS (SELECT domain, lang, count(*) AS cnt FROM j GROUP BY 1, 2),
               |a AS (SELECT domain, sum(cnt) AS n_docs, count(*) AS n_langs,
@@ -3146,24 +3408,12 @@ object PipelineQueries {
     //      oracle re-derives the q87 transitive closure then the same
     //      per-source weight rollup.
     GraftQuery("q303_soft_dedup_weights",
-      Some(("""WITH RECURSIVE """ + jaccPairCteSql + """,
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM p
-             |  UNION SELECT id_b, id_a FROM p),
-             |reach(id, r) AS (
-             |  SELECT src, src FROM edges
-             |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id),
-             |cc AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
-             |sz AS (SELECT cluster_id, count(*) AS csz FROM cc GROUP BY 1),
-             |w AS (SELECT d.source,
-             |    coalesce(s.csz, 1) AS cluster_size,
-             |    CAST(floor(10000.0 / coalesce(s.csz, 1)) AS BIGINT) AS w
-             |  FROM documents d LEFT JOIN
-             |    (SELECT cc.doc_id, sz.csz FROM cc JOIN sz USING (cluster_id)) s
-             |    USING (doc_id))
-             |SELECT source, count(*)::BIGINT AS n_docs,
-             |  sum(w)::BIGINT AS sum_weight_x10000,
-             |  sum(CASE WHEN cluster_size = 1 THEN 1 ELSE 0 END)::BIGINT AS n_singletons
-             |FROM w GROUP BY 1""").stripMargin),
+      Some("WITH RECURSIVE " + jaccPairCteSql + ",\n" +
+        clusterWeightCteSqlOf("p", "documents") + """
+             |SELECT d.source, count(*)::BIGINT AS n_docs,
+             |  sum(CAST(floor(10000.0 / w.csz) AS BIGINT))::BIGINT AS sum_weight_x10000,
+             |  sum(CASE WHEN w.csz = 1 THEN 1 ELSE 0 END)::BIGINT AS n_singletons
+             |FROM documents d JOIN w USING (doc_id) GROUP BY 1""".stripMargin),
       (s, dir) => Dedup.softDedupWeights(
           t(s, dir, "documents"), "doc_id", jaccardPairs(s, dir))
         .groupBy("source")
@@ -3209,13 +3459,7 @@ object PipelineQueries {
     //      composition a sampler actually sees. Reuses the memoized
     //      q54/q87 pair list; oracle = the q282 closure + rollup.
     GraftQuery("q305_dedup_mix_shift",
-      Some(("""WITH RECURSIVE """ + jaccPairCteSql + """,
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM p
-             |  UNION SELECT id_b, id_a FROM p),
-             |reach(id, r) AS (
-             |  SELECT src, src FROM edges
-             |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id),
-             |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+      Some("WITH RECURSIVE " + jaccPairCteSql + ",\n" + ccCteSqlOf("p") + """,
              |k AS (SELECT d.source FROM documents d LEFT JOIN cc ON cc.id = d.doc_id
              |  QUALIFY row_number() OVER (
              |    PARTITION BY coalesce(cc.cluster_id, d.doc_id)
@@ -3225,7 +3469,7 @@ object PipelineQueries {
              |SELECT raw.source, raw.n_raw::BIGINT AS n_raw,
              |  coalesce(kc.n_kept, 0)::BIGINT AS n_kept,
              |  CAST(floor(coalesce(kc.n_kept, 0) * 10000.0 / raw.n_raw) AS BIGINT) AS kept_bp
-             |FROM raw LEFT JOIN kc USING (source)""").stripMargin),
+             |FROM raw LEFT JOIN kc USING (source)""".stripMargin),
       (s, dir) => Dedup.dedupMixShift(
         t(s, dir, "documents").select("doc_id", "source", "n_chars"),
         "doc_id", jaccardPairs(s, dir), col("n_chars"), "source")),
@@ -3236,17 +3480,10 @@ object PipelineQueries {
     //      (cross-host syndication leaks under both; this is the number
     //      that decides whether a release needs the cluster-level split).
     GraftQuery("q306_split_leak_audit",
-      Some(s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-              |c0 AS ($urlCanonSql),
-              |c AS ($urlAssembleSql),
+      Some(s"""WITH $urlCteSql,
               |$jaccPairCteSql,
-              |lab AS (SELECT c.doc_id,
-              |    CASE WHEN ('0x' || substr(md5(domain || ':split'), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-              |         WHEN ('0x' || substr(md5(domain || ':split'), 1, 8))::BIGINT % 100 < 90 THEN 'val'
-              |         ELSE 'test' END AS dom_split,
-              |    CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-              |         WHEN ('0x' || substr(md5(doc_id::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 90 THEN 'val'
-              |         ELSE 'test' END AS doc_split
+              |lab AS (SELECT c.doc_id, ${splitCaseSql("domain")} AS dom_split,
+              |    ${splitCaseSql("doc_id::VARCHAR")} AS doc_split
               |  FROM c),
               |j AS (SELECT la.dom_split AS da, lb.dom_split AS db,
               |    la.doc_split AS ca, lb.doc_split AS cb
@@ -3266,48 +3503,19 @@ object PipelineQueries {
         t(s, dir, "documents").withColumn("url", syntheticUrl),
         "url", "doc_id", jaccardPairs(s, dir))),
 
-    // ---- curation pipeline capstone: the whole round-7 domain layer as
-    //      ONE plan — canonicalize → domain-grain keep/drop (q297 rule) →
-    //      global soft-dedup weights (q303, whole-corpus clusters) →
-    //      domain-level split (q300) → per-split effective masses. The
-    //      composition a release job actually runs; every stage's shuffle
-    //      carries domains/ids/weights, never text.
+    // ---- curation pipeline: the round-7 domain layer as ONE plan —
+    //      canonicalize → domain keep/drop on RAW token stats (the q297
+    //      rule) → soft-dedup weights over whole-corpus clusters (q303) →
+    //      domain split (q300) → per-split masses. Every shuffle carries
+    //      domains/ids/weights, never text.
     GraftQuery("q307_curation_pipeline",
-      Some(("""WITH RECURSIVE u AS (SELECT doc_id, """ + urlBuildSql + """ AS url FROM documents),
-              |c0 AS (""" + urlCanonSql + """),
-              |c AS (""" + urlAssembleSql + """),
-              |ntoks AS (SELECT doc_id,
-              |    len(string_split_regex(trim(text), '\s+')) AS ntok FROM documents),
-              |roll AS (SELECT c.domain, count(*) AS n_docs,
-              |    sum(CASE WHEN n.ntok < 40 THEN 1 ELSE 0 END) AS n_low
-              |  FROM c JOIN ntoks n USING (doc_id) GROUP BY 1),
-              |keptd AS (SELECT domain FROM roll
-              |  WHERE CAST(floor(n_low * 10000.0 / n_docs) AS BIGINT) < 4000),
-              |""" + jaccPairCteSql + """,
-              |edges AS (SELECT id_a AS src, id_b AS dst FROM p
-              |  UNION SELECT id_b, id_a FROM p),
-              |reach(id, r) AS (
-              |  SELECT src, src FROM edges
-              |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id),
-              |cc AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
-              |sz AS (SELECT cluster_id, count(*) AS csz FROM cc GROUP BY 1),
-              |w AS (SELECT d.doc_id, coalesce(s.csz, 1) AS csz
-              |  FROM documents d LEFT JOIN
-              |    (SELECT cc.doc_id, sz.csz FROM cc JOIN sz USING (cluster_id)) s
-              |    USING (doc_id)),
-              |k AS (SELECT c.doc_id, c.domain, n.ntok, w.csz
-              |  FROM c JOIN ntoks n USING (doc_id) JOIN w USING (doc_id)
-              |  WHERE c.domain IN (SELECT domain FROM keptd)),
-              |lab AS (SELECT doc_id, domain, ntok, csz,
-              |    CASE WHEN ('0x' || substr(md5(domain || ':split'), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-              |         WHEN ('0x' || substr(md5(domain || ':split'), 1, 8))::BIGINT % 100 < 90 THEN 'val'
-              |         ELSE 'test' END AS split
-              |  FROM k)
-              |SELECT split, count(DISTINCT domain)::BIGINT AS n_domains,
-              |  count(*)::BIGINT AS n_docs,
-              |  sum(CAST(floor(10000.0 / csz) AS BIGINT))::BIGINT AS eff_docs_x10000,
-              |  sum(ntok)::BIGINT AS total_tokens
-              |FROM lab GROUP BY 1""").stripMargin),
+      Some("WITH RECURSIVE " + urlCteSql + """,
+             |st AS (SELECT c.doc_id, c.domain,
+             |    len(string_split_regex(trim(d.text), '\s+')) AS ntok
+             |  FROM c JOIN documents d USING (doc_id)),
+             |""".stripMargin + keptDomainsCteSqlOf("st", "ntok") + ",\n" +
+        jaccPairCteSql + ",\n" + clusterWeightCteSqlOf("p", "documents") + ",\n" +
+        releaseReportSql("st", "ntok", "total_tokens", byCluster = false)),
       (s, dir) => {
         val d = t(s, dir, "documents").withColumn("url", syntheticUrl)
         val keptDomains = DomainStats.qualityRollup(d, "url", "text",
@@ -3317,14 +3525,10 @@ object PipelineQueries {
         val kept = d
           .withColumn("__domain", UrlCanon.registeredDomain(col("url")))
           .join(broadcast(keptDomains), "__domain")
-        Dedup.softDedupWeights(kept, "doc_id", jaccardPairs(s, dir))
-          .withColumn("split", TextAnalysis.hashSplit(col("__domain")))
-          .withColumn("__ntok", TextAnalysis.tokenCount(col("text")))
-          .groupBy("split")
-          .agg(countDistinct("__domain").as("n_domains"),
-            count(lit(1)).as("n_docs"),
-            sum("weight_x10000").as("eff_docs_x10000"),
-            sum("__ntok").as("total_tokens"))
+        val (_, weighted) = clusterWeights(kept, jaccardPairs(s, dir))
+        splitMasses(weighted, "__domain", "n_domains",
+          Seq("__ntok" -> "total_tokens"),
+          _.withColumn("__ntok", TextAnalysis.tokenCount(col("text"))))
       }),
 
     // ---- CCNet-style PARAGRAPH-level dedup (Dedup.paragraphDedup):
@@ -3374,9 +3578,7 @@ object PipelineQueries {
     //      ONE window computes keeper rank + first-occurrence domain in
     //      the same frame; ONE domain-keyed rollup.
     GraftQuery("q310_domain_boilerplate",
-      Some((s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-               |c0 AS ($urlCanonSql),
-               |c AS ($urlAssembleSql),
+      Some((s"""WITH $urlCteSql,
                |""" + paraCteSql + """,
                |pd AS (SELECT p.doc_id, p.para_idx, p.para, p.n_tok, c.domain
                |  FROM paras p JOIN c USING (doc_id)),
@@ -3406,9 +3608,7 @@ object PipelineQueries {
     //      (domain, ph) hash agg; min(paragraph) is exact (all
     //      occurrences of a ph are byte-identical).
     GraftQuery("q311_template_catalog",
-      Some((s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-               |c0 AS ($urlCanonSql),
-               |c AS ($urlAssembleSql),
+      Some((s"""WITH $urlCteSql,
                |""" + paraCteSql + """,
                |pd AS (SELECT p.doc_id, p.para, p.n_tok, c.domain
                |  FROM paras p JOIN c USING (doc_id))
@@ -3430,9 +3630,7 @@ object PipelineQueries {
     //      keys from a hash agg, drop-index lists to the map-side
     //      rebuild. Cross-domain syndication deliberately untouched.
     GraftQuery("q312_template_strip",
-      Some((s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-               |c0 AS ($urlCanonSql),
-               |c AS ($urlAssembleSql),
+      Some((s"""WITH $urlCteSql,
                |""" + paraCteSql + """,
                |pd AS (SELECT p.doc_id, p.para_idx, p.para, c.domain
                |  FROM paras p JOIN c USING (doc_id)),
@@ -3608,90 +3806,15 @@ object PipelineQueries {
         jacNum = FuzzyOp.jacNum, jacDen = FuzzyOp.jacDen,
         membersOpt = Some(domainFuzzyMembersMemo(s, dir)))),
 
-    // ---- curation capstone v2: the q307 chain EXTENDED with the round-8
-    //      paragraph/template layer, as ONE plan — canonicalize →
-    //      within-domain template strip (drop-all, q312 rule) →
-    //      paragraph keep-first dedup over survivors (q309 rule) →
-    //      domain keep/drop on the CLEANED token stats (the composed
-    //      pipeline judges quality AFTER cleaning — template chrome no
-    //      longer pads thin pages past the low-quality bar) → doc-level
-    //      soft-dedup weights (q303 clusters) → domain-level split
-    //      (q300) → per-split effective masses. Chaining at
-    //      paragraph-row grain is exact (CDC boundaries are per-token;
-    //      see DomainStats.cleanTokenStats); every shuffle carries
-    //      domains/ids/hashes/weights, never text.
+    // ---- curation pipeline v2: q307 with the round-8 paragraph layer —
+    //      template drop-all (q312) and keep-first paragraph dedup (q309)
+    //      before the keep/drop, which now reads the CLEANED token stats.
+    //      Chaining at paragraph-row grain is exact (CDC boundaries are
+    //      per-token; see DomainStats.cleanTokenStats).
     GraftQuery("q317_curation_pipeline_v2",
-      Some(("""WITH RECURSIVE u AS (SELECT doc_id, """ + urlBuildSql + """ AS url FROM documents),
-              |c0 AS (""" + urlCanonSql + """),
-              |c AS (""" + urlAssembleSql + """),
-              |""" + paraCteSqlOf(8) + """,
-              |pdx AS (SELECT p.doc_id, p.para_idx, p.para, p.n_tok, c.domain
-              |  FROM paras p JOIN c USING (doc_id)),
-              |tm AS (SELECT domain, md5(para) AS ph FROM pdx
-              |  GROUP BY 1, 2 HAVING count(DISTINCT doc_id) >= 3),
-              |np AS (SELECT pdx.* FROM pdx LEFT JOIN tm
-              |  ON tm.domain = pdx.domain AND tm.ph = md5(pdx.para)
-              |  WHERE tm.ph IS NULL),
-              |k AS (SELECT *, row_number() OVER (
-              |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS rk FROM np),
-              |cd AS (SELECT doc_id, domain,
-              |    sum(CASE WHEN rk = 1 THEN n_tok ELSE 0 END) AS clean_tok
-              |  FROM k GROUP BY 1, 2),
-              |ad AS (SELECT DISTINCT doc_id, domain FROM pdx),
-              |cda AS (SELECT a.doc_id, a.domain,
-              |    coalesce(cd.clean_tok, 0) AS clean_tok
-              |  FROM ad a LEFT JOIN cd USING (doc_id, domain)),
-              |roll AS (SELECT domain, count(*) AS n_docs,
-              |    sum(CASE WHEN clean_tok < 40 THEN 1 ELSE 0 END) AS n_low
-              |  FROM cda GROUP BY 1),
-              |keptd AS (SELECT domain FROM roll
-              |  WHERE CAST(floor(n_low * 10000.0 / n_docs) AS BIGINT) < 4000),
-              |""" + jaccPairCteSql + """,
-              |edges AS (SELECT id_a AS src, id_b AS dst FROM p
-              |  UNION SELECT id_b, id_a FROM p),
-              |reach(id, r) AS (
-              |  SELECT src, src FROM edges
-              |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id),
-              |cc AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
-              |sz AS (SELECT cluster_id, count(*) AS csz FROM cc GROUP BY 1),
-              |w AS (SELECT d.doc_id, coalesce(s.csz, 1) AS csz
-              |  FROM documents d LEFT JOIN
-              |    (SELECT cc.doc_id, sz.csz FROM cc JOIN sz USING (cluster_id)) s
-              |    USING (doc_id)),
-              |kk AS (SELECT cda.doc_id, cda.domain, cda.clean_tok, w.csz
-              |  FROM cda JOIN w USING (doc_id)
-              |  WHERE cda.domain IN (SELECT domain FROM keptd)),
-              |lab AS (SELECT doc_id, domain, clean_tok, csz,
-              |    CASE WHEN ('0x' || substr(md5(domain || ':split'), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-              |         WHEN ('0x' || substr(md5(domain || ':split'), 1, 8))::BIGINT % 100 < 90 THEN 'val'
-              |         ELSE 'test' END AS split
-              |  FROM kk)
-              |SELECT split, count(DISTINCT domain)::BIGINT AS n_domains,
-              |  count(*)::BIGINT AS n_docs,
-              |  sum(CAST(floor(10000.0 / csz) AS BIGINT))::BIGINT AS eff_docs_x10000,
-              |  sum(clean_tok)::BIGINT AS clean_tokens
-              |FROM lab GROUP BY 1""").stripMargin),
-      (s, dir) => {
-        val d = t(s, dir, "documents").withColumn("url", syntheticUrl)
-        val cd = DomainStats.cleanTokenStats(
-          d, "url", "doc_id", "text", minDocs = 3, grain = 8)
-        val keptd = cd.groupBy("domain")
-          .agg(count(lit(1)).as("__n"),
-            sum(when(col("clean_tokens") < 40, 1L).otherwise(0L)).as("__nl"))
-          .filter(floor(col("__nl") * 10000.0 / col("__n")).cast("long") < 4000)
-          .select("domain")
-        val w = Dedup.softDedupWeights(
-            t(s, dir, "documents"), "doc_id", jaccardPairs(s, dir))
-          .select(col("doc_id"), col("weight_x10000"))
-        cd.join(broadcast(keptd), "domain")
-          .join(w, "doc_id")
-          .withColumn("split", TextAnalysis.hashSplit(col("domain")))
-          .groupBy("split")
-          .agg(countDistinct("domain").as("n_domains"),
-            count(lit(1)).as("n_docs"),
-            sum("weight_x10000").as("eff_docs_x10000"),
-            sum("clean_tokens").as("clean_tokens"))
-      }),
+      Some(cleanedReleaseSql(capped = false, byCluster = false, templateCoreSql)),
+      (s, dir) => cleanedRelease(s, dir, capped = false, byCluster = false)(
+        DomainStats.cleanTokenStats(_, "url", "doc_id", "text", minDocs = 3, grain = 8))),
 
     // ---- cross-domain SYNDICATION catalog
     //      (DomainStats.syndicationCatalog): the dedup-side twin of the
@@ -3702,12 +3825,7 @@ object PipelineQueries {
     //      once, only for qualifying hashes. A one-domain template never
     //      appears here — that separation is PipelineSpec-pinned.
     GraftQuery("q318_syndication_catalog",
-      Some((s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-               |c0 AS ($urlCanonSql),
-               |c AS ($urlAssembleSql),
-               |""" + paraCteSqlOf(8) + """,
-               |pdx AS (SELECT p.doc_id, p.para_idx, p.para, p.n_tok, c.domain
-               |  FROM paras p JOIN c USING (doc_id)),
+      Some((s"""WITH $urlParaCteSql,
                |k AS (SELECT *, first_value(domain) OVER (
                |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS fd
                |  FROM pdx),
@@ -3734,12 +3852,7 @@ object PipelineQueries {
     //      chrome there, cross-domain copying here). Qualification is a
     //      ph-keyed agg joined back — no DISTINCT-in-window.
     GraftQuery("q319_domain_syndication",
-      Some((s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-               |c0 AS ($urlCanonSql),
-               |c AS ($urlAssembleSql),
-               |""" + paraCteSqlOf(8) + """,
-               |pdx AS (SELECT p.doc_id, p.para_idx, p.para, p.n_tok, c.domain
-               |  FROM paras p JOIN c USING (doc_id)),
+      Some((s"""WITH $urlParaCteSql,
                |q AS (SELECT md5(para) AS ph FROM pdx
                |  GROUP BY 1 HAVING count(DISTINCT domain) >= 3),
                |k AS (SELECT pdx.*, first_value(domain) OVER (
@@ -3767,28 +3880,18 @@ object PipelineQueries {
     //      naive doc split. Reuses the memoized q54/q87 pair list;
     //      oracle replays the closure + the same md5 split labels.
     GraftQuery("q320_cluster_split",
-      Some(("""WITH RECURSIVE """ + jaccPairCteSql + """,
-             |edges AS (SELECT id_a AS src, id_b AS dst FROM p
-             |  UNION SELECT id_b, id_a FROM p),
-             |reach(id, r) AS (
-             |  SELECT src, src FROM edges
-             |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id),
-             |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+      Some(s"""WITH RECURSIVE $jaccPairCteSql,
+             |${ccCteSqlOf("p")},
              |eff AS (SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cl,
-             |    len(string_split_regex(trim(d.text), '\s+')) AS ntok
+             |    len(string_split_regex(trim(d.text), '\\s+')) AS ntok
              |  FROM documents d LEFT JOIN cc ON cc.id = d.doc_id),
-             |lab AS (SELECT cl, ntok,
-             |    CASE WHEN ('0x' || substr(md5(cl::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-             |         WHEN ('0x' || substr(md5(cl::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 90 THEN 'val'
-             |         ELSE 'test' END AS split,
-             |    CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-             |         WHEN ('0x' || substr(md5(doc_id::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 90 THEN 'val'
-             |         ELSE 'test' END AS doc_split
+             |lab AS (SELECT cl, ntok, ${splitCaseSql("cl::VARCHAR")} AS split,
+             |    ${splitCaseSql("doc_id::VARCHAR")} AS doc_split
              |  FROM eff)
              |SELECT split, count(DISTINCT cl)::BIGINT AS n_clusters,
              |  count(*)::BIGINT AS n_docs, sum(ntok)::BIGINT AS total_tokens,
              |  sum(CASE WHEN doc_split <> split THEN 1 ELSE 0 END)::BIGINT AS n_docs_naive_other
-             |FROM lab GROUP BY 1""").stripMargin),
+             |FROM lab GROUP BY 1""".stripMargin),
       (s, dir) => Dedup.clusterSplit(
         t(s, dir, "documents"), "doc_id", jaccardPairs(s, dir), "text")),
 
@@ -3800,9 +3903,7 @@ object PipelineQueries {
     //      keep-first nor the template family's drop-all). Non-recursive
     //      oracle -> sf1-gateable like q318/q319.
     GraftQuery("q321_syndication_strip",
-      Some((s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-               |c0 AS ($urlCanonSql),
-               |c AS ($urlAssembleSql),
+      Some((s"""WITH $urlCteSql,
                |""" + paraCteSqlOf(8) + """,
                |pdx AS (SELECT p.doc_id, p.para_idx, p.para, c.domain
                |  FROM paras p JOIN c USING (doc_id)),
@@ -3823,95 +3924,14 @@ object PipelineQueries {
         t(s, dir, "documents").withColumn("url", syntheticUrl),
         "url", "doc_id", "text", minDomains = 3, grain = 8)),
 
-    // ---- release pipeline v3: q317's cleaned-stats chain under the
-    //      q320 CLUSTER-level split — the leak-free release artifact:
-    //      canonicalize → template strip → paragraph dedup → domain
-    //      keep/drop on cleaned stats → soft-dedup weights → cluster
-    //      split (no near-dup pair can straddle an eval boundary, the
-    //      property neither q300's domain split nor a doc split gives).
-    //      Per split: cluster/doc masses, effective (soft-dedup-weighted)
-    //      docs, clean token mass.
+    // ---- release pipeline v3: q317 under the q320 CLUSTER split, the
+    //      leak-free release artifact: no near-dup pair can straddle an
+    //      eval boundary, which neither q300's domain split nor a doc
+    //      split gives.
     GraftQuery("q322_release_pipeline_v3",
-      Some(("""WITH RECURSIVE u AS (SELECT doc_id, """ + urlBuildSql + """ AS url FROM documents),
-              |c0 AS (""" + urlCanonSql + """),
-              |c AS (""" + urlAssembleSql + """),
-              |""" + paraCteSqlOf(8) + """,
-              |pdx AS (SELECT p.doc_id, p.para_idx, p.para, p.n_tok, c.domain
-              |  FROM paras p JOIN c USING (doc_id)),
-              |tm AS (SELECT domain, md5(para) AS ph FROM pdx
-              |  GROUP BY 1, 2 HAVING count(DISTINCT doc_id) >= 3),
-              |np AS (SELECT pdx.* FROM pdx LEFT JOIN tm
-              |  ON tm.domain = pdx.domain AND tm.ph = md5(pdx.para)
-              |  WHERE tm.ph IS NULL),
-              |k AS (SELECT *, row_number() OVER (
-              |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS rk FROM np),
-              |cd AS (SELECT doc_id, domain,
-              |    sum(CASE WHEN rk = 1 THEN n_tok ELSE 0 END) AS clean_tok
-              |  FROM k GROUP BY 1, 2),
-              |ad AS (SELECT DISTINCT doc_id, domain FROM pdx),
-              |cda AS (SELECT a.doc_id, a.domain,
-              |    coalesce(cd.clean_tok, 0) AS clean_tok
-              |  FROM ad a LEFT JOIN cd USING (doc_id, domain)),
-              |roll AS (SELECT domain, count(*) AS n_docs,
-              |    sum(CASE WHEN clean_tok < 40 THEN 1 ELSE 0 END) AS n_low
-              |  FROM cda GROUP BY 1),
-              |keptd AS (SELECT domain FROM roll
-              |  WHERE CAST(floor(n_low * 10000.0 / n_docs) AS BIGINT) < 4000),
-              |""" + jaccPairCteSql + """,
-              |edges AS (SELECT id_a AS src, id_b AS dst FROM p
-              |  UNION SELECT id_b, id_a FROM p),
-              |reach(id, r) AS (
-              |  SELECT src, src FROM edges
-              |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id),
-              |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-              |sz AS (SELECT cluster_id, count(*) AS csz FROM cc GROUP BY 1),
-              |w AS (SELECT d.doc_id, coalesce(s.csz, 1) AS csz
-              |  FROM documents d LEFT JOIN
-              |    (SELECT cc.id AS doc_id, sz.csz FROM cc JOIN sz USING (cluster_id)) s
-              |    USING (doc_id)),
-              |kk AS (SELECT cda.doc_id, cda.domain, cda.clean_tok, w.csz,
-              |    coalesce(cc.cluster_id, cda.doc_id) AS cl
-              |  FROM cda JOIN w USING (doc_id)
-              |  LEFT JOIN cc ON cc.id = cda.doc_id
-              |  WHERE cda.domain IN (SELECT domain FROM keptd)),
-              |lab AS (SELECT doc_id, cl, clean_tok, csz,
-              |    CASE WHEN ('0x' || substr(md5(cl::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-              |         WHEN ('0x' || substr(md5(cl::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 90 THEN 'val'
-              |         ELSE 'test' END AS split
-              |  FROM kk)
-              |SELECT split, count(DISTINCT cl)::BIGINT AS n_clusters,
-              |  count(*)::BIGINT AS n_docs,
-              |  sum(CAST(floor(10000.0 / csz) AS BIGINT))::BIGINT AS eff_docs_x10000,
-              |  sum(clean_tok)::BIGINT AS clean_tokens
-              |FROM lab GROUP BY 1""").stripMargin),
-      (s, dir) => {
-        val d = t(s, dir, "documents").withColumn("url", syntheticUrl)
-        val cd = DomainStats.cleanTokenStats(
-          d, "url", "doc_id", "text", minDocs = 3, grain = 8)
-        val keptd = cd.groupBy("domain")
-          .agg(count(lit(1)).as("__n"),
-            sum(when(col("clean_tokens") < 40, 1L).otherwise(0L)).as("__nl"))
-          .filter(floor(col("__nl") * 10000.0 / col("__n")).cast("long") < 4000)
-          .select("domain")
-        // ONE CC execution feeds both the weights and the split labels
-        // (the loop is eager — a second softDedupWeights-internal call
-        // would run the full iterative join loop again)
-        val cc = Dedup.connectedComponents(jaccardPairs(s, dir))
-          .withColumnRenamed("id", "doc_id")
-        val w = Dedup.softDedupWeightsFromCC(
-            t(s, dir, "documents"), "doc_id", cc)
-          .select(col("doc_id"), col("weight_x10000"))
-        cd.join(broadcast(keptd), "domain")
-          .join(w, "doc_id")
-          .join(cc, Seq("doc_id"), "left")
-          .withColumn("__cl", coalesce(col("cluster_id"), col("doc_id")))
-          .withColumn("split", TextAnalysis.hashSplit(col("__cl")))
-          .groupBy("split")
-          .agg(countDistinct("__cl").as("n_clusters"),
-            count(lit(1)).as("n_docs"),
-            sum("weight_x10000").as("eff_docs_x10000"),
-            sum("clean_tokens").as("clean_tokens"))
-      }),
+      Some(cleanedReleaseSql(capped = false, byCluster = true, templateCoreSql)),
+      (s, dir) => cleanedRelease(s, dir, capped = false, byCluster = true)(
+        DomainStats.cleanTokenStats(_, "url", "doc_id", "text", minDocs = 3, grain = 8))),
 
     // ---- syndication-weighted domain cap (UrlCanon.capDedupedBy): the
     //      q295 anti-domination cap with a PER-DOMAIN budget derived from
@@ -3920,35 +3940,12 @@ object PipelineQueries {
     //      bp, -2 at >= 1000 bp, floor 1) than one that originates.
     //      Caps frame is broadcast; one domain-keyed rank window.
     GraftQuery("q323_syndication_weighted_cap",
-      Some((s"""WITH u AS (SELECT doc_id, $urlBuildSql AS url FROM documents),
-               |c0 AS ($urlCanonSql),
-               |c AS ($urlAssembleSql),
-               |""" + paraCteSqlOf(8) + """,
-               |pdx AS (SELECT p.doc_id, p.para_idx, p.para, p.n_tok, c.domain
-               |  FROM paras p JOIN c USING (doc_id)),
-               |q AS (SELECT md5(para) AS ph FROM pdx
-               |  GROUP BY 1 HAVING count(DISTINCT domain) >= 3),
-               |kq AS (SELECT pdx.*, first_value(domain) OVER (
-               |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS fd,
-               |    (md5(para) IN (SELECT ph FROM q)) AS isq
-               |  FROM pdx),
-               |sy AS (SELECT domain,
-               |    CAST(floor(sum(CASE WHEN isq AND fd <> domain THEN n_tok
-               |      ELSE 0 END) * 10000.0 / sum(n_tok)) AS BIGINT) AS synd_in_bp
-               |  FROM kq GROUP BY 1),
-               |caps AS (SELECT domain, greatest(1, 3 -
-               |    CASE WHEN synd_in_bp >= 1000 THEN 2
-               |         WHEN synd_in_bp >= 700 THEN 1 ELSE 0 END) AS cap
-               |  FROM sy),
-               |d AS (SELECT canonical, domain, min(doc_id) AS keeper_id
-               |  FROM c GROUP BY 1, 2),
-               |kc AS (SELECT domain, keeper_id, row_number() OVER (
-               |    PARTITION BY domain ORDER BY keeper_id) AS rk FROM d)
-               |SELECT kc.domain, caps.cap::BIGINT AS cap,
-               |  count(*)::BIGINT AS n_unique,
-               |  sum(CASE WHEN kc.rk <= caps.cap THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-               |  sum(CASE WHEN kc.rk <= caps.cap THEN keeper_id ELSE 0 END)::BIGINT AS kept_id_sum
-               |FROM kc JOIN caps USING (domain) GROUP BY 1, 2""").stripMargin),
+      Some("WITH " + urlParaCteSql + ",\n" + capCteSqlOf(3, 1, 1) + """
+             |SELECT kc.domain, caps.cap::BIGINT AS cap,
+             |  count(*)::BIGINT AS n_unique,
+             |  sum(CASE WHEN kc.rk <= caps.cap THEN 1 ELSE 0 END)::BIGINT AS n_kept,
+             |  sum(CASE WHEN kc.rk <= caps.cap THEN keeper_id ELSE 0 END)::BIGINT AS kept_id_sum
+             |FROM kc JOIN caps USING (domain) GROUP BY 1, 2""".stripMargin),
       (s, dir) => {
         val withUrl = t(s, dir, "documents").withColumn("url", syntheticUrl)
         // caps feeds the rank-window join AND the final report: pin the
@@ -3972,155 +3969,25 @@ object PipelineQueries {
             col("cap").cast("long").as("cap")), "domain")
       }),
 
-    // ---- release pipeline v4: ALL THREE excision rules composed under
-    //      the cluster split — canonicalize → syndication-weighted
-    //      per-domain caps (q323's rule at release budgets: base 30,
-    //      -10 at >= 700 bp copied-in, -20 at >= 1000 bp, floor 5 —
-    //      computed over the FULL population; q323's base-3 budget is
-    //      the cap-binding TEST point, not a release size)
-    //      → within-domain template strip (drop-all) → cross-domain
+    // ---- release pipeline v4: q322 over the syndication-weighted capped
+    //      population (q323's rule at release budgets: base 30, -10 at
+    //      >= 700 bp copied-in, -20 at >= 1000 bp, floor 5, computed over
+    //      the FULL population; q323's base-3 budget is the cap-binding
+    //      TEST point, not a release size), with the cross-domain
     //      syndication strip (keep-origin, stats over the CAPPED
-    //      population) → keep-first paragraph dedup over survivors →
-    //      domain keep/drop on cleaned stats → soft-dedup weights →
-    //      cluster-level leak-free split. Precedence is pinned in
-    //      DomainStats.cleanTokenStatsV2 (template outranks syndication;
-    //      keep-origin does not shield within-domain repetition; the
-    //      keep-first slot is consumed by strip survivors only) and in
-    //      PipelineSpec. Near-dup pairs/weights/clusters are restricted
-    //      to the capped population by semi-joining the pairwise-exact
-    //      pair list on both endpoints — identical to regenerating the
-    //      pairs over the capped corpus, without a second generator run.
+    //      population) added to the cleaning core. Precedence is pinned
+    //      in DomainStats.cleanTokenStatsV2 (template outranks
+    //      syndication; keep-origin does not shield within-domain
+    //      repetition; the keep-first slot is consumed by strip survivors
+    //      only) and in PipelineSpec.
     GraftQuery("q324_release_pipeline_v4",
-      Some(("""WITH RECURSIVE u AS (SELECT doc_id, """ + urlBuildSql + """ AS url FROM documents),
-              |c0 AS (""" + urlCanonSql + """),
-              |c AS (""" + urlAssembleSql + """),
-              |""" + paraCteSqlOf(8) + """,
-              |pdx AS (SELECT p.doc_id, p.para_idx, p.para, p.n_tok, c.domain
-              |  FROM paras p JOIN c USING (doc_id)),
-              |q1 AS (SELECT md5(para) AS ph FROM pdx
-              |  GROUP BY 1 HAVING count(DISTINCT domain) >= 3),
-              |kq AS (SELECT pdx.*, first_value(domain) OVER (
-              |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS fd,
-              |    (md5(para) IN (SELECT ph FROM q1)) AS isq
-              |  FROM pdx),
-              |sy AS (SELECT domain,
-              |    CAST(floor(sum(CASE WHEN isq AND fd <> domain THEN n_tok
-              |      ELSE 0 END) * 10000.0 / sum(n_tok)) AS BIGINT) AS synd_in_bp
-              |  FROM kq GROUP BY 1),
-              |caps AS (SELECT domain, greatest(5, 30 -
-              |    CASE WHEN synd_in_bp >= 1000 THEN 20
-              |         WHEN synd_in_bp >= 700 THEN 10 ELSE 0 END) AS cap
-              |  FROM sy),
-              |d AS (SELECT canonical, domain, min(doc_id) AS keeper_id
-              |  FROM c GROUP BY 1, 2),
-              |kc AS (SELECT domain, keeper_id, row_number() OVER (
-              |    PARTITION BY domain ORDER BY keeper_id) AS rk FROM d),
-              |kept AS (SELECT keeper_id AS doc_id FROM kc
-              |  JOIN caps USING (domain) WHERE rk <= cap),
-              |px AS (SELECT pdx.* FROM pdx JOIN kept USING (doc_id)),
-              |tm AS (SELECT domain, md5(para) AS ph FROM px
-              |  GROUP BY 1, 2 HAVING count(DISTINCT doc_id) >= 3),
-              |q2 AS (SELECT md5(para) AS ph FROM px
-              |  GROUP BY 1 HAVING count(DISTINCT domain) >= 3),
-              |fx AS (SELECT px.*, first_value(domain) OVER (
-              |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS fd
-              |  FROM px),
-              |mk AS (SELECT fx.*, CASE WHEN tm.ph IS NOT NULL THEN 0
-              |    WHEN md5(fx.para) IN (SELECT ph FROM q2)
-              |      AND fx.fd <> fx.domain THEN -1
-              |    ELSE 1 END AS cls
-              |  FROM fx LEFT JOIN tm
-              |    ON tm.domain = fx.domain AND tm.ph = md5(fx.para)),
-              |k AS (SELECT *, row_number() OVER (
-              |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS rk
-              |  FROM mk WHERE cls = 1),
-              |cd AS (SELECT doc_id, domain,
-              |    sum(CASE WHEN rk = 1 THEN n_tok ELSE 0 END) AS clean_tok
-              |  FROM k GROUP BY 1, 2),
-              |sd AS (SELECT doc_id,
-              |    sum(CASE WHEN cls = -1 THEN 1 ELSE 0 END) AS n_synd
-              |  FROM mk GROUP BY 1),
-              |ad AS (SELECT DISTINCT doc_id, domain FROM px),
-              |cda AS (SELECT a.doc_id, a.domain,
-              |    coalesce(cd.clean_tok, 0) AS clean_tok
-              |  FROM ad a LEFT JOIN cd USING (doc_id, domain)),
-              |roll AS (SELECT domain, count(*) AS n_docs,
-              |    sum(CASE WHEN clean_tok < 40 THEN 1 ELSE 0 END) AS n_low
-              |  FROM cda GROUP BY 1),
-              |keptd AS (SELECT domain FROM roll
-              |  WHERE CAST(floor(n_low * 10000.0 / n_docs) AS BIGINT) < 4000),
-              |""" + jaccPairCteSql + """,
-              |pk AS (SELECT id_a, id_b FROM p
-              |  JOIN kept ka ON ka.doc_id = p.id_a
-              |  JOIN kept kb ON kb.doc_id = p.id_b),
-              |edges AS (SELECT id_a AS src, id_b AS dst FROM pk
-              |  UNION SELECT id_b, id_a FROM pk),
-              |reach(id, r) AS (
-              |  SELECT src, src FROM edges
-              |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id),
-              |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-              |sz AS (SELECT cluster_id, count(*) AS csz FROM cc GROUP BY 1),
-              |w AS (SELECT kt.doc_id, coalesce(s.csz, 1) AS csz
-              |  FROM kept kt LEFT JOIN
-              |    (SELECT cc.id AS doc_id, sz.csz FROM cc JOIN sz USING (cluster_id)) s
-              |    USING (doc_id)),
-              |kk AS (SELECT cda.doc_id, cda.domain, cda.clean_tok, w.csz,
-              |    coalesce(cc.cluster_id, cda.doc_id) AS cl,
-              |    coalesce(sd.n_synd, 0) AS n_synd
-              |  FROM cda JOIN w USING (doc_id)
-              |  LEFT JOIN cc ON cc.id = cda.doc_id
-              |  LEFT JOIN sd USING (doc_id)
-              |  WHERE cda.domain IN (SELECT domain FROM keptd)),
-              |lab AS (SELECT doc_id, cl, clean_tok, csz, n_synd,
-              |    CASE WHEN ('0x' || substr(md5(cl::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-              |         WHEN ('0x' || substr(md5(cl::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 90 THEN 'val'
-              |         ELSE 'test' END AS split
-              |  FROM kk)
-              |SELECT split, count(DISTINCT cl)::BIGINT AS n_clusters,
-              |  count(*)::BIGINT AS n_docs,
-              |  sum(CAST(floor(10000.0 / csz) AS BIGINT))::BIGINT AS eff_docs_x10000,
-              |  sum(clean_tok)::BIGINT AS clean_tokens,
-              |  sum(n_synd)::BIGINT AS synd_dropped
-              |FROM lab GROUP BY 1""").stripMargin),
-      (s, dir) => {
-        val withUrl = t(s, dir, "documents").withColumn("url", syntheticUrl)
-        // stage 1: weighted caps (q323 rule) — budgets from the FULL
-        // population; the keeper set is the memoized relcaps chain
-        // (shared with q328; the parquet read is the multi-consumer pin)
-        val keptIds = relcapsKeptIds(s, dir)
-        val cappedDocs = withUrl.join(keptIds, Seq("doc_id"), "left_semi")
-        // stage 2: template drop-all + syndication keep-origin +
-        // keep-first dedup, stats over the CAPPED population
-        val cd = DomainStats.cleanTokenStatsV2(
-          cappedDocs, "url", "doc_id", "text",
-          minDocs = 3, minDomains = 3, grain = 8)
-        val keptd = cd.groupBy("domain")
-          .agg(count(lit(1)).as("__n"),
-            sum(when(col("clean_tokens") < 40, 1L).otherwise(0L)).as("__nl"))
-          .filter(floor(col("__nl") * 10000.0 / col("__n")).cast("long") < 4000)
-          .select("domain")
-        // stage 3: pairwise-exact near-dup pairs restricted to the capped
-        // population (both endpoints kept) -> weights + cluster split
-        val pairsK = jaccardPairs(s, dir)
-          .join(keptIds.select(col("doc_id").as("id_a")), Seq("id_a"), "left_semi")
-          .join(keptIds.select(col("doc_id").as("id_b")), Seq("id_b"), "left_semi")
-        // ONE CC execution feeds both the weights and the split labels
-        val cc = Dedup.connectedComponents(pairsK)
-          .withColumnRenamed("id", "doc_id")
-        val w = Dedup.softDedupWeightsFromCC(keptIds, "doc_id", cc)
-          .select(col("doc_id"), col("weight_x10000"))
-        cd.join(broadcast(keptd), "domain")
-          .join(w, "doc_id")
-          .join(cc, Seq("doc_id"), "left")
-          .withColumn("__cl", coalesce(col("cluster_id"), col("doc_id")))
-          .withColumn("split", TextAnalysis.hashSplit(col("__cl")))
-          .groupBy("split")
-          .agg(countDistinct("__cl").as("n_clusters"),
-            count(lit(1)).as("n_docs"),
-            sum("weight_x10000").as("eff_docs_x10000"),
-            sum("clean_tokens").as("clean_tokens"),
-            sum("n_synd_dropped").as("synd_dropped"))
-      }),
+      Some(cleanedReleaseSql(capped = true, byCluster = true,
+        syndCoreSqlOf(fuzzy = false), "\n  LEFT JOIN sd USING (doc_id)",
+        Seq("coalesce(sd.n_synd, 0)" -> "synd_dropped"))),
+      (s, dir) => cleanedRelease(s, dir, capped = true,
+          byCluster = true, "n_synd_dropped" -> "synd_dropped")(
+        DomainStats.cleanTokenStatsV2(_, "url", "doc_id", "text",
+          minDocs = 3, minDomains = 3, grain = 8))),
 
     // ---- FUZZY syndication catalog (DomainStats.fuzzySyndicationCatalog):
     //      press-wire copy that copiers lightly EDIT never shares a hash
@@ -4170,18 +4037,8 @@ object PipelineQueries {
     //      except their first-occurrence domain. Completes the
     //      catalog→strip symmetry (q311→q312, q313→q316, q318→q321).
     GraftQuery("q326_fuzzy_syndication_strip",
-      Some(("WITH RECURSIVE " + fuzzySyndCteSql + """,
-               |gocc AS (SELECT pd.doc_id, pd.domain, pd.para_idx,
-               |    m.ph, m.cluster_id
-               |  FROM pd JOIN gmem m ON m.ph = md5(pd.para)),
-               |gatt AS (SELECT *, first_value(domain) OVER (
-               |    PARTITION BY cluster_id ORDER BY doc_id, para_idx) AS fd
-               |  FROM gocc),
-               |gq AS (SELECT cluster_id FROM gatt GROUP BY 1
-               |  HAVING count(DISTINCT domain) >= 3
-               |     AND count(DISTINCT ph) >= 2),
-               |gdrop AS (SELECT doc_id, para_idx FROM gatt
-               |  JOIN gq USING (cluster_id) WHERE fd <> domain)
+      Some(("WITH RECURSIVE " + fuzzySyndCteSql + ",\n" +
+        fuzzyDropCteSqlOf("pd") + """
                |SELECT pd.doc_id,
                |  coalesce(string_agg(CASE WHEN gd.para_idx IS NULL
                |    THEN pd.para END, ' ' ORDER BY pd.para_idx), '') AS clean_text,
@@ -4255,172 +4112,29 @@ object PipelineQueries {
           index, batch, "url", "doc_id", "text", minDomains = 3, grain = 8)
       }),
 
-    // ---- release pipeline v5: ALL FOUR excision rules composed under
-    //      the cluster split — q324's chain with the FUZZY syndication
-    //      layer (q326's keep-origin rule over qualifying GLOBAL
-    //      near-dup clusters) folded in between the template strip and
-    //      the exact syndication strip. Precedence is pinned in
-    //      DomainStats.cleanTokenCore (template > fuzzy-synd >
-    //      exact-synd > keep-first; the >= 2-variant floor keeps the
-    //      1-variant byte-identical case with the exact rule, so
-    //      neither subsumes the other) and exercised in PipelineSpec.
-    //      The fuzzy layer runs at the exact family's grain — composing
-    //      at paragraph-row grain requires ONE chunking — with the
-    //      FuzzyOp minhash operating point; clustering/qualification/
-    //      attribution are computed over the CAPPED population like the
-    //      exact syndication stats.
+    // ---- release pipeline v5: q324 with the FUZZY syndication layer
+    //      (q326's keep-origin rule over qualifying GLOBAL near-dup
+    //      clusters) between the template strip and the exact syndication
+    //      strip. Precedence is pinned in DomainStats.cleanTokenCore
+    //      (template > fuzzy-synd > exact-synd > keep-first; the
+    //      >= 2-variant floor keeps the 1-variant byte-identical case with
+    //      the exact rule, so neither subsumes the other) and exercised in
+    //      PipelineSpec. The fuzzy layer runs at the exact family's grain
+    //      (composing at paragraph-row grain requires ONE chunking) with
+    //      the FuzzyOp operating point, over the CAPPED population.
     GraftQuery("q328_release_pipeline_v5",
-      Some(("""WITH RECURSIVE u AS (SELECT doc_id, """ + urlBuildSql + """ AS url FROM documents),
-              |c0 AS (""" + urlCanonSql + """),
-              |c AS (""" + urlAssembleSql + """),
-              |""" + paraCteSqlOf(8) + """,
-              |pdx AS (SELECT p.doc_id, p.para_idx, p.para, p.n_tok, c.domain
-              |  FROM paras p JOIN c USING (doc_id)),
-              |q1 AS (SELECT md5(para) AS ph FROM pdx
-              |  GROUP BY 1 HAVING count(DISTINCT domain) >= 3),
-              |kq AS (SELECT pdx.*, first_value(domain) OVER (
-              |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS fd,
-              |    (md5(para) IN (SELECT ph FROM q1)) AS isq
-              |  FROM pdx),
-              |sy AS (SELECT domain,
-              |    CAST(floor(sum(CASE WHEN isq AND fd <> domain THEN n_tok
-              |      ELSE 0 END) * 10000.0 / sum(n_tok)) AS BIGINT) AS synd_in_bp
-              |  FROM kq GROUP BY 1),
-              |caps AS (SELECT domain, greatest(5, 30 -
-              |    CASE WHEN synd_in_bp >= 1000 THEN 20
-              |         WHEN synd_in_bp >= 700 THEN 10 ELSE 0 END) AS cap
-              |  FROM sy),
-              |d AS (SELECT canonical, domain, min(doc_id) AS keeper_id
-              |  FROM c GROUP BY 1, 2),
-              |kc AS (SELECT domain, keeper_id, row_number() OVER (
-              |    PARTITION BY domain ORDER BY keeper_id) AS rk FROM d),
-              |kept AS (SELECT keeper_id AS doc_id FROM kc
-              |  JOIN caps USING (domain) WHERE rk <= cap),
-              |px AS (SELECT pdx.* FROM pdx JOIN kept USING (doc_id)),
-              |""" + globalFuzzyCcCteSqlOf("px") + """,
-              |gocc AS (SELECT px.doc_id, px.domain, px.para_idx,
-              |    m.ph, m.cluster_id
-              |  FROM px JOIN gmem m ON m.ph = md5(px.para)),
-              |gatt AS (SELECT *, first_value(domain) OVER (
-              |    PARTITION BY cluster_id ORDER BY doc_id, para_idx) AS cfd
-              |  FROM gocc),
-              |gq AS (SELECT cluster_id FROM gatt GROUP BY 1
-              |  HAVING count(DISTINCT domain) >= 3
-              |     AND count(DISTINCT ph) >= 2),
-              |gdrop AS (SELECT doc_id, para_idx FROM gatt
-              |  JOIN gq USING (cluster_id) WHERE cfd <> domain),
-              |tm AS (SELECT domain, md5(para) AS ph FROM px
-              |  GROUP BY 1, 2 HAVING count(DISTINCT doc_id) >= 3),
-              |q2 AS (SELECT md5(para) AS ph FROM px
-              |  GROUP BY 1 HAVING count(DISTINCT domain) >= 3),
-              |fx AS (SELECT px.*, first_value(domain) OVER (
-              |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS fd
-              |  FROM px),
-              |mk AS (SELECT fx.*, CASE WHEN tm.ph IS NOT NULL THEN 0
-              |    WHEN gd.para_idx IS NOT NULL THEN -2
-              |    WHEN md5(fx.para) IN (SELECT ph FROM q2)
-              |      AND fx.fd <> fx.domain THEN -1
-              |    ELSE 1 END AS cls
-              |  FROM fx LEFT JOIN tm
-              |    ON tm.domain = fx.domain AND tm.ph = md5(fx.para)
-              |  LEFT JOIN gdrop gd
-              |    ON gd.doc_id = fx.doc_id AND gd.para_idx = fx.para_idx),
-              |k AS (SELECT *, row_number() OVER (
-              |    PARTITION BY md5(para) ORDER BY doc_id, para_idx) AS rk
-              |  FROM mk WHERE cls = 1),
-              |cd AS (SELECT doc_id, domain,
-              |    sum(CASE WHEN rk = 1 THEN n_tok ELSE 0 END) AS clean_tok
-              |  FROM k GROUP BY 1, 2),
-              |sd AS (SELECT doc_id,
-              |    sum(CASE WHEN cls = -1 THEN 1 ELSE 0 END) AS n_synd,
-              |    sum(CASE WHEN cls = -2 THEN 1 ELSE 0 END) AS n_fz
-              |  FROM mk GROUP BY 1),
-              |ad AS (SELECT DISTINCT doc_id, domain FROM px),
-              |cda AS (SELECT a.doc_id, a.domain,
-              |    coalesce(cd.clean_tok, 0) AS clean_tok
-              |  FROM ad a LEFT JOIN cd USING (doc_id, domain)),
-              |roll AS (SELECT domain, count(*) AS n_docs,
-              |    sum(CASE WHEN clean_tok < 40 THEN 1 ELSE 0 END) AS n_low
-              |  FROM cda GROUP BY 1),
-              |keptd AS (SELECT domain FROM roll
-              |  WHERE CAST(floor(n_low * 10000.0 / n_docs) AS BIGINT) < 4000),
-              |""" + jaccPairCteSql + """,
-              |pk AS (SELECT id_a, id_b FROM p
-              |  JOIN kept ka ON ka.doc_id = p.id_a
-              |  JOIN kept kb ON kb.doc_id = p.id_b),
-              |edges AS (SELECT id_a AS src, id_b AS dst FROM pk
-              |  UNION SELECT id_b, id_a FROM pk),
-              |reach(id, r) AS (
-              |  SELECT src, src FROM edges
-              |  UNION SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id),
-              |cc AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-              |sz AS (SELECT cluster_id, count(*) AS csz FROM cc GROUP BY 1),
-              |w AS (SELECT kt.doc_id, coalesce(s.csz, 1) AS csz
-              |  FROM kept kt LEFT JOIN
-              |    (SELECT cc.id AS doc_id, sz.csz FROM cc JOIN sz USING (cluster_id)) s
-              |    USING (doc_id)),
-              |kk AS (SELECT cda.doc_id, cda.domain, cda.clean_tok, w.csz,
-              |    coalesce(cc.cluster_id, cda.doc_id) AS cl,
-              |    coalesce(sd.n_synd, 0) AS n_synd,
-              |    coalesce(sd.n_fz, 0) AS n_fz
-              |  FROM cda JOIN w USING (doc_id)
-              |  LEFT JOIN cc ON cc.id = cda.doc_id
-              |  LEFT JOIN sd USING (doc_id)
-              |  WHERE cda.domain IN (SELECT domain FROM keptd)),
-              |lab AS (SELECT doc_id, cl, clean_tok, csz, n_synd, n_fz,
-              |    CASE WHEN ('0x' || substr(md5(cl::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-              |         WHEN ('0x' || substr(md5(cl::VARCHAR || ':split'), 1, 8))::BIGINT % 100 < 90 THEN 'val'
-              |         ELSE 'test' END AS split
-              |  FROM kk)
-              |SELECT split, count(DISTINCT cl)::BIGINT AS n_clusters,
-              |  count(*)::BIGINT AS n_docs,
-              |  sum(CAST(floor(10000.0 / csz) AS BIGINT))::BIGINT AS eff_docs_x10000,
-              |  sum(clean_tok)::BIGINT AS clean_tokens,
-              |  sum(n_synd)::BIGINT AS synd_dropped,
-              |  sum(n_fz)::BIGINT AS fuzzy_dropped
-              |FROM lab GROUP BY 1""").stripMargin),
-      (s, dir) => {
-        val withUrl = t(s, dir, "documents").withColumn("url", syntheticUrl)
-        // stage 1 (v4's): weighted caps from the FULL population — the
-        // memoized relcaps chain shared with q324
-        val keptIds = relcapsKeptIds(s, dir)
-        val cappedDocs = withUrl.join(keptIds, Seq("doc_id"), "left_semi")
-        // stage 2: template drop-all + fuzzy keep-origin + exact
-        // keep-origin + keep-first dedup, stats over the CAPPED
-        // population at ONE grain
-        val cd = DomainStats.cleanTokenStatsV3(
-          cappedDocs, "url", "doc_id", "text",
+      Some(cleanedReleaseSql(capped = true, byCluster = true,
+        syndCoreSqlOf(fuzzy = true), "\n  LEFT JOIN sd USING (doc_id)",
+        Seq("coalesce(sd.n_synd, 0)" -> "synd_dropped",
+          "coalesce(sd.n_fz, 0)" -> "fuzzy_dropped"))),
+      (s, dir) => cleanedRelease(s, dir, capped = true,
+          byCluster = true, "n_synd_dropped" -> "synd_dropped",
+          "n_fuzzy_dropped" -> "fuzzy_dropped")(
+        DomainStats.cleanTokenStatsV3(_, "url", "doc_id", "text",
           minDocs = 3, minDomains = 3, grain = 8,
           shingleK = FuzzyOp.shingleK, numHashes = FuzzyOp.numHashes,
           bands = FuzzyOp.bands, jacNum = FuzzyOp.jacNum,
-          jacDen = FuzzyOp.jacDen)
-        val keptd = cd.groupBy("domain")
-          .agg(count(lit(1)).as("__n"),
-            sum(when(col("clean_tokens") < 40, 1L).otherwise(0L)).as("__nl"))
-          .filter(floor(col("__nl") * 10000.0 / col("__n")).cast("long") < 4000)
-          .select("domain")
-        // stage 3 (v4's): capped-population pairs -> ONE CC -> weights +
-        // leak-free cluster split
-        val pairsK = jaccardPairs(s, dir)
-          .join(keptIds.select(col("doc_id").as("id_a")), Seq("id_a"), "left_semi")
-          .join(keptIds.select(col("doc_id").as("id_b")), Seq("id_b"), "left_semi")
-        val cc = Dedup.connectedComponents(pairsK)
-          .withColumnRenamed("id", "doc_id")
-        val w = Dedup.softDedupWeightsFromCC(keptIds, "doc_id", cc)
-          .select(col("doc_id"), col("weight_x10000"))
-        cd.join(broadcast(keptd), "domain")
-          .join(w, "doc_id")
-          .join(cc, Seq("doc_id"), "left")
-          .withColumn("__cl", coalesce(col("cluster_id"), col("doc_id")))
-          .withColumn("split", TextAnalysis.hashSplit(col("__cl")))
-          .groupBy("split")
-          .agg(countDistinct("__cl").as("n_clusters"),
-            count(lit(1)).as("n_docs"),
-            sum("weight_x10000").as("eff_docs_x10000"),
-            sum("clean_tokens").as("clean_tokens"),
-            sum("n_synd_dropped").as("synd_dropped"),
-            sum("n_fuzzy_dropped").as("fuzzy_dropped"))
-      }),
+          jacDen = FuzzyOp.jacDen))),
 
     // ---- margin-based bitext mining (Similarity.bitextMine; Artetxe &
     //      Schwenk 2019, the LASER/CCMatrix criterion): align two

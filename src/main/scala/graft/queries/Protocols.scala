@@ -568,8 +568,9 @@ object Protocols {
     //      season) over the hourly-max grid — in-sample one-step fits plus
     //      3 forecast buckets past each series' last point. The oracle
     //      carries ALL THREE recurrence states (level, trend, seasonal
-    //      LIST) in ONE recursive CTE (the NEXT.md recursion-over-
-    //      recursion gotcha) with the exact expression shapes of
+    //      LIST) in ONE recursive CTE (a recursive CTE per state that
+    //      re-reads another recursive CTE runs in quadratic time in
+    //      DuckDB) with the exact expression shapes of
     //      TaStream.HoltWinters, so values are bit-identical; presented as
     //      integer ×10⁴ (q145 convention).
     GraftQuery("q156_influx_holt_winters",

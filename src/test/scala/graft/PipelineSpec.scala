@@ -3233,4 +3233,44 @@ class PipelineSpec extends SparkSpec {
     assert(PipelineQueries.memoBuildMark == m2,
       "warm memo read must not log a build")
   }
+
+  test("curation/release pipelines: per-split rows and memo builds are pinned") {
+    import graft.queries.PipelineQueries
+    // start from an empty memo log so every build below is this test's
+    PipelineQueries.invalidateMemoBuilds(0, PipelineQueries.memoBuildMark)
+    def run(name: String): (Seq[Seq[Any]], Int) = {
+      val m0 = PipelineQueries.memoBuildMark
+      val rows = SparkEntry.queries(name)(spark, dir).collect()
+        .map(_.toSeq).toSeq.sortBy(_.head.toString)
+      (rows, PipelineQueries.memoBuildMark - m0)
+    }
+    // (split, n_domains | n_clusters, n_docs, eff_docs_x10000,
+    //  total_tokens | clean_tokens[, synd_dropped[, fuzzy_dropped]])
+    val want = Seq(
+      "q307_curation_pipeline" -> Seq(
+        Seq("test", 3L, 75L, 277323L, 3977L),
+        Seq("train", 13L, 325L, 1034695L, 18949L)),
+      "q317_curation_pipeline_v2" -> Seq(
+        Seq("test", 1L, 25L, 87716L, 1248L),
+        Seq("train", 9L, 225L, 640092L, 11988L)),
+      "q322_release_pipeline_v3" -> Seq(
+        Seq("test", 4L, 5L, 40000L, 89L),
+        Seq("train", 60L, 232L, 557808L, 12885L),
+        Seq("val", 13L, 13L, 130000L, 262L)),
+      "q324_release_pipeline_v4" -> Seq(
+        Seq("test", 4L, 4L, 40000L, 113L, 1L),
+        Seq("train", 46L, 155L, 440785L, 8887L, 199L),
+        Seq("val", 5L, 5L, 50000L, 107L, 5L)),
+      "q328_release_pipeline_v5" -> Seq(
+        Seq("test", 4L, 4L, 40000L, 113L, 1L, 0L),
+        Seq("train", 46L, 155L, 440785L, 8820L, 184L, 32L),
+        Seq("val", 5L, 5L, 50000L, 107L, 5L, 0L)))
+    val got = want.map { case (name, _) => name -> run(name) }
+    want.zip(got).foreach { case ((name, rows), (_, (gotRows, _))) =>
+      assert(gotRows == rows, s"$name: $gotRows")
+    }
+    // q307 builds the near-dup pair memo and q324 the relcaps keeper set;
+    // the others (q328 included) read them warm
+    assert(got.map(_._2._2) == Seq(1, 0, 0, 1, 0), got.map(_._2._2).toString)
+  }
 }
